@@ -223,15 +223,18 @@ def replay_full_ensemble(
     skyline_app: str = "crucible",
     algorithms: list[str] | None = None,
 ) -> DataFrame:
-    from functools import partial
-
     from ..operators.ensemble import resolve_algorithm_set
 
     algos = resolve_algorithm_set(skyline_app, algorithms)
     ev = load(spark, sf_dir, "events").select("event_type", "ts", "event_id", "value")
-    return ev.groupBy("event_type").applyInPandas(
-        partial(_replay_group, algos=algos), _REPLAY_SCHEMA
-    )
+
+    # a named one-argument function, not functools.partial: PySpark
+    # inspects the UDF's signature and warns it cannot infer the eval type
+    # of a partial
+    def replay_group(pdf):
+        return _replay_group(pdf, algos=algos)
+
+    return ev.groupBy("event_type").applyInPandas(replay_group, _REPLAY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

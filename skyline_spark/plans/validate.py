@@ -108,6 +108,15 @@ DEFAULT_STATIC_RULES = (
 
 @dataclass
 class ValidationResult:
+    """One run's lazy outputs plus the storage that backs them.
+
+    Every frame here is independent of later lineage writes: the input
+    checkpoint is read once behind a barrier, so no frame's plan reads the
+    checkpoint location. Appending ``checkpoint`` (or run metrics, or
+    overwriting verdicts/violations) in any order leaves ``verdicts``,
+    ``violations`` and ``run_metrics`` describing this run's targets, and
+    re-runs none of the validation."""
+
     verdicts: DataFrame
     violations: DataFrame
     checkpoint: DataFrame
@@ -122,8 +131,9 @@ class ValidationResult:
     run_id: str = ""
     config: ValidationConfig = field(default_factory=ValidationConfig)
     # storage-backed state created by this run: cached DataFrames plus the
-    # RDD ids of the localCheckpoint barriers (slim/stats/samples), or the
-    # scratch-table directory when the run materialized to storage instead.
+    # RDD ids of the localCheckpoint barriers (checkpoint read, slim, stats,
+    # samples), or the scratch-table directory when the run materialized to
+    # storage instead.
     # localCheckpoint blocks are NOT released by DataFrame.unpersist() — they
     # live until the driver GCs the RDD handle, so a long-lived session
     # running validate() repeatedly (a resident validation service, the
@@ -172,9 +182,9 @@ def validate(
     the ensemble and which kernels vote (the reference's algorithm-set
     selection). Defaults run the full registry over DRIFT_STATS.
 
-    ``scratch_dir``: materialize the three pipeline barriers (slim / stats /
-    samples) as parquet scratch tables under ``scratch_dir/<run token>/``
-    instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
+    ``scratch_dir``: materialize the pipeline barriers (the checkpoint
+    read, slim / stats / samples) as parquet scratch tables under
+    ``scratch_dir/<run token>/`` instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
     wants: localCheckpoint truncates lineage into executor-LOCAL blocks, so
     losing any executor mid-run is unrecoverable (Spark cannot recompute a
     checkpointed partition whose block died with its host) — a scratch table
@@ -316,8 +326,14 @@ def _validate_body(
     spark, schema_viol, _barrier, scratch_run_dir,
 ) -> ValidationResult:
     vhash = detector_version_hash()
+    # the checkpoint is read ONCE, behind the same barrier as slim/stats/
+    # samples: no frame this run caches or returns keeps the checkpoint
+    # relation in its plan, so the caller's own append_checkpoint (parquet
+    # append or Iceberg writeTo) can neither invalidate those caches — Spark
+    # re-caches every plan reading a written path — nor make a re-run of
+    # them see this run's rows and anti-join its own targets away
     ckpt = (
-        load_checkpoint(spark, checkpoint_path)
+        _barrier(load_checkpoint(spark, checkpoint_path), "checkpoint_in")
         if checkpoint_path is not None
         else None
     )
@@ -427,16 +443,21 @@ def _validate_body(
         )
         stats = _f_stats.result()
         samples = _f_samples.result()
-    # the three barriers above are the only localCheckpoints in the run —
-    # record THEIR OWN RDD ids (off each frame's LogicalRDD plan node) so
-    # release() can drop exactly these blocks. A global storage-info
-    # before/after diff would race with concurrent validate() runs or
-    # caller-side caching on the same session and free someone else's
-    # lineage-truncated blocks — unrecoverable for the victim run.
+    # these three barriers and the checkpoint read are the only
+    # localCheckpoints in the run — record THEIR OWN RDD ids (off each
+    # frame's LogicalRDD plan node) so release() can drop exactly these
+    # blocks. A global storage-info before/after diff would race with
+    # concurrent validate() runs or caller-side caching on the same session
+    # and free someone else's lineage-truncated blocks — unrecoverable for
+    # the victim run.
     _ckpt_rdd_ids = (
         []
         if scratch_run_dir is not None
-        else [_local_ckpt_rdd_id(df) for df in (slim, stats, samples)]
+        else [
+            _local_ckpt_rdd_id(df)
+            for df in (ckpt, slim, stats, samples)
+            if df is not None
+        ]
     )
 
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------

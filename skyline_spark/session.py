@@ -14,13 +14,35 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
 
+#: heap cap: the measured sweet spot at 32 local threads (see get_spark)
+_MAX_HEAP_MB = 16 * 1024
+
+
+def _host_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (what ``nproc`` reports, minus its OMP_NUM_THREADS override)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half the host's RAM (the
+    MemTotal of /proc/meminfo), capped at 16g. In local mode the driver JVM
+    runs every task and the Python workers live beside it, so a heap near
+    total RAM gets the process OOM-killed instead of collected."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(_MAX_HEAP_MB, ram_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "skyline-spark-validate",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or _host_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -36,11 +58,9 @@ def get_spark(
         # threads on the allocation-heavy stages: 16g + capped GC threads is
         # 2-4x faster than either an 8g heap (collection pressure) or a
         # cores-scaled 68g heap (G1 region scanning + 20+ GC threads spinning
-        # — load sat at 18 with 50x the CPU burned for identical results)
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
-        )
+        # — load sat at 18 with 50x the CPU burned for identical results);
+        # on a smaller host the heap drops to half its RAM
+        .config("spark.driver.memory", _driver_memory())
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2",

@@ -35,7 +35,45 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["TableFormat", "ParquetFormat", "IcebergFormat", "DEFAULT_FORMAT"]
+__all__ = [
+    "TableFormat",
+    "ParquetFormat",
+    "IcebergFormat",
+    "DEFAULT_FORMAT",
+    "conform_to_schema",
+]
+
+
+def conform_to_schema(
+    df: DataFrame, schema: T.StructType, location: str
+) -> DataFrame:
+    """Project ``df`` onto ``schema``'s exact column set and types.
+
+    An evolved/widened live table must still hand callers the columns the
+    engine's lineage readers select on. A missing contract column fails
+    here (analysis error), not deep in a plan. A type-incompatible
+    evolution fails too: each column is ``try_cast`` and a row whose
+    non-NULL value casts to NULL raises when read — a plain ``cast``
+    would silently turn it into NULL lineage. Same-typed columns pass
+    through uncast."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    cols = []
+    for f in schema.fields:
+        src = F.col(f.name)
+        if have.get(f.name) == f.dataType:
+            cols.append(src)
+            continue
+        conv = src.try_cast(f.dataType)
+        msg = (
+            f"{location}: column {f.name!r} holds a value that does not "
+            f"convert to {f.dataType.simpleString()}"
+        )
+        cols.append(
+            F.when(src.isNotNull() & conv.isNull(), F.raise_error(F.lit(msg)))
+            .otherwise(conv)
+            .alias(f.name)
+        )
+    return df.select(*cols)
 
 
 class TableFormat:
@@ -176,13 +214,8 @@ class IcebergFormat(TableFormat):
                 return spark.createDataFrame([], schema)
             raise
         # conform to the contract schema like the parquet impl does
-        # (spark.read.schema() is not honored for catalog tables): an
-        # evolved/widened live table must still hand callers the exact
-        # column set and types the engine's lineage readers select on —
-        # a missing contract column fails loudly here, not deep in a plan
-        return df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        # (spark.read.schema() is not honored for catalog tables)
+        return conform_to_schema(df, schema, location)
 
     def append(self, df: DataFrame, location: str) -> None:
         # v2 writeTo: snapshot-isolated append (the WATCH/retry replacement)

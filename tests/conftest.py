@@ -12,6 +12,7 @@ if str(REPO) not in sys.path:
 def spark():
     from skyline_spark.session import get_spark
 
-    spark = get_spark("skyline-spark-tests", cores=8, shuffle_partitions=8)
+    # cores default to the host's (SPARK_GRAFT_CPUS or the CPU affinity)
+    spark = get_spark("skyline-spark-tests", shuffle_partitions=8)
     yield spark
     spark.stop()

@@ -625,7 +625,11 @@ def test_flood_guard_cap_is_broadcast_anti_join(spark):
     # F.broadcast hint: the hot-list size is data-dependent and unbounded,
     # and under AQE the final join strategy is re-decided from the ACTUAL
     # aggregate size — a pathological corpus degrades to a shuffled
-    # anti-join instead of a driver OOM (_cap_band_buckets docstring)
+    # anti-join instead of a driver OOM (_cap_band_buckets docstring).
+    # So the pin reads AQE's FINAL plan, after an action. At the production
+    # cap the fixture has no over-cap bucket and AQE prunes the empty
+    # anti-join away entirely; cap 1 makes the guard drop rows, so the
+    # runtime-chosen join is actually there to inspect.
     from pyspark.sql import functions as F
 
     from skyline_spark.catalog.registry import load
@@ -640,15 +644,19 @@ def test_flood_guard_cap_is_broadcast_anti_join(spark):
         "doc_id",
         X.text_hashes_udf()(F.col("text")).getField("simhash").alias("sh"),
     )
-    p = plan_of(
-        _cap_band_buckets(
-            _simhash_bands(d), ["band_id", "band_val"], SIMHASH_BAND_CAP
-        )
-    )
-    tree = p.split("\n\n", 1)[0]
-    assert "BroadcastHashJoin" in tree and "LeftAnti" in tree
-    assert "SortMergeJoin" not in tree
-    assert "CartesianProduct" not in tree
+    bands = _simhash_bands(d)
+    n_bands = bands.count()
+    for cap in (SIMHASH_BAND_CAP, 1):
+        capped = _cap_band_buckets(bands, ["band_id", "band_val"], cap)
+        n_kept = len(capped.collect())  # the action that settles AQE's plan
+        tree = plan_of(capped).split("\n\n", 1)[0]
+        assert "== Final Plan ==" in tree
+        final = tree.split("== Initial Plan ==", 1)[0]
+        assert "SortMergeJoin" not in final
+        assert "CartesianProduct" not in final
+        if cap == 1:
+            assert 0 < n_kept < n_bands
+            assert "BroadcastHashJoin LeftAnti" in final
 
 
 def test_exact_collapse_is_partial_agg_and_respread(spark):
@@ -709,3 +717,63 @@ def test_lsh_recall_exact_side_restricted_to_reps(spark):
     p = plan_of(build(spark, "dedup_lsh_recall"))
     assert "LeftSemi" in p
     assert "CartesianProduct" not in p
+
+
+def _plan_files(df) -> set[str]:
+    """Every file ``df``'s plan reads: ``inputFiles()`` plus the files of
+    each relation in the ANALYZED plan. The second matters because
+    ``inputFiles()`` walks the optimized plan, where a cached subtree is an
+    opaque InMemoryRelation leaf — exactly the subtrees Spark re-caches
+    when a path they read is written."""
+    files = set(df.inputFiles())
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            files.update(leaf.relation().inputFiles())
+    return files
+
+
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_validation_result_never_reads_the_checkpoint(spark, tmp_path, pruned):
+    # validate() reads the checkpoint once, behind a barrier: no frame it
+    # returns (or caches under them) may plan a scan of the checkpoint
+    # location, or the run's own append_checkpoint would re-cache those
+    # frames and re-run the validation over its own rows
+    import dataclasses
+    from pathlib import Path
+
+    from pyspark.sql import DataFrame
+
+    from skyline_spark.config import ValidationConfig
+    from skyline_spark.plans.checkpoint import append_checkpoint, load_checkpoint
+    from skyline_spark.plans.validate import validate
+    from skyline_spark.sources.synth import synth_pages
+
+    pages_path = str(tmp_path / "pages")
+    ckpt = str(tmp_path / "ckpt")
+    synth_pages(spark, 3_000, 6, defects=False).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    first = validate(pages, checkpoint_path=ckpt, run_id="r1", run_ts=1_786_060_800.0)
+    append_checkpoint(first.checkpoint, ckpt)
+    first.release()
+    ckpt_dir = str(Path(ckpt).resolve())
+    assert any(Path(ckpt).rglob("*.parquet"))
+
+    res = validate(
+        pages, ValidationConfig(pruned_resume=pruned), checkpoint_path=ckpt,
+        run_id="r2", run_ts=1_786_060_900.0,
+    )
+    frames = {
+        f.name: getattr(res, f.name)
+        for f in dataclasses.fields(res)
+        if isinstance(getattr(res, f.name), DataFrame)
+    }
+    assert {"verdicts", "violations", "checkpoint", "stats", "samples", "run_metrics"} <= set(frames)
+    # the walk does see a checkpoint scan, cached or not
+    direct = load_checkpoint(spark, ckpt).cache()
+    assert any(ckpt_dir in p for p in _plan_files(direct))
+    direct.unpersist()
+    for name, df in frames.items():
+        assert not [p for p in _plan_files(df) if ckpt_dir in p], name
+    res.release()

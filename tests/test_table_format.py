@@ -15,6 +15,7 @@ from skyline_spark.sources.table_format import (
     DEFAULT_FORMAT,
     IcebergFormat,
     ParquetFormat,
+    conform_to_schema,
 )
 
 SCHEMA = T.StructType(
@@ -93,6 +94,30 @@ def test_parquet_maintenance_is_explicit_noop(spark, fmt, tmp_path):
 
 
 # --- IcebergFormat: pinned procedure SQL + identifier hygiene --------------
+
+
+def test_conform_converts_compatible_evolution(spark):
+    # the catalog-table conform IcebergFormat.read_or_empty applies, run on
+    # a plain frame: a widened/retyped live table with an extra column
+    live = spark.createDataFrame(
+        [("a", "5", 1), ("b", None, 2)], "k string, v string, extra int"
+    )
+    out = conform_to_schema(live, SCHEMA, "cat.db.t")
+    assert out.schema == SCHEMA
+    assert sorted(out.collect()) == [("a", 5), ("b", None)]
+
+
+def test_conform_fails_loudly_on_incompatible_evolution(spark):
+    live = spark.createDataFrame([("a", "5"), ("b", "not-a-number")], "k string, v string")
+    with pytest.raises(Exception, match="'v' holds a value that does not convert"):
+        conform_to_schema(live, SCHEMA, "cat.db.t").collect()
+
+
+def test_conform_missing_contract_column_raises(spark):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        conform_to_schema(spark.createDataFrame([("a",)], "k string"), SCHEMA, "cat.db.t")
 
 
 def test_iceberg_maintenance_sql_pinned():

@@ -601,3 +601,78 @@ def test_run_metrics_persist_and_readback(spark, tmp_path):
     assert m["detector_version_hash"] == rows["m-2"]["detector_version_hash"]
     r1.release()
     r2.release()
+
+
+@pytest.mark.parametrize(
+    "pruned,scratch", [(False, False), (True, False), (False, True)],
+    ids=["full", "pruned", "full-scratch"],
+)
+def test_run_metrics_match_written_verdicts_in_submit_order(
+    spark, tmp_path, pruned, scratch
+):
+    """submit_validate.py's write order — overwrite verdicts and
+    violations, append the checkpoint, THEN append run metrics — must
+    persist a run-metrics row describing the verdicts it wrote, and
+    res.verdicts must not change under the checkpoint append: the frames
+    validate() returns never read the checkpoint location."""
+    import os
+
+    from skyline_spark.plans.checkpoint import append_run_metrics, load_run_metrics
+    from skyline_spark.sources.table_format import DEFAULT_FORMAT
+
+    pages_path = str(tmp_path / "pages")
+    ckpt = str(tmp_path / "ckpt")
+    out = tmp_path / "out"
+    synth_pages(spark, 6_000, 10).write.parquet(pages_path)
+    seed = validate(
+        spark.read.parquet(pages_path), checkpoint_path=ckpt, run_id="seed",
+        run_ts=RUN_TS_AUG11,
+    )
+    append_checkpoint(seed.checkpoint, ckpt)
+    seed.release()
+    synth_pages(
+        spark, 600, 1, base_date="2026-08-11", defects=False
+    ).write.mode("append").parquet(pages_path)
+
+    scratch_dir = str(tmp_path / "scratch") if scratch else None
+    res = validate(
+        spark.read.parquet(pages_path), ValidationConfig(pruned_resume=pruned),
+        checkpoint_path=ckpt, run_id="day", run_ts=RUN_TS_AUG11 + 86400,
+        scratch_dir=scratch_dir,
+    )
+    before = _canon_rows(res.verdicts)
+    assert before
+    DEFAULT_FORMAT.overwrite(res.verdicts, str(out / "verdicts"))
+    DEFAULT_FORMAT.overwrite(res.violations, str(out / "violations"))
+    append_checkpoint(res.checkpoint, ckpt)
+    append_run_metrics(res.run_metrics, str(out / "runs"))
+    # both the already-planned frame and a fresh plan over it (which picks
+    # up whatever the cache manager holds after the append)
+    assert _canon_rows(res.verdicts) == before
+    assert _canon_rows(res.verdicts.select("*")) == before
+
+    written = spark.read.parquet(str(out / "verdicts")).collect()
+    assert len(written) == len(before)
+    (m,) = load_run_metrics(spark, str(out / "runs")).collect()
+    skips = ("TOO_SHORT", "STALE", "BORING")
+    assert m["total_partitions"] == len(written)
+    assert m["total_anomalies"] == sum(r["status"] == "FAIL" for r in written)
+    assert dict(m["exceptions"]) == {
+        s: sum(r["status"] == s for r in written) for s in skips
+    }
+    # the checkpoint read is one more barrier, and release() frees it too
+    jsc = spark.sparkContext._jsc.sc()
+
+    def live_rdds():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    barrier_rdds = set(res._ckpt_rdd_ids)
+    if scratch:
+        (run_dir,) = os.listdir(scratch_dir)
+        assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
+    else:
+        assert len(barrier_rdds) == 4 and barrier_rdds <= live_rdds()
+    res.release()
+    assert not barrier_rdds & live_rdds()
+    if scratch:
+        assert os.listdir(scratch_dir) == []
