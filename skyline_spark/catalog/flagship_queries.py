@@ -6,7 +6,7 @@ ensemble isn't SQL-expressible end to end (Grubbs needs the Student-t
 inverse survival function, ks_test needs its p-value + the ADF gate).
 
 These twins close that gap the strongest way available: the Spark side runs
-the REAL kernel pipeline — the same ``groupBy().applyInPandas`` ensemble,
+the REAL kernel pipeline — the same series-packed ``mapInArrow`` ensemble,
 gates, k-of-n consensus and early-exit padding as the flagships
 (`plans/drift.py`, `plans/validate.py`) — over ALL NINE reference detectors
 with CONSENSUS = 6, exactly `settings.py:475`. The DuckDB oracle restates
@@ -312,7 +312,7 @@ FROM drift ORDER BY 1, 2, 3
 @query(
     "drift_ensemble_daily_relational",
     _DAILY_SQL,
-    doc="flagship twin: the REAL grouped-map kernel ensemble (plans/drift.py "
+    doc="flagship twin: the REAL series-packed kernel ensemble (plans/drift.py "
         "— gates, ordered early-exit padding, k-of-n consensus per "
         "analyzer/algorithms.py:583-687) over per-(day, event_type) stat "
         "series, over ALL NINE reference detectors with CONSENSUS = 6 "
@@ -585,7 +585,7 @@ def _twin_validate(spark: SparkSession, sf_dir: str):
     "validate_pages_relational",
     _VALIDATE_SQL,
     doc="the flagship pipeline end-to-end oracled: the REAL validate() run "
-        "(one-scan slim stats, TooShort gate, grouped-map kernel drift over "
+        "(one-scan slim stats, TooShort gate, series-packed kernel drift over "
         "5 exact stat series, uniqueness/referential/static constraints, "
         "verdict precedence, checks_run/checks_failed accounting — "
         "plans/validate.py) on a page table derived from events with only "

@@ -1,8 +1,8 @@
 """Pipeline-level queries: the actual validation engine end to end.
 
 These exercise the non-SQL-expressible core (the 9-kernel consensus
-ensemble with EWM / Grubbs-threshold / ADF-gated KS inside
-``applyInPandas``), so they have no DuckDB oracle — the driver records
+ensemble with EWM / Grubbs-threshold / ADF-gated KS inside the drift
+stage's ``mapInArrow`` worker), so they have no DuckDB oracle — the driver records
 rows-only checks, and kernel-level parity is covered by the golden tests
 (tests/test_detectors_golden.py replicates the reference's
 tests/algorithms_test.py fixture).
@@ -66,8 +66,8 @@ def _events_stats_long(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
 @query(
     "drift_ensemble_daily",
     None,
-    doc="the flagship: full 9-detector consensus ensemble (grouped-map pandas "
-        "UDF kernels, reference order settings.py:457-467, CONSENSUS=6 k-of-n "
+    doc="the flagship: full 9-detector consensus ensemble (series-packed "
+        "mapInArrow kernels, reference order settings.py:457-467, CONSENSUS=6 k-of-n "
         "with None counting toward k) over per-(day, event_type) stat series",
 )
 def drift_ensemble_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

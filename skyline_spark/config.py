@@ -55,10 +55,6 @@ class ValidationConfig:
     sample_cap: int = 512
     # cap on per-partition violation example rows (counts stay exact)
     max_violation_examples: int = 20
-    # hash buckets for the detector UDF (series per applyInPandas call);
-    # None → 16 × spark.sql.shuffle.partitions (plans/drift.py — 4× showed
-    # balls-into-bins imbalance at 32 reducers)
-    kernel_buckets: int | None = None
     # Pruned resume: when a checkpoint_path is given, detect changed
     # partitions with a NARROW scan (url/warc_ts/lang only — parquet column
     # pruning skips the multi-KB html), scan the heavy columns ONLY for

@@ -10,9 +10,21 @@ error contract every exception is trapped and reported as None —
 Semantics are byte-parity reimplementations of
 /root/reference/skyline/analyzer/algorithms.py (file:line cited per kernel).
 They are NOT copies: the reference iterates python lists of (ts, value)
-tuples; these kernels are numpy/pandas vectorized and are designed to run
-inside ``groupBy(...).applyInPandas`` so each invocation handles one group's
-whole series in Arrow batches — no per-row Python in the Spark plan.
+tuples; these kernels are numpy/pandas vectorized over one series.
+
+Batched forms. Six built-ins also carry a ``.batched`` attribute: the same
+verdict for every row of a ``[rows × window]`` matrix in one numpy pass,
+which is how the drift stage (plans/drift.py) judges thousands of short
+series per Arrow batch. A batched form takes ``ts``/``values`` as 2-D
+float64 arrays, ``now`` as a 1-D array, and a ``DetectorParams`` whose
+``full_duration``/``baseline_head_seconds`` may be per-row int arrays; it
+returns a bool array and is only handed rows whose values (and value span)
+are finite. :func:`kernel_rows` is the one dispatcher: batched form where
+one exists, the scalar kernel per row otherwise (``stddev_from_moving_
+average``'s pandas EWM, ``least_squares``' lstsq, ``ks_test``, plugins,
+non-finite rows). The scalar kernels are the golden oracle; the equality
+battery (tests/test_batched_detectors.py) pins every batched form to them
+row by row, and ``kernel_self_test`` re-checks both at startup.
 
 Wall-clock anchoring in the reference (`algorithms.py:183,379-380` call
 ``time()``) is replaced by the explicit ``now`` parameter so verdicts are
@@ -22,6 +34,7 @@ reference's own tests do, `tests/algorithms_test.py:45-48`).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import math
 from dataclasses import dataclass
@@ -48,6 +61,7 @@ __all__ = [
     "least_squares",
     "histogram_bins",
     "ks_test",
+    "kernel_rows",
 ]
 
 Verdict = Optional[bool]
@@ -151,11 +165,16 @@ def grubbs(ts, values, now, params) -> bool:
     mean = float(np.mean(values))
     tail_average = tail_avg(values, params.tail_points)
     z_score = (tail_average - mean) / std_dev
-    n = values.size
+    return bool(z_score > _grubbs_score(values.size))
+
+
+@functools.lru_cache(maxsize=4096)
+def _grubbs_score(n: int) -> float:
+    """Grubbs critical value for N points — a function of N alone, so the
+    ~200-step t_isf bisection runs once per window length."""
     threshold = t_isf(0.05 / (2.0 * n), n - 2)
     threshold_sq = threshold * threshold
-    grubbs_score = ((n - 1) / math.sqrt(n)) * math.sqrt(threshold_sq / (n - 2 + threshold_sq))
-    return bool(z_score > grubbs_score)
+    return ((n - 1) / math.sqrt(n)) * math.sqrt(threshold_sq / (n - 2 + threshold_sq))
 
 
 @_kernel
@@ -297,6 +316,184 @@ def ks_test(ts, values, now, params) -> bool:
         if adf_p < 0.05:
             return True
     return False
+
+
+# ---------------------------------------------------------------------------
+# batched forms: one numpy pass over a [rows × window] matrix
+# ---------------------------------------------------------------------------
+# Each reproduces its scalar kernel's arithmetic operation for operation: a
+# row reduction of a 2-D array (axis=1) sums in the same pairwise order as
+# the 1-D reduction of that row, so means, stds and medians are bitwise the
+# scalar ones. Variable-length slices (first_hour_average's baseline) are
+# grouped by length for the same reason — zero padding would change the
+# pairwise association.
+
+
+def _batched_form(kernel: Callable[..., Verdict]):
+    """Attach the decorated function as ``kernel.batched``."""
+
+    def attach(fn):
+        kernel.batched = fn
+        return fn
+
+    return attach
+
+
+def _tail_avg_rows(values: np.ndarray, n: int) -> np.ndarray:
+    if values.shape[1] >= n:
+        return np.mean(values[:, -n:], axis=1)
+    return values[:, -1]
+
+
+def _mean_std1_rows(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row mean and sample std (ddof=1; NaN for one column), as the scalar
+    kernels compute them."""
+    mean = np.mean(x, axis=1)
+    if x.shape[1] > 1:
+        return mean, np.std(x, axis=1, ddof=1)
+    return mean, np.full(x.shape[0], np.nan)
+
+
+@_batched_form(median_absolute_deviation)
+def _median_absolute_deviation_rows(ts, values, now, params):
+    median = np.median(values, axis=1)
+    demedianed = np.abs(values - median[:, None])
+    median_deviation = np.median(demedianed, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (median_deviation != 0) & (demedianed[:, -1] / median_deviation > 6)
+
+
+@_batched_form(grubbs)
+def _grubbs_rows(ts, values, now, params):
+    std_dev = np.std(values, axis=1)
+    mean = np.mean(values, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        z_score = (_tail_avg_rows(values, params.tail_points) - mean) / std_dev
+    return (std_dev != 0) & (z_score > _grubbs_score(values.shape[1]))
+
+
+@_batched_form(first_hour_average)
+def _first_hour_average_rows(ts, values, now, params):
+    cutoff = now - (params.full_duration - params.baseline_head_seconds)
+    in_base = ts < np.reshape(cutoff, (-1, 1))
+    k = in_base.sum(axis=1)
+    t = _tail_avg_rows(values, params.tail_points)
+    out = np.zeros(values.shape[0], dtype=bool)
+    # ts ascends on every caller's rows, so the baseline is a prefix; any
+    # row where it is not falls back to the scalar kernel
+    prefix = (in_base == (np.arange(values.shape[1]) < k[:, None])).all(axis=1)
+    for r in np.flatnonzero(~prefix):
+        out[r] = bool(first_hour_average(ts[r], values[r], now[r], _params_at(params, r)))
+    for n in np.unique(k[prefix]):
+        if n == 0:
+            continue  # empty baseline → NaN stats → False
+        rows = np.flatnonzero(prefix & (k == n))
+        mean, std_dev = _mean_std1_rows(values[rows, :n])
+        out[rows] = np.abs(t[rows] - mean) > 3 * std_dev
+    return out
+
+
+@_batched_form(stddev_from_average)
+def _stddev_from_average_rows(ts, values, now, params):
+    mean, std_dev = _mean_std1_rows(values)
+    return np.abs(_tail_avg_rows(values, params.tail_points) - mean) > 3 * std_dev
+
+
+@_batched_form(mean_subtraction_cumulation)
+def _mean_subtraction_cumulation_rows(ts, values, now, params):
+    if values.shape[1] < 2:
+        return np.zeros(values.shape[0], dtype=bool)
+    mean, std_dev = _mean_std1_rows(values[:, :-1])
+    return np.abs(values[:, -1] - mean) > 3 * std_dev
+
+
+@_batched_form(histogram_bins)
+def _histogram_bins_rows(ts, values, now, params):
+    """np.histogram(bins=15)'s uniform-bin path, restated per row: edges by
+    its linspace arithmetic, indices by its ±1-ULP corrected division."""
+    bins = 15
+    first = values.min(axis=1)
+    last = values.max(axis=1)
+    flat = first == last
+    first = np.where(flat, first - 0.5, first)
+    last = np.where(flat, last + 0.5, last)
+    delta = last - first
+    step = delta / bins
+    j = np.arange(bins + 1, dtype=np.float64)
+    edges = np.where(
+        (step == 0)[:, None],  # linspace's denormal branch
+        (j / bins)[None, :] * delta[:, None],
+        j[None, :] * step[:, None],
+    ) + first[:, None]
+    edges[:, -1] = last
+    rows = np.arange(values.shape[0])[:, None]
+    idx = (((values - first[:, None]) / delta[:, None]) * bins).astype(np.intp)
+    idx[idx == bins] -= 1
+    idx[values < edges[rows, idx]] -= 1
+    idx[(values >= edges[rows, idx + 1]) & (idx != bins - 1)] += 1
+    m = values.shape[0]
+    counts = np.bincount((rows * bins + idx).ravel(), minlength=m * bins).reshape(m, bins)
+    t = _tail_avg_rows(values, params.tail_points)[:, None]
+    sparse = counts <= 20
+    hit = sparse[:, 0] & (t[:, 0] <= edges[:, 0])
+    hit |= (sparse[:, 1:] & (edges[:, 1:bins] <= t) & (t < edges[:, 2:])).any(axis=1)
+    return hit
+
+
+def _params_at(params: DetectorParams, index) -> DetectorParams:
+    """``params`` with each per-row array field indexed by ``index`` — an
+    int gives one row's scalar params, an index array a sub-batch's."""
+    per_row = {
+        f.name: v[index]
+        for f in dataclasses.fields(params)
+        if isinstance(v := getattr(params, f.name), np.ndarray)
+    }
+    return dataclasses.replace(params, **per_row) if per_row else params
+
+
+def _code(v) -> int:
+    """Verdict → int8 code: 1 True, 0 False, -1 None (errored)."""
+    return -1 if v is None else int(bool(v))
+
+
+def kernel_rows(
+    kernel: Callable[..., Verdict],
+    ts: np.ndarray,
+    values: np.ndarray,
+    now: np.ndarray,
+    params: DetectorParams,
+    rows: np.ndarray | None = None,
+    finite: np.ndarray | None = None,
+) -> np.ndarray:
+    """One kernel over the ``rows`` (default: all) of a ``[rows × window]``
+    batch → int8 verdict codes, one per row (1 True, 0 False, -1 None).
+
+    Rows go through ``kernel.batched`` when the kernel has one and the row
+    is ``finite`` (values and their span; computed when not given); every
+    other row — and every row of a batched call that raises — runs the
+    scalar kernel, whose error contract then applies. ``params`` fields may
+    be per-row arrays. A non-bool verdict is recorded by truthiness, as the
+    self-test judges it.
+    """
+    rows = np.arange(values.shape[0]) if rows is None else rows
+    out = np.empty(rows.size, dtype=np.int8)
+    fast = getattr(kernel, "batched", None)
+    if fast is None:
+        use = np.zeros(rows.size, dtype=bool)
+    elif finite is None:
+        use = np.isfinite(values[rows].max(axis=1) - values[rows].min(axis=1))
+    else:
+        use = finite[rows].copy()
+    if use.any():
+        sub = rows[use]
+        try:
+            out[use] = fast(ts[sub], values[sub], now[sub], _params_at(params, sub))
+        except Exception:
+            use[:] = False
+    for k in np.flatnonzero(~use):
+        r = rows[k]
+        out[k] = _code(kernel(ts[r], values[r], float(now[r]), _params_at(params, r)))
+    return out
 
 
 # Ensemble order is load-bearing: the persisted ensemble array and the

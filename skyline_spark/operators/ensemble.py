@@ -1,10 +1,9 @@
 """Gates + consensus ensemble — the reference's ``run_selected_algorithm``.
 
 Reimplements `/root/reference/skyline/analyzer/algorithms.py:537-690` as a
-pure function over numpy arrays (one call per group inside
-``applyInPandas``), with the three gates surfaced as *statuses* instead of
-exceptions so they become first-class rows in the pass/fail table
-(SURVEY.md §2.2).
+pure function over numpy arrays (one call per series), with the three
+gates surfaced as *statuses* instead of exceptions so they become
+first-class rows in the pass/fail table (SURVEY.md §2.2).
 
 Key parity details:
 - gate order: TooShort → Stale → Boring (`algorithms.py:583-593`)
@@ -88,6 +87,9 @@ def kernel_self_test(
     the same check with the error contract folded in (an erroring kernel
     returns ``None``), strengthened to also flag a kernel that *fires* on
     flat data (always-True plugins would silently poison every consensus).
+    A kernel with a batched form (what the drift stage runs) is also run
+    that way, on the same series as a one-row matrix, and flagged if the
+    batched verdict fires, raises or differs from the scalar one.
     Returns the failing kernel names; empty list = healthy. Driver-side
     pure numpy (~100 ms for the built-in nine) — no Spark job is launched,
     and no memoization: a re-registered kernel under an unchanged name must
@@ -105,7 +107,15 @@ def kernel_self_test(
             v = None
         # healthy = a falsy non-None verdict; truthiness (not identity) so
         # plugins returning numpy bools pass like the built-ins do
-        if v is None or bool(v):
+        healthy = v is not None and not bool(v)
+        batched = getattr(fn, "batched", None)
+        if healthy and batched is not None:
+            try:
+                rows = batched(ts[None, :], values[None, :], np.array([now]), params)
+                healthy = bool(rows[0]) == bool(v)
+            except Exception:
+                healthy = False
+        if not healthy:
             bad.append(name)
     return bad
 

@@ -3,7 +3,8 @@
 Spark restatement of the Analyzer sweep (SURVEY §3.2):
 
     read table → per-partition stats (one agg pass over the big table)
-               → drift ensemble over the tiny stats table (applyInPandas)
+               → drift ensemble over the tiny stats table (one packed row
+                 per series → mapInArrow, detectors batched across series)
                → constraint checks (uniqueness / referential / schema /
                  static), scans pruned to target partitions
                → pass/fail verdicts + violation sidecar + checkpoint rows

@@ -777,3 +777,44 @@ def test_validation_result_never_reads_the_checkpoint(spark, tmp_path, pruned):
     for name, df in frames.items():
         assert not [p for p in _plan_files(df) if ckpt_dir in p], name
     res.release()
+
+
+@pytest.mark.parametrize("mode", ["targets", "latest"])
+def test_drift_is_one_shuffle_into_map_in_arrow(spark, tmp_path, mode):
+    # the drift stage ships one row per (lang, stat) series to the Python
+    # worker: the groupBy that packs each series is the ONLY shuffle between
+    # the stats scan and the Python node (targets and samples broadcast),
+    # and no per-point grouped map or row-at-a-time UDF comes back
+    import datetime
+    import re
+
+    from skyline_spark.plans.drift import drift_verdicts
+
+    base = datetime.date(2024, 1, 1)
+    rows = [
+        (base + datetime.timedelta(days=i), lang, stat, 0, float(i))
+        for i in range(10)
+        for lang in ("en", "de")
+        for stat in ("text_len_avg", "row_count")
+    ]
+    path = str(tmp_path / "stats")
+    spark.createDataFrame(
+        rows, "partition_date date, lang string, stat string, fingerprint long, value double"
+    ).write.parquet(path)
+    samples = spark.createDataFrame(
+        [(base, "en", "text_len", [1.0, 2.0])],
+        "partition_date date, lang string, stat string, sample array<double>",
+    )
+    targets = spark.createDataFrame([(base, "en")], "partition_date date, lang string")
+    out = drift_verdicts(
+        spark.read.parquet(path), samples,
+        targets_df=targets if mode == "targets" else None,
+        drift_stats=["text_len_avg", "row_count"],
+        latest_only=mode == "latest",
+    )
+    p = plan_of(out, "simple")
+    assert "MapInArrow" in p
+    assert "FlatMapGroupsInPandas" not in p and "BatchEvalPython" not in p
+    assert len(re.findall(r"(?<!Broadcast)Exchange hashpartitioning\(lang#\d+, stat#\d+", p)) == 1
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", p)) == 1
+    assert p.count("BroadcastExchange") == (2 if mode == "targets" else 1)

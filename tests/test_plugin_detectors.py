@@ -192,6 +192,22 @@ def test_validate_refuses_broken_kernel(spark):
         unregister_detector("st_boom")
 
 
+@pytest.mark.parametrize("form", ["fires", "raises"])
+def test_kernel_self_test_checks_batched_forms(monkeypatch, form):
+    """The drift stage runs the batched forms, so the self-test runs them
+    too: a batched form that fires (or raises) on the flat series flags its
+    kernel even though the scalar kernel is healthy."""
+    from skyline_spark.operators.ensemble import kernel_self_test
+
+    def broken_batched(ts, values, now, params):
+        if form == "raises":
+            raise ValueError("boom")
+        return np.ones(values.shape[0], dtype=bool)
+
+    monkeypatch.setattr(ALGORITHMS["grubbs"], "batched", broken_batched)
+    assert kernel_self_test() == ["grubbs"]
+
+
 def test_kernel_self_test_accepts_numpy_bool_plugins():
     """A plugin returning np.bool_ (any numpy-comparison kernel) is healthy
     when it doesn't fire — the self-test must judge truthiness, not the
