@@ -9,7 +9,9 @@ unpickled on every worker regardless of the driver's cwd.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import zipfile
 from pathlib import Path
 
@@ -22,9 +24,13 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     """Zip the skyline_spark package; returns the zip path.
 
     The zip is rebuilt only when a source file is newer than the existing
-    zip, so repeated session creation is cheap.
+    zip, so repeated session creation is cheap. The default path is keyed
+    by the package's location, so two checkouts on one host never ship
+    each other's code to their executors.
     """
-    dest = dest or os.path.join("/tmp", "skyline_spark_pyfiles.zip")
+    if dest is None:
+        key = hashlib.sha1(str(_PKG_ROOT).encode()).hexdigest()[:12]
+        dest = os.path.join(tempfile.gettempdir(), f"skyline_spark_pyfiles-{key}.zip")
     sources = sorted(_PKG_ROOT.rglob("*.py"))
     if os.path.exists(dest):
         zip_mtime = os.path.getmtime(dest)

@@ -24,7 +24,7 @@ import time as _time
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..config import (
@@ -108,8 +108,65 @@ DEFAULT_STATIC_RULES = (
 
 
 @dataclass
+class _RunStorage:
+    """The storage one validate() run materializes: its barriers (RDD ids
+    of the localCheckpoint blocks, or the scratch-table directory when the
+    run materializes to storage instead) and its cached frames.
+
+    localCheckpoint blocks are NOT released by DataFrame.unpersist() — they
+    live until the driver GCs the RDD handle, so a long-lived session
+    running validate() repeatedly (a resident validation service, the
+    bench, the scaling harness) strands ~hundreds of MB of block-manager
+    memory per run unless released explicitly. Each barrier records its
+    OWN RDD id (off the frame's LogicalRDD plan node) as it is made, so
+    release() drops exactly these blocks — on success and on failure. A
+    global storage-info before/after diff would race with concurrent
+    validate() runs or caller-side caching on the same session and free
+    someone else's lineage-truncated blocks, unrecoverable for the victim."""
+
+    spark: SparkSession
+    scratch_run_dir: str | None = None
+    cached: list = field(default_factory=list)
+    rdd_ids: list = field(default_factory=list)
+
+    def barrier(self, df: DataFrame, name: str) -> DataFrame:
+        """Materialize ``df`` eagerly; later plans read it as one leaf."""
+        if self.scratch_run_dir is not None:
+            path = f"{self.scratch_run_dir}/{name}"
+            df.write.mode("errorifexists").parquet(path)
+            return self.spark.read.parquet(path)
+        out = df.localCheckpoint(eager=True)
+        self.rdd_ids.append(_local_ckpt_rdd_id(out))
+        return out
+
+    def release(self) -> None:
+        for df in self.cached:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+        self.cached.clear()
+        if self.rdd_ids:
+            jsc = self.spark.sparkContext._jsc.sc()
+            live = {info.id() for info in jsc.getRDDStorageInfo()}
+            for rid in self.rdd_ids:
+                if rid in live:
+                    jsc.unpersistRDD(rid, False)
+            self.rdd_ids.clear()
+        if self.scratch_run_dir is not None:
+            _delete_path(self.spark, self.scratch_run_dir)
+            self.scratch_run_dir = None
+
+
+@dataclass
 class ValidationResult:
-    """One run's lazy outputs plus the storage that backs them.
+    """One run's outputs plus the storage that backs them.
+
+    ``verdicts`` and ``violations`` are materialized before validate()
+    returns: each is a barrier (a localCheckpoint, or a scratch table under
+    ``scratch_dir``), so every plan over them — the caller's writes
+    included — starts from one leaf instead of re-planning the pipeline.
+    ``checkpoint`` and ``run_metrics`` stay lazy, over barrier leaves.
 
     Every frame here is independent of later lineage writes: the input
     checkpoint is read once behind a barrier, so no frame's plan reads the
@@ -131,38 +188,13 @@ class ValidationResult:
     run_metrics: DataFrame | None = None
     run_id: str = ""
     config: ValidationConfig = field(default_factory=ValidationConfig)
-    # storage-backed state created by this run: cached DataFrames plus the
-    # RDD ids of the localCheckpoint barriers (checkpoint read, slim, stats,
-    # samples), or the scratch-table directory when the run materialized to
-    # storage instead.
-    # localCheckpoint blocks are NOT released by DataFrame.unpersist() — they
-    # live until the driver GCs the RDD handle, so a long-lived session
-    # running validate() repeatedly (a resident validation service, the
-    # bench, the scaling harness) strands ~hundreds of MB of block-manager
-    # memory per run unless released explicitly.
-    _cached: list = field(default_factory=list, repr=False)
-    _ckpt_rdd_ids: list = field(default_factory=list, repr=False)
-    _scratch_run_dir: str | None = field(default=None, repr=False)
+    _storage: _RunStorage | None = field(default=None, repr=False)
 
     def release(self) -> None:
         """Free every block this run materialized. The result's DataFrames
         are NOT usable afterwards — call only when fully consumed."""
-        for df in self._cached:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        if self._ckpt_rdd_ids:
-            jsc = self.verdicts.sparkSession.sparkContext._jsc.sc()
-            live = {info.id() for info in jsc.getRDDStorageInfo()}
-            for rid in self._ckpt_rdd_ids:
-                if rid in live:
-                    jsc.unpersistRDD(rid, False)
-            self._ckpt_rdd_ids.clear()
-        if self._scratch_run_dir is not None:
-            _delete_path(self.verdicts.sparkSession, self._scratch_run_dir)
-            self._scratch_run_dir = None
-        self._cached.clear()
+        if self._storage is not None:
+            self._storage.release()
 
 
 def validate(
@@ -184,8 +216,9 @@ def validate(
     selection). Defaults run the full registry over DRIFT_STATS.
 
     ``scratch_dir``: materialize the pipeline barriers (the checkpoint
-    read, slim / stats / samples) as parquet scratch tables under
-    ``scratch_dir/<run token>/`` instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
+    read, narrow, slim, stats, samples, targets, drift, violations,
+    verdicts) as parquet scratch tables under ``scratch_dir/<run token>/``
+    instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
     wants: localCheckpoint truncates lineage into executor-LOCAL blocks, so
     losing any executor mid-run is unrecoverable (Spark cannot recompute a
     checkpointed partition whose block died with its host) — a scratch table
@@ -252,32 +285,22 @@ def validate(
         scratch_run_dir = (
             f"{scratch_dir.rstrip('/')}/{run_id}-{int(run_ts)}-{id(pages):x}"
         )
-
-        def _barrier(df: DataFrame, name: str) -> DataFrame:
-            path = f"{scratch_run_dir}/{name}"
-            df.write.mode("errorifexists").parquet(path)
-            return spark.read.parquet(path)
-
-    else:
-
-        def _barrier(df: DataFrame, name: str) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
+    store = _RunStorage(spark, scratch_run_dir)
     try:
         return _validate_body(
             pages, cfg, checkpoint_path, run_id, run_ts, static_rules,
             lang_allowlist, drift_stats, sample_backed, algorithms,
-            spark, schema_viol, _barrier, scratch_run_dir,
+            spark, schema_viol, store,
         )
     except BaseException:
-        # a failed run must not strand multi-GB scratch tables: the only
-        # handle that deletes them (ValidationResult.release) is built at
-        # the very end of the pipeline, so clean up here on any error
-        if scratch_run_dir is not None:
-            try:
-                _delete_path(spark, scratch_run_dir)
-            except Exception:
-                pass
+        # a failed run must not strand multi-GB scratch tables or barrier
+        # blocks: the only handle that frees them (ValidationResult.release)
+        # is built at the very end of the pipeline, so release here on any
+        # error
+        try:
+            store.release()
+        except Exception:
+            pass
         raise
 
 
@@ -324,7 +347,7 @@ def _prune_predicate(
 def _validate_body(
     pages, cfg, checkpoint_path, run_id, run_ts, static_rules,
     lang_allowlist, drift_stats, sample_backed, algorithms,
-    spark, schema_viol, _barrier, scratch_run_dir,
+    spark, schema_viol, store,
 ) -> ValidationResult:
     vhash = detector_version_hash()
     # the checkpoint is read ONCE, behind the same barrier as slim/stats/
@@ -334,7 +357,7 @@ def _validate_body(
     # re-caches every plan reading a written path — nor make a re-run of
     # them see this run's rows and anti-join its own targets away
     ckpt = (
-        _barrier(load_checkpoint(spark, checkpoint_path), "checkpoint_in")
+        store.barrier(load_checkpoint(spark, checkpoint_path), "checkpoint_in")
         if checkpoint_path is not None
         else None
     )
@@ -378,20 +401,19 @@ def _validate_body(
     # list is bounded by the calendar, not the data (the one deliberate
     # driver-side collect in this pipeline).
     pruned = cfg.pruned_resume and ckpt is not None
-    hist_cache = None
-    narrow_cache = None
     if pruned:
         native = (
             "_native_partition_date"
             if "_native_partition_date" in pages.columns
             else None
         )
-        # cached: the aggregated frame is checkpoint-sized, and it feeds the
-        # targets collect, the stale-newest broadcast (stage 3b), the
-        # layout audit, and the stage-7 checkpoint join — without the cache
+        # barrier "narrow": the aggregated frame is checkpoint-sized, and it
+        # feeds the targets collect, the stale-newest broadcast (stage 3b),
+        # the layout audit, and the stage-7 checkpoint join — without it
         # each would re-run the O(table) narrow scan
-        narrow = narrow_partition_keys(pages, native_col=native).cache()
-        narrow_cache = narrow
+        narrow = store.barrier(
+            narrow_partition_keys(pages, native_col=native), "narrow"
+        )
         fingerprints = narrow.select(
             *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
         )
@@ -415,7 +437,7 @@ def _validate_body(
                 )
             else:
                 use_native = True
-        targets = _resume_targets(fingerprints).cache()
+        targets = store.barrier(_resume_targets(fingerprints), "targets")
         pend = [r[0] for r in targets.select("partition_date").distinct().collect()]
         dates = sorted(d for d in pend if d is not None)
         pages = pages.where(
@@ -426,7 +448,7 @@ def _validate_body(
             )
         )
 
-    slim = _barrier(slim_pages(pages), "slim")
+    slim = store.barrier(slim_pages(pages), "slim")
     # stats/samples are checkpoint-sized (one row per partition×lang[×stat])
     # — materialize them once too, collapsing every downstream branch
     # (row-count gate, drift, statics, digests, fingerprints) into trivial
@@ -438,39 +460,24 @@ def _validate_body(
     import concurrent.futures as _cf
 
     with _cf.ThreadPoolExecutor(2) as _ex:
-        _f_stats = _ex.submit(lambda: _barrier(partition_stats(slim), "stats"))
+        _f_stats = _ex.submit(
+            lambda: store.barrier(partition_stats(slim), "stats")
+        )
         _f_samples = _ex.submit(
-            lambda: _barrier(stat_samples(slim, cfg.sample_cap), "samples")
+            lambda: store.barrier(stat_samples(slim, cfg.sample_cap), "samples")
         )
         stats = _f_stats.result()
         samples = _f_samples.result()
-    # these three barriers and the checkpoint read are the only
-    # localCheckpoints in the run — record THEIR OWN RDD ids (off each
-    # frame's LogicalRDD plan node) so release() can drop exactly these
-    # blocks. A global storage-info before/after diff would race with
-    # concurrent validate() runs or caller-side caching on the same session
-    # and free someone else's lineage-truncated blocks — unrecoverable for
-    # the victim run.
-    _ckpt_rdd_ids = (
-        []
-        if scratch_run_dir is not None
-        else [
-            _local_ckpt_rdd_id(df)
-            for df in (ckpt, slim, stats, samples)
-            if df is not None
-        ]
-    )
-
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------
     # In pruned mode both were computed from the narrow scan before the
     # barrier; otherwise derive them from the checkpointed stats table
-    # (cache is cheap to fill from it).
+    # (the "targets" barrier is cheap to fill from it).
     if not pruned:
         fingerprints = (
             stats.select(*PARTITION_COLS, F.col("fingerprint").alias("snapshot_id"))
             .distinct()
         )
-        targets = _resume_targets(fingerprints).cache()
+        targets = store.barrier(_resume_targets(fingerprints), "targets")
 
     # drift baselines: in pruned mode the heavy scan only covered pending
     # dates, so unchanged partitions' stat series + ks samples come back
@@ -479,7 +486,10 @@ def _validate_body(
     # pairs must not appear twice in one series)
     drift_stats_in, drift_samples_in = stats, samples
     if pruned:
+        # its per-pair frame stays cached: one level above the checkpoint
+        # barrier, its plan is already small
         hist_stats, hist_samples, hist_cache = checkpoint_history(ckpt)
+        store.cached.append(hist_cache)
         fresh_keys = stats.select(*PARTITION_COLS).distinct()
         # semi-join on the CURRENT table's pairs: a partition deleted since
         # its checkpoint row (retention trim, purge) must not haunt the
@@ -533,11 +543,14 @@ def _validate_body(
     drift_targets = gated.where(~F.col("too_short")).select(*PARTITION_COLS)
 
     # ---- stage 4: drift ensemble over the stats table ---------------------
-    # cached: drift rows are checkpoint-sized (one per partition×lang×stat)
-    # and feed THREE consumers (verdict assembly, the violation sidecar, the
-    # checkpoint rows) — without the cache each downstream action re-runs
-    # the ensemble UDF and its joins
-    drift = drift_verdicts(
+    # barrier "drift": drift rows are checkpoint-sized (one per
+    # partition×lang×stat) and feed two consumers (verdict assembly, the
+    # violation sidecar) — without it each re-runs the ensemble UDF and its
+    # joins. A barrier rather than a cache: a cached frame that feeds
+    # another cached frame nests its whole plan inside the other's, and
+    # every later plan (the lineage writes) re-plans the nest — MBs of plan
+    # text per write
+    drift = store.barrier(drift_verdicts(
         drift_stats_in,
         drift_samples_in,
         cfg,
@@ -545,7 +558,7 @@ def _validate_body(
         drift_stats=list(drift_stats) if drift_stats is not None else None,
         sample_backed=sample_backed,
         algorithms=algorithms,
-    ).cache()
+    ), "drift")
 
     # ---- stage 5: constraints, scans pruned to target partitions ----------
     target_pages = slim.join(
@@ -583,12 +596,17 @@ def _validate_body(
             F.col("triggered").alias("triggered_algorithms"),
         )
     )
-    # cached: the sidecar is example-capped (tiny) but PRODUCING it scans
-    # slim twice (uniqueness shuffle + referential), and it has two
-    # consumers — the returned sidecar and the per-pair constraint counts
-    # folded into verdicts below. Without the cache each action pays the
-    # constraint scans again.
-    violations = violations.unionAll(drift_viol).cache()
+    # barrier "violations": the sidecar is example-capped (tiny) but
+    # PRODUCING it scans slim twice (uniqueness shuffle + referential), and
+    # it has two consumers — the returned sidecar and the per-pair
+    # constraint counts folded into verdicts below. Without the barrier
+    # each action pays the constraint scans again. The union keeps every
+    # branch's partitions (10 on a daily resume, most of them empty), and
+    # a barrier keeps its input's partitioning, so rebalance first: AQE
+    # coalesces the tiny sidecar, and each read of it is one task or two.
+    violations = store.barrier(
+        violations.unionAll(drift_viol).hint("rebalance"), "violations"
+    )
 
     # ---- stage 6: per-(partition, lang) verdict assembly -------------------
     drift_agg = drift.groupBy(*PARTITION_COLS).agg(
@@ -612,7 +630,9 @@ def _validate_body(
     )
     n_constraint_checks = 3 + len(static_rules)  # uniqueness + lang + warc_ts + statics
 
-    verdicts = (
+    # barrier "verdicts": one row per partition×lang, consumed by the caller
+    # AND the checkpoint and run-metrics rows below
+    verdicts = store.barrier((
         gated.join(drift_agg, PARTITION_COLS, "left")
         .join(pair_viol, PARTITION_COLS, "left")
         .select(
@@ -647,8 +667,7 @@ def _validate_body(
             F.col("ensemble"),
             F.col("consensus"),
         )
-    ).cache()  # one row per partition×lang; consumed by the caller AND the
-    # checkpoint rows below
+    ), "verdicts")
 
     # ---- stage 7: checkpoint rows ------------------------------------------
     # timestamp_seconds: the stored INSTANT is the epoch run_ts regardless
@@ -659,8 +678,11 @@ def _validate_body(
     # log-histogram re-bins it, the GK sketch folds it — the page table is
     # not re-touched for either. Cached (tiny: distinct lengths per
     # partition x lang) so the two joins share the scan instead of each
-    # re-aggregating the slim blocks.
+    # re-aggregating the slim blocks. A cache, not a barrier: one level
+    # above the slim barrier its plan is already small, and a barrier read
+    # counts every row where a cached read counts one record per batch.
     len_hist = length_histogram(slim).cache()
+    store.cached.append(len_hist)
     stat_digests = stat_digest_blobs(stats, len_hist)
     version_map = F.map_from_arrays(
         F.array(*[F.lit(k) for k in DETECTOR_VERSIONS]),
@@ -727,8 +749,5 @@ def _validate_body(
         run_metrics=run_metrics,
         run_id=run_id,
         config=cfg,
-        _cached=[targets, drift, violations, verdicts, len_hist]
-        + [c for c in (hist_cache, narrow_cache) if c is not None],
-        _ckpt_rdd_ids=_ckpt_rdd_ids,
-        _scratch_run_dir=scratch_run_dir,
+        _storage=store,
     )

@@ -734,6 +734,31 @@ def _plan_files(df) -> set[str]:
     return files
 
 
+def _resumed_result(spark, tmp_path, pruned):
+    """A validate() resumed from a one-run checkpoint, and the checkpoint
+    location's resolved path."""
+    from pathlib import Path
+
+    from skyline_spark.config import ValidationConfig
+    from skyline_spark.plans.checkpoint import append_checkpoint
+    from skyline_spark.plans.validate import validate
+    from skyline_spark.sources.synth import synth_pages
+
+    pages_path = str(tmp_path / "pages")
+    ckpt = str(tmp_path / "ckpt")
+    synth_pages(spark, 3_000, 6, defects=False).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    first = validate(pages, checkpoint_path=ckpt, run_id="r1", run_ts=1_786_060_800.0)
+    append_checkpoint(first.checkpoint, ckpt)
+    first.release()
+    assert any(Path(ckpt).rglob("*.parquet"))
+    res = validate(
+        pages, ValidationConfig(pruned_resume=pruned), checkpoint_path=ckpt,
+        run_id="r2", run_ts=1_786_060_900.0,
+    )
+    return res, ckpt
+
+
 @pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
 def test_validation_result_never_reads_the_checkpoint(spark, tmp_path, pruned):
     # validate() reads the checkpoint once, behind a barrier: no frame it
@@ -745,25 +770,10 @@ def test_validation_result_never_reads_the_checkpoint(spark, tmp_path, pruned):
 
     from pyspark.sql import DataFrame
 
-    from skyline_spark.config import ValidationConfig
-    from skyline_spark.plans.checkpoint import append_checkpoint, load_checkpoint
-    from skyline_spark.plans.validate import validate
-    from skyline_spark.sources.synth import synth_pages
+    from skyline_spark.plans.checkpoint import load_checkpoint
 
-    pages_path = str(tmp_path / "pages")
-    ckpt = str(tmp_path / "ckpt")
-    synth_pages(spark, 3_000, 6, defects=False).write.parquet(pages_path)
-    pages = spark.read.parquet(pages_path)
-    first = validate(pages, checkpoint_path=ckpt, run_id="r1", run_ts=1_786_060_800.0)
-    append_checkpoint(first.checkpoint, ckpt)
-    first.release()
+    res, ckpt = _resumed_result(spark, tmp_path, pruned)
     ckpt_dir = str(Path(ckpt).resolve())
-    assert any(Path(ckpt).rglob("*.parquet"))
-
-    res = validate(
-        pages, ValidationConfig(pruned_resume=pruned), checkpoint_path=ckpt,
-        run_id="r2", run_ts=1_786_060_900.0,
-    )
     frames = {
         f.name: getattr(res, f.name)
         for f in dataclasses.fields(res)
@@ -776,6 +786,30 @@ def test_validation_result_never_reads_the_checkpoint(spark, tmp_path, pruned):
     direct.unpersist()
     for name, df in frames.items():
         assert not [p for p in _plan_files(df) if ckpt_dir in p], name
+    res.release()
+
+
+def _nested_caches(df) -> int:
+    """How many cached relations in ``df``'s plan scan another cache."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "InMemoryRelation":
+            n += "InMemoryTableScan" in leaf.cachedPlan().toString()
+    return n
+
+
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_lineage_frames_plan_small(spark, tmp_path, pruned):
+    # the frames the caller writes start from barrier leaves: each plans in
+    # KBs, and no cached relation nests another cache's plan inside it (a
+    # nest is re-planned — MBs of plan text — by every write over it)
+    res, _ = _resumed_result(spark, tmp_path, pruned)
+    for name in ("verdicts", "violations", "checkpoint", "run_metrics"):
+        df = getattr(res, name)
+        assert len(plan_of(df, "extended")) < 100_000, name
+        assert _nested_caches(df) == 0, name
     res.release()
 
 

@@ -277,11 +277,11 @@ def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     assert got == want
     assert res.violations.count() == result.violations.count()
 
-    # the three barriers landed as parquet under one per-run directory
+    # the seven barriers landed as parquet under one per-run directory
     run_dirs = os.listdir(scratch)
     assert len(run_dirs) == 1
     assert sorted(os.listdir(os.path.join(scratch, run_dirs[0]))) == [
-        "samples", "slim", "stats",
+        "drift", "samples", "slim", "stats", "targets", "verdicts", "violations",
     ]
     res.release()
     assert not os.path.exists(os.path.join(scratch, run_dirs[0]))
@@ -306,6 +306,39 @@ def test_scratch_dir_cleaned_up_on_failure(spark, tmp_path):
     # parent may exist, but no per-run directory (and no parquet) survives
     leftovers = os.listdir(scratch) if os.path.exists(scratch) else []
     assert leftovers == []
+
+
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_failed_run_releases_its_blocks(spark, tmp_path, pruned):
+    """A validate() that fails after its barriers and caches are filled
+    must free them on the way out: release() is unreachable on the
+    exception path, and a long-lived session would keep every failed run's
+    localCheckpoint blocks."""
+    from skyline_spark.plans.constraints import StaticRule
+
+    pages_path = str(tmp_path / "pages")
+    ckpt = str(tmp_path / "ckpt")
+    synth_pages(spark, 2_000, 4, defects=False).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    if pruned:
+        seed = validate(pages, checkpoint_path=ckpt, run_id="seed", run_ts=RUN_TS)
+        append_checkpoint(seed.checkpoint, ckpt)
+        seed.release()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def live_rdds():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    before = live_rdds()
+    with pytest.raises(ValueError, match="unknown op"):
+        validate(
+            pages,
+            ValidationConfig(pruned_resume=pruned),
+            checkpoint_path=ckpt,
+            run_ts=RUN_TS,
+            static_rules=(StaticRule("row_count", "no_such_op", 1.0),),
+        )
+    assert live_rdds() <= before
 
 
 # ---------------------------------------------------------------------------
@@ -660,18 +693,20 @@ def test_run_metrics_match_written_verdicts_in_submit_order(
     assert dict(m["exceptions"]) == {
         s: sum(r["status"] == s for r in written) for s in skips
     }
-    # the checkpoint read is one more barrier, and release() frees it too
+    # the checkpoint read is one more barrier (the pruned run adds
+    # "narrow"), and release() frees them all
     jsc = spark.sparkContext._jsc.sc()
 
     def live_rdds():
         return {info.id() for info in jsc.getRDDStorageInfo()}
 
-    barrier_rdds = set(res._ckpt_rdd_ids)
+    barrier_rdds = set(res._storage.rdd_ids)
     if scratch:
         (run_dir,) = os.listdir(scratch_dir)
         assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
     else:
-        assert len(barrier_rdds) == 4 and barrier_rdds <= live_rdds()
+        assert len(barrier_rdds) == (9 if pruned else 8)
+        assert barrier_rdds <= live_rdds()
     res.release()
     assert not barrier_rdds & live_rdds()
     if scratch:
