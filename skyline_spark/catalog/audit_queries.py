@@ -1169,7 +1169,7 @@ ORDER BY d.lang
         "type-1 p99 of n_chars (integer ceil((99·n)/100) rank — no float "
         "quantile), documents clamped to it, clipped count and char mass "
         "before/after reported integer-exact; at scale the p99 comes from "
-        "the checkpoint's GK/t-digest sketches and this exact form is the "
+        "the checkpoint's log-histogram digests and this exact form is the "
         "audit",
 )
 def winsorize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:

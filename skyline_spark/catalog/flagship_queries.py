@@ -691,18 +691,16 @@ def validate_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIGEST_QS = (0.25, 0.5, 0.9, 0.99)
 
 _DIGEST_OUT = (
-    "lang string, q double, exact_len double, n long, "
-    "gk_rank_ok boolean, digest_value_ok boolean"
+    "lang string, q double, exact_len double, n long, digest_value_ok boolean"
 )
 
 
 def _digest_merge_fn(pdf):
-    """One lang group: parse every partition's checkpoint blob, merge the GK
-    sketches (merge_many — 2·eps bound at any fan-in) and the log-histogram
-    digests (count addition), then judge each quantile estimate against the
-    group's exact length histogram using the PROVEN bounds:
-    GK rank error ≤ 2·eps·n + 1 (tests/test_gk.py convention), log-histogram
-    value error within one bin (relative ≤ 2^(1/K) − 1 on len+1)."""
+    """One lang group: parse every partition's checkpoint blob, merge the
+    log-histogram digests (count addition), then judge each quantile
+    estimate against the group's exact length histogram: the merged total
+    is the exact row count, and the value error is within one bin (relative
+    ≤ 2^(1/K) − 1 on len+1) — the digest's PROVEN bound."""
     import math
 
     import numpy as np
@@ -710,15 +708,14 @@ def _digest_merge_fn(pdf):
 
     from ..operators.digest import (
         digest_quantile,
+        digest_total,
         merge_digests,
         parse_checkpoint_digest,
     )
-    from ..operators.gk import GKSketch
-    from ..plans.stats import DIGEST_BINS_PER_OCTAVE, GK_EPS
+    from ..plans.stats import DIGEST_BINS_PER_OCTAVE
 
     lang = pdf["lang"].iat[0]
     parsed = [parse_checkpoint_digest(b) for b in pdf["stat_digests"] if b is not None]
-    gk = GKSketch.merge_many([d["len_gk"] for d in parsed if d["len_gk"]])
     digest = merge_digests(d["len_digest"] for d in parsed)
     # exact corpus histogram: every row carries the same lang-level arrays
     lens = np.asarray(pdf["_lens"].iat[0], dtype=np.float64)
@@ -732,24 +729,17 @@ def _digest_merge_fn(pdf):
     for q in _DIGEST_QS:
         need = max(1, math.ceil(q * n))
         exact = float(lens[np.searchsorted(cum, need)])
-        # GK: the returned value's occupied rank interval must come within
-        # 2·eps·n (+1) of the target rank
-        v = gk.quantile(q)
-        lo = int(np.searchsorted(lens, v, side="left"))
-        hi = int(np.searchsorted(lens, v, side="right"))
-        rank_lo = (int(cum[lo - 1]) + 1) if lo > 0 else 1
-        rank_hi = int(cum[hi - 1]) if hi > 0 else 0
-        err = max(0, rank_lo - need, need - rank_hi)
-        gk_ok = bool(gk.n == n and err <= 2 * GK_EPS * n + 1)
-        # log-histogram: estimate is the upper edge of the exact value's bin
+        # the merged digest counts every row once, and its estimate is the
+        # upper edge of the exact value's bin
         est = digest_quantile(digest, q)
         digest_ok = bool(
-            est >= exact - 1e-9 and (est + 1.0) <= (exact + 1.0) * rel + 1e-9
+            digest_total(digest) == n
+            and est >= exact - 1e-9
+            and (est + 1.0) <= (exact + 1.0) * rel + 1e-9
         )
-        out.append((lang, float(q), exact, n, gk_ok, digest_ok))
+        out.append((lang, float(q), exact, n, digest_ok))
     return pd.DataFrame(
-        out,
-        columns=["lang", "q", "exact_len", "n", "gk_rank_ok", "digest_value_ok"],
+        out, columns=["lang", "q", "exact_len", "n", "digest_value_ok"]
     )
 
 
@@ -758,7 +748,7 @@ def exact_quantile_oracle_sql(qs, verdict_cols) -> str:
     oracle appends to ``_PAGES_SQL``: per-lang type-1 corpus quantiles of
     text length (smallest length whose cumulative count reaches
     ``ceil(q*total)``, clamped to rank 1) with the sketch-bound verdict
-    columns pinned ``true``. ONE definition so the GK/log-histogram oracle
+    columns pinned ``true``. ONE definition so the log-histogram oracle
     and the t-digest oracle (catalog/sketch_queries.py) can never assert
     different ground truths."""
     verdicts = ",\n       ".join(f"true AS {c}" for c in verdict_cols)
@@ -782,7 +772,7 @@ GROUP BY g, q ORDER BY g, q
 
 
 _DIGEST_SQL = _PAGES_SQL + exact_quantile_oracle_sql(
-    _DIGEST_QS, ["gk_rank_ok", "digest_value_ok"]
+    _DIGEST_QS, ["digest_value_ok"]
 )
 
 
@@ -790,12 +780,12 @@ _DIGEST_SQL = _PAGES_SQL + exact_quantile_oracle_sql(
     "checkpoint_digest_quantiles",
     _DIGEST_SQL,
     doc="north-star mergeable-sketch round trip: per-partition checkpoint "
-        "blobs (the PRODUCTION stat_digest_blobs assembly — GK sketch + "
-        "log-histogram per partition×lang) are parsed back, merged to corpus "
-        "level (GKSketch.merge_many / count addition), and every quantile "
-        "estimate is judged against exact type-1 corpus quantiles inside the "
-        "proven bounds (rank ≤ 2·eps·n+1; value within one log bin); the "
-        "oracle pins the exact quantiles and asserts the bound booleans",
+        "blobs (the PRODUCTION stat_digest_blobs assembly — one log-histogram "
+        "per partition×lang) are parsed back, merged to corpus level by "
+        "count addition, and every quantile estimate is judged against "
+        "exact type-1 corpus quantiles inside the proven bound (value within "
+        "one log bin); the oracle pins the exact quantiles and asserts the "
+        "bound boolean",
 )
 def checkpoint_digest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.stats import (
@@ -807,7 +797,7 @@ def checkpoint_digest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     slim = slim_pages(_derived_pages(spark, sf_dir))
     len_hist = length_histogram(slim)
-    blobs = stat_digest_blobs(partition_stats(slim), len_hist)
+    blobs = stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
     # corpus-exact histogram per lang, carried into the merge kernel as two
     # bounded arrays (distinct text lengths ≤ a few hundred by construction)
     corpus = (

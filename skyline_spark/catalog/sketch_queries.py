@@ -29,7 +29,7 @@ counts — they are computed here BECAUSE the query's point is to audit the
 sketch against them.
 
 Reference analog: none — this extends the reference's scope alongside the
-GK/log-histogram digests (SURVEY north-star "mergeable sketches").
+checkpoint's log-histogram digest (SURVEY north-star "mergeable sketches").
 """
 
 from __future__ import annotations
@@ -111,7 +111,7 @@ def _bucket_expr(i: int, tok: F.Column) -> F.Column:
     doc="Count-Min-Sketch heavy hitters (Cormode & Muthukrishnan 2005): a "
         f"{CMS_D}x{CMS_W} int64 grid built in one pass (cell-wise additive "
         "→ map-side partials, mergeable across partitions/crawls like the "
-        "checkpoint's GK/log-histogram digests), then the exact top-"
+        "checkpoint's log-histogram digest), then the exact top-"
         f"{CMS_TOP_K} tokens are point-estimated (min over rows — always "
         "an overcount) and judged against the (e/W)·N bound in fixed-point "
         "integer arithmetic; the oracle rebuilds the identical grid from "
@@ -177,8 +177,10 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantiles judged against exact ranks
 # ---------------------------------------------------------------------------
 #
-# north_star names "quantile sketches via t-digest/GK"; the GK leg rides the
-# production checkpoint blob (flagship_queries.checkpoint_digest_quantiles).
+# north_star names "quantile sketches via t-digest/GK"; the production
+# checkpoint blob carries the log-histogram digest instead
+# (flagship_queries.checkpoint_digest_quantiles), and the GK sketch is a
+# standalone operator (operators/gk.py, tests/test_gk.py).
 # This query exercises the t-digest leg (operators/tdigest.py) over the SAME
 # deterministic page table and length histogram: build one k0 merging digest
 # per (partition_date, lang) from the histogram rows, merge each lang's

@@ -1,7 +1,8 @@
 """Mergeable quantile-digest helpers for the checkpoint lineage.
 
-The digest itself is built distributed (plans/stats.length_digest): a
-fixed-boundary log histogram ``{bin: count}`` where bin ``b`` covers
+The digest itself is built distributed (plans/stats.length_digest, which
+re-bins the plans/stats.length_histogram counts): a fixed-boundary log
+histogram ``{bin: count}`` where bin ``b`` covers
 ``[2^(b/K)−1, 2^((b+1)/K)−1)`` with ``K = DIGEST_BINS_PER_OCTAVE``. Fixed
 global boundaries give the t-digest/KLL property that matters operationally
 — digests from different partitions, snapshots, or whole runs merge by
@@ -32,18 +33,16 @@ __all__ = [
 
 def parse_checkpoint_digest(blob: bytes | str) -> dict:
     """Decode the checkpoint's ``stat_digests`` blob →
-    ``{"stats": {name: value}, "len_digest": {bin(int): count(int)},
-    "len_gk": GKSketch | None}``."""
-    from .gk import GKSketch
+    ``{"stats": {name: value}, "len_digest": {bin(int): count(int)}}``.
 
+    Blobs written before the checkpoint dropped its GK sketch also carry a
+    ``len_gk`` key (a nested JSON string); it is discarded, so old and new
+    rows parse to the same shape and their digests merge together."""
     if isinstance(blob, (bytes, bytearray)):
         blob = bytes(blob).decode("utf-8")
     d = json.loads(blob)
+    d.pop("len_gk", None)
     d["len_digest"] = {int(k): int(v) for k, v in (d.get("len_digest") or {}).items()}
-    # len_gk rides the blob as a nested JSON string (the sketch column is
-    # already serialized when the blob is assembled)
-    gk_raw = d.get("len_gk")
-    d["len_gk"] = GKSketch.from_dict(json.loads(gk_raw)) if gk_raw else None
     return d
 
 

@@ -1,12 +1,12 @@
-"""Greenwald-Khanna quantile sketch — the checkpoint's rank-error-bounded
-mergeable digest.
+"""Greenwald-Khanna quantile sketch — a rank-error-bounded mergeable digest.
 
 north_star names "quantile sketches via t-digest/GK" for the checkpoint's
-stat digests. The log-histogram digest (operators/digest.py) bounds
-RELATIVE VALUE error (~9%); this GK sketch is the complementary guarantee —
-bounded RANK error: any quantile read off a single sketch is within
-``eps * n`` ranks of exact, and the sketch size is O((1/eps) * log(eps*n))
-regardless of input size.
+stat digests. The checkpoint carries only the log-histogram digest
+(operators/digest.py), which bounds RELATIVE VALUE error (~9%) and merges
+by count addition; this GK sketch is the complementary guarantee, kept as
+a standalone operator — bounded RANK error: any quantile read off a
+single sketch is within ``eps * n`` ranks of exact, and the sketch size is
+O((1/eps) * log(eps*n)) regardless of input size.
 
 Published algorithm (Greenwald & Khanna, "Space-Efficient Online Computation
 of Quantile Summaries", SIGMOD 2001; merge via rank bounds per Greenwald &
@@ -33,10 +33,9 @@ implementation — entries are (value, g, delta, c) with the classic invariant
   bound per level (~depth * eps) — roll partition sketches up with a
   single merge_many, not a fold.
 
-The sketch is JSON-serializable (``to_dict``/``from_dict``) and rides the
-checkpoint's ``stat_digests`` blob next to the log-histogram
-(plans/validate.py stage 7), so per-partition lineage rows merge into
-exact-bounded corpus quantiles without re-touching data.
+The sketch is JSON-serializable (``to_dict``/``from_dict``). It is not part
+of the checkpoint's ``stat_digests`` blob; operators/digest.py discards the
+``len_gk`` key that older blobs carry.
 """
 
 from __future__ import annotations

@@ -1,13 +1,14 @@
 """Merging t-digest — the centroid quantile sketch named by north_star.
 
 north_star names "quantile sketches via t-digest/GK" for the checkpoint's
-stat digests. The checkpoint already carries the two PROVEN-bound digests
-(GK: rank error <= 2*eps*n at any merge fan-in, operators/gk.py; fixed-bin
-log-histogram: relative value error <= 2^(1/K)-1, operators/digest.py).
-This module adds the t-digest itself (Dunning & Ertl, "Computing Extremely
-Accurate Quantiles Using t-Digests", 2019), the family's adaptive member:
-centroid positions follow the data, so it resolves quantiles of arbitrary
-real-valued distributions without pre-chosen bins and with O(delta) size.
+stat digests. The checkpoint carries one PROVEN-bound digest, the fixed-bin
+log-histogram (relative value error <= 2^(1/K)-1, operators/digest.py);
+the GK sketch (rank error <= 2*eps*n at any merge fan-in, operators/gk.py)
+is a standalone operator. This module adds the t-digest itself (Dunning &
+Ertl, "Computing Extremely Accurate Quantiles Using t-Digests", 2019), the
+family's adaptive member: centroid positions follow the data, so it
+resolves quantiles of arbitrary real-valued distributions without
+pre-chosen bins and with O(delta) size.
 
 Design choices, stated for what they buy:
 
@@ -15,8 +16,8 @@ Design choices, stated for what they buy:
   the clean invariant this repo's sketch family is built around — every
   merged centroid's weight is <= ``ceil(2*n/delta)`` (single repeated
   values may exceed the cap but are then EXACT, a pure-duplicate
-  centroid) — at the cost of k1's extra tail resolution. The repo's tail
-  guarantees already come from GK; the t-digest's job here is the
+  centroid) — at the cost of k1's extra tail resolution. The repo's
+  rank-bounded tails come from GK; the t-digest's job here is the
   adaptive middle.
 - **Batch build from a sorted value->count histogram** — the shape
   ``plans/stats.length_histogram`` already aggregates — so construction

@@ -14,8 +14,9 @@ Scale notes (10^12 rows):
   aggregation, one shuffle of pre-aggregated data, no collect;
 - the sample is hash-selected (``xxhash64(url) % K < r``), NOT rand(), so
   retries/speculative tasks produce identical rows; the rate is derived
-  from a first cheap count pass so each partition lands ≈ sample_cap rows
-  regardless of partition size (no unbounded collect_list);
+  from the length histogram's per-partition totals so each partition lands
+  ≈ sample_cap rows regardless of partition size (no unbounded
+  collect_list);
 - the content fingerprint is a commutative SUM of row hashes — mergeable,
   order-independent, and usable as a snapshot id for resume (a changed
   partition changes its fingerprint). Equivalent to an Iceberg snapshot-id
@@ -28,7 +29,6 @@ vector persisted in the checkpoint table.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
@@ -37,12 +37,11 @@ __all__ = [
     "narrow_partition_keys",
     "stat_samples",
     "slim_pages",
+    "length_histogram",
     "length_digest",
-    "length_gk",
     "DRIFT_STATS",
     "PARTITION_COLS",
     "DIGEST_BINS_PER_OCTAVE",
-    "GK_EPS",
 ]
 
 PARTITION_COLS = ["partition_date", "lang"]
@@ -125,19 +124,18 @@ def narrow_partition_keys(pages: DataFrame, native_col: str | None = None) -> Da
     return narrow.groupBy(*PARTITION_COLS).agg(*aggs)
 
 
-def partition_stats(pages: DataFrame) -> DataFrame:
-    """Long-form per-(partition, lang) stats in two codegen'd agg passes.
+def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
+    """Long-form per-(partition, lang) stats: one codegen'd agg pass plus
+    the exact length percentiles read off ``len_hist``.
 
-    Pass 1: all algebraic/sketch aggregates (count, null rates, avg, HLLs,
+    The pass: all algebraic/sketch aggregates (count, null rates, avg, HLLs,
     fingerprint) — one whole-stage-codegen HashAggregate, map-side partials,
     one shuffle of pre-aggregated rows.
 
-    Pass 2: EXACT text-length percentiles from a (partition, lang, len)
-    histogram + window cumsum. ``percentile_approx`` is an
-    ObjectHashAggregate (row-at-a-time, no codegen) and measured ~30x
-    slower than this at 2M rows; the histogram stays codegen'd because
-    text_len is a bounded integer (groups = partitions x langs x distinct
-    lengths — bounded at any table size, so this scales to 10^12 rows).
+    EXACT text-length percentiles come from ``len_hist``
+    (:func:`length_histogram` of the same pages) + a window cumsum.
+    ``percentile_approx`` is an ObjectHashAggregate (row-at-a-time, no
+    codegen) and measured ~30x slower than the histogram at 2M rows.
     Exact percentiles also make the stat series noise-free for drift.
     """
     pages = slim_pages(pages)
@@ -161,7 +159,7 @@ def partition_stats(pages: DataFrame) -> DataFrame:
         F.col("url_approx_distinct") / F.greatest(F.col("row_count"), F.lit(1)),
     )
 
-    pct = _exact_length_percentiles(pages, text_len)
+    pct = _exact_length_percentiles(len_hist)
     wide = wide.join(pct, PARTITION_COLS, "left")
 
     stat_cols = DRIFT_STATS + ["null_rate_html", "text_len_distinct"]
@@ -174,19 +172,14 @@ def partition_stats(pages: DataFrame) -> DataFrame:
     return long
 
 
-def _exact_length_percentiles(pages: DataFrame, text_len) -> DataFrame:
-    """Exact p50/p95 of an integer-valued column via histogram + cumsum.
+def _exact_length_percentiles(hist: DataFrame) -> DataFrame:
+    """Exact p50/p95 of text_len from its (partition, lang, len) histogram.
 
     Inverted-CDF (type-1) quantile: smallest value whose cumulative count
-    reaches ceil(q * total). One codegen'd 3-key count, one tiny window.
+    reaches ceil(q * total). One tiny window over the histogram rows.
     """
     from pyspark.sql import Window
 
-    hist = (
-        pages.where(text_len.isNotNull())
-        .groupBy(*PARTITION_COLS, text_len.alias("len"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
     w = Window.partitionBy(*PARTITION_COLS).orderBy("len")
     wp = Window.partitionBy(*PARTITION_COLS)
     cum = hist.withColumn("cum", F.sum("cnt").over(w)).withColumn(
@@ -210,10 +203,14 @@ DIGEST_BINS_PER_OCTAVE = 8
 
 
 def length_histogram(pages: DataFrame) -> DataFrame:
-    """Per-(partition, lang, text_len) counts — the ONE scan both digest
-    legs (log-histogram + GK sketch) derive from. text_len is a bounded
-    integer, so the group count is bounded by partitions x langs x distinct
-    lengths at any table size and the agg stays whole-stage-codegen'd."""
+    """Per-(partition, lang, text_len) counts of the non-null lengths — the
+    ONE count of the page lengths. validate() materializes it once and
+    feeds it to the exact p50/p95 (:func:`partition_stats`), the sampling
+    keep-rates (:func:`stat_samples`: a pair's total is its non-null text
+    count) and the checkpoint digest (:func:`stat_digest_blobs`). text_len
+    is a bounded integer, so the group count is bounded by partitions x
+    langs x distinct lengths at any table size and the agg stays
+    whole-stage-codegen'd."""
     pages = slim_pages(pages)
     return (
         pages.where(F.col("text_len").isNotNull())
@@ -222,8 +219,9 @@ def length_histogram(pages: DataFrame) -> DataFrame:
     )
 
 
-def length_digest(pages: DataFrame) -> DataFrame:
-    """Mergeable per-(partition, lang) quantile digest of text_len.
+def length_digest(hist: DataFrame) -> DataFrame:
+    """Mergeable per-(partition, lang) quantile digest of text_len, re-binned
+    from :func:`length_histogram`'s tiny pre-aggregated counts.
 
     north_star: the checkpoint carries "stat digests (mergeable sketches)".
     A fixed-boundary log histogram is the simplest digest with the t-digest/
@@ -232,12 +230,6 @@ def length_digest(pages: DataFrame) -> DataFrame:
     K·log2(max_len) entries regardless of row count. Quantiles of any UNION
     of partitions come from the merged counts (operators/digest.py).
     """
-    return length_digest_from_hist(length_histogram(pages))
-
-
-def length_digest_from_hist(hist: DataFrame) -> DataFrame:
-    """Log-histogram digest from the shared length_histogram frame —
-    re-binning the tiny pre-aggregated counts, not the page table."""
     b = (
         F.floor(F.log2(F.col("len") + F.lit(1.0)) * DIGEST_BINS_PER_OCTAVE)
         .cast("int")
@@ -250,51 +242,6 @@ def length_digest_from_hist(hist: DataFrame) -> DataFrame:
             F.sort_array(F.collect_list(F.struct("bin", "cnt")))
         ).alias("len_digest")
     )
-
-
-#: rank-error bound of the checkpoint's Greenwald-Khanna length sketch
-GK_EPS = 0.01
-
-
-def length_gk(pages: DataFrame) -> DataFrame:
-    """Per-(partition, lang) GK sketch of text_len — wrapper over
-    :func:`length_gk_from_hist` for standalone use."""
-    return length_gk_from_hist(length_histogram(pages))
-
-
-def length_gk_from_hist(hist: DataFrame) -> DataFrame:
-    """Per-(partition, lang) Greenwald-Khanna sketch of text_len as a JSON
-    column — the checkpoint's rank-error-bounded quantile digest
-    (operators/gk.py; north_star "quantile sketches via t-digest/GK").
-
-    Built from the shared length_histogram frame (the same bounded-integer
-    (len, count) shape the exact-percentile pass uses): an Arrow-batched
-    pandas UDF folds each group's sorted histogram into a sketch. No
-    per-row Python — the UDF sees one row per (partition, lang) whose
-    payload is the histogram array, bounded by the distinct-length count
-    at any table size.
-    """
-    import json
-
-    from pyspark.sql.functions import pandas_udf
-
-    from ..operators.gk import GKSketch
-
-    @pandas_udf("string")
-    def _gk(hists: pd.Series) -> pd.Series:
-        out = []
-        for h in hists:
-            sk = GKSketch.from_value_counts(
-                [float(e["len"]) for e in h], [int(e["cnt"]) for e in h],
-                eps=GK_EPS,
-            )
-            out.append(json.dumps(sk.to_dict()))
-        return pd.Series(out)
-
-    arr = hist.groupBy(*PARTITION_COLS).agg(
-        F.sort_array(F.collect_list(F.struct("len", "cnt"))).alias("_h")
-    )
-    return arr.select(*PARTITION_COLS, _gk(F.col("_h")).alias("len_gk"))
 
 
 #: hash-space denominator of the sampling keep-rate
@@ -320,19 +267,20 @@ def _keep_rate_expr(count_col, sample_cap: int):
     )
 
 
-def stat_samples(pages: DataFrame, sample_cap: int = 512) -> DataFrame:
+def stat_samples(
+    pages: DataFrame, len_hist: DataFrame, sample_cap: int = 512
+) -> DataFrame:
     """Deterministic ≤ sample_cap text-length sample per (partition, lang).
 
-    Two cheap passes: (1) per-partition counts → per-partition keep-rate,
-    (2) hash-filtered scan + bounded collect. The joined rate table is tiny
+    The per-partition keep-rate comes from ``len_hist``'s totals (the
+    non-null text count of each pair, :func:`length_histogram`); then one
+    hash-filtered scan + bounded collect. The joined rate table is tiny
     (one row per partition) → broadcast join, no extra shuffle of page data.
     """
     pages = slim_pages(pages).where(~F.col("text_null"))
-    counts = pages.groupBy(*PARTITION_COLS).count()
     denom = SAMPLE_DENOM
-    rates = counts.select(
-        *PARTITION_COLS,
-        _keep_rate_expr(F.col("count"), sample_cap).alias("keep_below"),
+    rates = len_hist.groupBy(*PARTITION_COLS).agg(
+        _keep_rate_expr(F.sum("cnt"), sample_cap).alias("keep_below")
     )
     sampled = (
         pages.join(F.broadcast(rates), PARTITION_COLS)
@@ -365,16 +313,15 @@ def stat_samples(pages: DataFrame, sample_cap: int = 512) -> DataFrame:
 
 def stat_digest_blobs(stats_long: DataFrame, len_hist: DataFrame) -> DataFrame:
     """Per-(partition, lang) checkpoint blob: ``{"stats": scalar map,
-    "len_digest": log-histogram, "len_gk": GK sketch}`` as one JSON binary.
+    "len_digest": log-histogram}`` as one JSON binary.
 
-    The north-star "stat digests (mergeable sketches)" column: the
-    log-histogram's bin boundaries are global constants so digests from any
-    set of checkpoint rows merge by count addition (operators/digest.py);
-    the GK sketch complements it with a RANK-error bound — sketches from
-    any set of rows combine via GKSketch.merge_many with a 2·eps guarantee
-    at any fan-in (operators/gk.py). Factored out of validate() so the
-    round-trip query (catalog/flagship_queries.py
-    ``checkpoint_digest_quantiles``) exercises the production assembly.
+    The north-star "stat digests (mergeable sketches)" column, one digest
+    per pair: the log-histogram re-binned from ``len_hist``. Its bin
+    boundaries are global constants, so digests from any set of checkpoint
+    rows merge by count addition with a bounded relative VALUE error
+    (operators/digest.py). Factored out of validate() so the round-trip
+    query (catalog/flagship_queries.py ``checkpoint_digest_quantiles``)
+    exercises the production assembly.
     """
     scalar_map = F.map_from_entries(
         F.collect_list(F.struct(F.col("stat"), F.col("value")))
@@ -382,16 +329,11 @@ def stat_digest_blobs(stats_long: DataFrame, len_hist: DataFrame) -> DataFrame:
     return (
         stats_long.groupBy(*PARTITION_COLS)
         .agg(scalar_map.alias("_stats_map"))
-        .join(length_digest_from_hist(len_hist), PARTITION_COLS, "left")
-        .join(length_gk_from_hist(len_hist), PARTITION_COLS, "left")
+        .join(length_digest(len_hist), PARTITION_COLS, "left")
         .select(
             *PARTITION_COLS,
             F.to_json(
-                F.struct(
-                    F.col("_stats_map").alias("stats"),
-                    F.col("len_digest"),
-                    F.col("len_gk"),
-                )
+                F.struct(F.col("_stats_map").alias("stats"), F.col("len_digest"))
             ).cast("binary").alias("stat_digests"),
         )
     )

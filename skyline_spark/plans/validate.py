@@ -449,22 +449,30 @@ def _validate_body(
         )
 
     slim = store.barrier(slim_pages(pages), "slim")
+    # the ONE (partition, lang, text_len) count over slim: exact p50/p95
+    # (stats), the sampling keep-rates (samples) and the checkpoint's
+    # log-histogram digest (stage 7) all read it. Tiny — distinct lengths
+    # per partition x lang — and a barrier BEFORE the pool below: a lazy
+    # cache read by two concurrent jobs would be computed by both
+    len_hist = store.barrier(length_histogram(slim), "len_hist")
     # stats/samples are checkpoint-sized (one row per partition×lang[×stat])
     # — materialize them once too, collapsing every downstream branch
     # (row-count gate, drift, statics, digests, fingerprints) into trivial
     # scans of in-memory tables instead of repeated agg jobs over slim.
-    # Submitted CONCURRENTLY: both read the already-materialized slim blocks
-    # (no recompute race — that was the round-1 bug with a LAZY persist), and
-    # the two small agg jobs would otherwise serialize their fixed stage
-    # latencies back-to-back
+    # Submitted CONCURRENTLY: both read the already-materialized slim and
+    # len_hist blocks (no recompute race — that was the round-1 bug with a
+    # LAZY persist), and the two small agg jobs would otherwise serialize
+    # their fixed stage latencies back-to-back
     import concurrent.futures as _cf
 
     with _cf.ThreadPoolExecutor(2) as _ex:
         _f_stats = _ex.submit(
-            lambda: store.barrier(partition_stats(slim), "stats")
+            lambda: store.barrier(partition_stats(slim, len_hist), "stats")
         )
         _f_samples = _ex.submit(
-            lambda: store.barrier(stat_samples(slim, cfg.sample_cap), "samples")
+            lambda: store.barrier(
+                stat_samples(slim, len_hist, cfg.sample_cap), "samples"
+            )
         )
         stats = _f_stats.result()
         samples = _f_samples.result()
@@ -674,15 +682,7 @@ def _validate_body(
     # of spark.sql.session.timeZone — a naive datetime literal would be
     # read in the session zone, shifting lineage by its UTC offset
     validated_at = F.timestamp_seconds(F.lit(float(run_ts)))
-    # both digest legs derive from ONE histogram scan of slim: the
-    # log-histogram re-bins it, the GK sketch folds it — the page table is
-    # not re-touched for either. Cached (tiny: distinct lengths per
-    # partition x lang) so the two joins share the scan instead of each
-    # re-aggregating the slim blocks. A cache, not a barrier: one level
-    # above the slim barrier its plan is already small, and a barrier read
-    # counts every row where a cached read counts one record per batch.
-    len_hist = length_histogram(slim).cache()
-    store.cached.append(len_hist)
+    # the digest re-bins the len_hist barrier: slim is not re-touched
     stat_digests = stat_digest_blobs(stats, len_hist)
     version_map = F.map_from_arrays(
         F.array(*[F.lit(k) for k in DETECTOR_VERSIONS]),

@@ -813,6 +813,17 @@ def test_lineage_frames_plan_small(spark, tmp_path, pruned):
     res.release()
 
 
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_checkpoint_assembly_has_no_python_stage(spark, tmp_path, pruned):
+    # the checkpoint blob is the stats map plus the log-histogram re-binned
+    # from the len_hist barrier: its assembly is all codegen'd aggregates,
+    # with no Python UDF folding a per-run sketch
+    res, _ = _resumed_result(spark, tmp_path, pruned)
+    p = plan_of(res.checkpoint, "simple")
+    assert "EvalPython" not in p and "InPandas" not in p
+    res.release()
+
+
 @pytest.mark.parametrize("mode", ["targets", "latest"])
 def test_drift_is_one_shuffle_into_map_in_arrow(spark, tmp_path, mode):
     # the drift stage ships one row per (lang, stat) series to the Python

@@ -277,11 +277,12 @@ def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     assert got == want
     assert res.violations.count() == result.violations.count()
 
-    # the seven barriers landed as parquet under one per-run directory
+    # the eight barriers landed as parquet under one per-run directory
     run_dirs = os.listdir(scratch)
     assert len(run_dirs) == 1
     assert sorted(os.listdir(os.path.join(scratch, run_dirs[0]))) == [
-        "drift", "samples", "slim", "stats", "targets", "verdicts", "violations",
+        "drift", "len_hist", "samples", "slim", "stats", "targets", "verdicts",
+        "violations",
     ]
     res.release()
     assert not os.path.exists(os.path.join(scratch, run_dirs[0]))
@@ -705,7 +706,7 @@ def test_run_metrics_match_written_verdicts_in_submit_order(
         (run_dir,) = os.listdir(scratch_dir)
         assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
     else:
-        assert len(barrier_rdds) == (9 if pruned else 8)
+        assert len(barrier_rdds) == (10 if pruned else 9)
         assert barrier_rdds <= live_rdds()
     res.release()
     assert not barrier_rdds & live_rdds()
