@@ -797,7 +797,9 @@ def checkpoint_digest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     slim = slim_pages(_derived_pages(spark, sf_dir))
     len_hist = length_histogram(slim)
-    blobs = stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
+    blobs = stat_digest_blobs(partition_stats(slim, len_hist), len_hist).select(
+        "lang", "stat_digests"
+    )
     # corpus-exact histogram per lang, carried into the merge kernel as two
     # bounded arrays (distinct text lengths ≤ a few hundred by construction)
     corpus = (

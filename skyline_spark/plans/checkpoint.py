@@ -156,27 +156,25 @@ def pending_partitions(
     )
 
 
-def checkpoint_history(checkpoint: DataFrame):
-    """Rebuild the drift inputs (stats series + ks_test samples) for
-    already-validated partitions FROM the checkpoint — the piece that makes
-    a resumed run skip the heavy scan of unchanged partitions entirely
+def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
+    """The drift inputs (stat vectors + ks_test samples) of already-validated
+    partitions, FROM the checkpoint — the piece that makes a resumed run
+    skip the heavy scan of unchanged partitions entirely
     (ValidationConfig.pruned_resume).
 
     The checkpoint is append-only, so a re-validated partition has several
     rows; the LATEST (validated_at, run_id) wins — exactly the row whose
     stat_values/sample describe the data the recorded snapshot_id hashes.
 
-    Returns ``(stats_long, samples, latest_cache)``: the first two shaped
-    like plans.stats ``partition_stats`` / ``stat_samples`` output, ready to
-    union with the freshly computed target-partition frames; the third is
-    the cached per-pair frame both derive from — the caller owns releasing
-    it (``.unpersist()``) once the run's actions are done. Raises if any
-    surviving row predates the stat_values/sample columns: silently
+    Returns one row per pair, ``(partition_date, lang, fingerprint,
+    stat_values, sample)``: the stats barrier's own shape, ready to union
+    with the freshly computed pairs and explode once
+    (plans.stats ``long_form``). The frame is cached — the caller owns
+    releasing it (``.unpersist()``) once the run's actions are done. Raises
+    if any surviving row predates the stat_values/sample columns: silently
     shortening drift baselines would change verdicts with no signal —
     re-run once without pruning to rewrite the checkpoint instead.
     """
-    from .stats import SAMPLE_STAT
-
     payload = F.struct(
         F.col("snapshot_id"), F.col("stat_values"), F.col("sample")
     )
@@ -191,8 +189,8 @@ def checkpoint_history(checkpoint: DataFrame):
             F.col("p.sample").alias("sample"),
         )
     )
-    # checkpoint-sized (one row per partition x lang) and consumed by two
-    # frames below plus the legacy-row guard — cache for the run
+    # checkpoint-sized (one row per partition x lang), read by the legacy-row
+    # guard and the run's drift inputs — cache for the run
     latest = latest.cache()
     n_legacy = (
         latest.where(F.col("stat_values").isNull()).limit(1).count()
@@ -205,17 +203,7 @@ def checkpoint_history(checkpoint: DataFrame):
             "existed; run validate() once without pruned_resume to refresh "
             "it (silently shortening drift baselines is not an option)"
         )
-    stats_long = latest.select(
-        *PARTITION_COLS,
-        "fingerprint",
-        F.explode("stat_values").alias("stat", "value"),
-    )
-    samples = latest.select(
-        *PARTITION_COLS,
-        F.lit(SAMPLE_STAT).alias("stat"),
-        F.col("sample"),
-    ).where(F.col("sample").isNotNull())
-    return stats_long, samples, latest
+    return latest
 
 
 def run_metrics_rows(

@@ -2,12 +2,17 @@
 
 One columnar scan of the subject table produces, per (partition_date, lang):
 
-- a wide stats row (row_count, null rates, text-length aggregates, approx
-  url cardinality via HyperLogLog, a partition content fingerprint), melted
-  into long form ``(partition_date, lang, stat, value)``;
-- a bounded, deterministic value *sample* per distribution-drift stat
-  (``text_len``), used by the ks_test detector (reference = prior
-  partitions' samples, probe = current — SURVEY §2.1 #9).
+- one row in the checkpoint's own per-pair shape: the partition content
+  ``fingerprint``, a ``stat_values`` map (row_count, null rates, text-length
+  aggregates, approx url cardinality via HyperLogLog), the ``stat_digests``
+  blob, and a bounded, deterministic value *sample* of ``text_len``, used
+  by the ks_test detector (reference = prior partitions' samples, probe =
+  current — SURVEY §2.1 #9);
+- the long frames ``(partition_date, lang, stat, value)`` and
+  ``(partition_date, lang, stat, sample)`` that drift, the static rules and
+  ``ValidationResult`` read come from ONE explode of those rows
+  (:func:`long_form`), whether they were just computed or read back from
+  the checkpoint.
 
 Scale notes (10^12 rows):
 - everything is a single ``groupBy(partition_cols).agg`` — map-side partial
@@ -39,6 +44,7 @@ __all__ = [
     "slim_pages",
     "length_histogram",
     "length_digest",
+    "long_form",
     "DRIFT_STATS",
     "PARTITION_COLS",
     "DIGEST_BINS_PER_OCTAVE",
@@ -125,8 +131,9 @@ def narrow_partition_keys(pages: DataFrame, native_col: str | None = None) -> Da
 
 
 def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
-    """Long-form per-(partition, lang) stats: one codegen'd agg pass plus
-    the exact length percentiles read off ``len_hist``.
+    """One row per (partition, lang): the content ``fingerprint`` and the
+    ``stat_values`` map of the pair's stats, from one codegen'd agg pass
+    plus the exact length percentiles read off ``len_hist``.
 
     The pass: all algebraic/sketch aggregates (count, null rates, avg, HLLs,
     fingerprint) — one whole-stage-codegen HashAggregate, map-side partials,
@@ -163,13 +170,28 @@ def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
     wide = wide.join(pct, PARTITION_COLS, "left")
 
     stat_cols = DRIFT_STATS + ["null_rate_html", "text_len_distinct"]
-    stack_expr = ", ".join(f"'{s}', cast(`{s}` as double)" for s in stat_cols)
-    long = wide.select(
+    stat_values = F.create_map(
+        *(c for s in stat_cols for c in (F.lit(s), F.col(s).cast("double")))
+    )
+    return wide.select(*PARTITION_COLS, "fingerprint", stat_values.alias("stat_values"))
+
+
+def long_form(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The ONE explode of per-pair rows — the stats barrier, checkpoint rows
+    (plans/checkpoint.py ``checkpoint_history``), or a union of both —
+    into ``(stats_long, samples)``: ``(partition_date, lang, fingerprint,
+    stat, value)`` with one row per entry of ``stat_values``, and
+    ``(partition_date, lang, stat, sample)`` for the pairs that have a
+    sample."""
+    stats_long = pairs.select(
         *PARTITION_COLS,
         "fingerprint",
-        F.expr(f"stack({len(stat_cols)}, {stack_expr}) as (stat, value)"),
+        F.explode("stat_values").alias("stat", "value"),
     )
-    return long
+    samples = pairs.where(F.col("sample").isNotNull()).select(
+        *PARTITION_COLS, F.lit(SAMPLE_STAT).alias("stat"), "sample"
+    )
+    return stats_long, samples
 
 
 def _exact_length_percentiles(hist: DataFrame) -> DataFrame:
@@ -270,7 +292,8 @@ def _keep_rate_expr(count_col, sample_cap: int):
 def stat_samples(
     pages: DataFrame, len_hist: DataFrame, sample_cap: int = 512
 ) -> DataFrame:
-    """Deterministic ≤ sample_cap text-length sample per (partition, lang).
+    """Deterministic ≤ sample_cap text-length sample per (partition, lang):
+    ``(partition_date, lang, sample)``, one row per pair with non-null text.
 
     The per-partition keep-rate comes from ``len_hist``'s totals (the
     non-null text count of each pair, :func:`length_histogram`); then one
@@ -282,7 +305,7 @@ def stat_samples(
     rates = len_hist.groupBy(*PARTITION_COLS).agg(
         _keep_rate_expr(F.sum("cnt"), sample_cap).alias("keep_below")
     )
-    sampled = (
+    return (
         pages.join(F.broadcast(rates), PARTITION_COLS)
         .where(F.pmod(F.xxhash64("url", F.lit("sample")), F.lit(denom)) < F.col("keep_below"))
         .groupBy(*PARTITION_COLS)
@@ -306,14 +329,14 @@ def stat_samples(
                 lambda s: s["v"],
             ).alias("sample")
         )
-        .withColumn("stat", F.lit(SAMPLE_STAT))
     )
-    return sampled.select(*PARTITION_COLS, "stat", "sample")
 
 
-def stat_digest_blobs(stats_long: DataFrame, len_hist: DataFrame) -> DataFrame:
-    """Per-(partition, lang) checkpoint blob: ``{"stats": scalar map,
-    "len_digest": log-histogram}`` as one JSON binary.
+def stat_digest_blobs(stat_rows: DataFrame, len_hist: DataFrame) -> DataFrame:
+    """``stat_rows`` (one row per pair with ``stat_values``, as
+    :func:`partition_stats` returns) plus the checkpoint blob column
+    ``stat_digests``: ``{"stats": stat_values, "len_digest": log-histogram}``
+    as one JSON binary.
 
     The north-star "stat digests (mergeable sketches)" column, one digest
     per pair: the log-histogram re-binned from ``len_hist``. Its bin
@@ -323,17 +346,9 @@ def stat_digest_blobs(stats_long: DataFrame, len_hist: DataFrame) -> DataFrame:
     query (catalog/flagship_queries.py ``checkpoint_digest_quantiles``)
     exercises the production assembly.
     """
-    scalar_map = F.map_from_entries(
-        F.collect_list(F.struct(F.col("stat"), F.col("value")))
-    )
-    return (
-        stats_long.groupBy(*PARTITION_COLS)
-        .agg(scalar_map.alias("_stats_map"))
-        .join(length_digest(len_hist), PARTITION_COLS, "left")
-        .select(
-            *PARTITION_COLS,
-            F.to_json(
-                F.struct(F.col("_stats_map").alias("stats"), F.col("len_digest"))
-            ).cast("binary").alias("stat_digests"),
-        )
+    return stat_rows.join(length_digest(len_hist), PARTITION_COLS, "left").select(
+        *stat_rows.columns,
+        F.to_json(
+            F.struct(F.col("stat_values").alias("stats"), F.col("len_digest"))
+        ).cast("binary").alias("stat_digests"),
     )

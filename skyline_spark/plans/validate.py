@@ -57,8 +57,8 @@ from .constraints import (
 from .drift import drift_verdicts
 from .stats import (
     PARTITION_COLS,
-    SAMPLE_STAT,
     length_histogram,
+    long_form,
     narrow_partition_keys,
     partition_stats,
     slim_pages,
@@ -216,7 +216,7 @@ def validate(
     selection). Defaults run the full registry over DRIFT_STATS.
 
     ``scratch_dir``: materialize the pipeline barriers (the checkpoint
-    read, narrow, slim, stats, samples, targets, drift, violations,
+    read, narrow, slim, len_hist, stats, targets, drift, violations,
     verdicts) as parquet scratch tables under ``scratch_dir/<run token>/``
     instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
     wants: localCheckpoint truncates lineage into executor-LOCAL blocks, so
@@ -449,46 +449,40 @@ def _validate_body(
         )
 
     slim = store.barrier(slim_pages(pages), "slim")
-    # the ONE (partition, lang, text_len) count over slim: exact p50/p95
-    # (stats), the sampling keep-rates (samples) and the checkpoint's
-    # log-histogram digest (stage 7) all read it. Tiny — distinct lengths
-    # per partition x lang — and a barrier BEFORE the pool below: a lazy
-    # cache read by two concurrent jobs would be computed by both
+    # the ONE (partition, lang, text_len) count over slim: exact p50/p95,
+    # the sampling keep-rates and the log-histogram digest of the stats
+    # plan below all read it. Tiny — distinct lengths per partition x lang —
+    # and a barrier, so those three branches read blocks instead of each
+    # re-aggregating slim
     len_hist = store.barrier(length_histogram(slim), "len_hist")
-    # stats/samples are checkpoint-sized (one row per partition×lang[×stat])
-    # — materialize them once too, collapsing every downstream branch
-    # (row-count gate, drift, statics, digests, fingerprints) into trivial
-    # scans of in-memory tables instead of repeated agg jobs over slim.
-    # Submitted CONCURRENTLY: both read the already-materialized slim and
-    # len_hist blocks (no recompute race — that was the round-1 bug with a
-    # LAZY persist), and the two small agg jobs would otherwise serialize
-    # their fixed stage latencies back-to-back
-    import concurrent.futures as _cf
-
-    with _cf.ThreadPoolExecutor(2) as _ex:
-        _f_stats = _ex.submit(
-            lambda: store.barrier(partition_stats(slim, len_hist), "stats")
-        )
-        _f_samples = _ex.submit(
-            lambda: store.barrier(
-                stat_samples(slim, len_hist, cfg.sample_cap), "samples"
-            )
-        )
-        stats = _f_stats.result()
-        samples = _f_samples.result()
+    # barrier "stats": ONE row per (partition, lang) in the checkpoint's own
+    # shape — fingerprint, stat_values, stat_digests, sample. Every consumer
+    # below reads columns of it; the long stats/samples frames come from
+    # long_form's one explode. AQE submits the independent agg, sample and
+    # digest stages of this one plan together. Its joins stay plain equi-
+    # joins on the pair key: Catalyst sizes those as the sum of their inputs
+    # but a null-safe join as the product, the barrier keeps that estimate,
+    # and a product turns later joins over it into shuffles and plants
+    # runtime bloom filters (stat_samples has no null-keyed pair anyway)
+    pair_stats = store.barrier(
+        stat_digest_blobs(partition_stats(slim, len_hist), len_hist).join(
+            stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left"
+        ),
+        "stats",
+    )
+    stats, samples = long_form(pair_stats)
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------
     # In pruned mode both were computed from the narrow scan before the
-    # barrier; otherwise derive them from the checkpointed stats table
-    # (the "targets" barrier is cheap to fill from it).
+    # barrier; otherwise derive them from the stats barrier (one row per
+    # pair, so the "targets" barrier is cheap to fill from it).
     if not pruned:
-        fingerprints = (
-            stats.select(*PARTITION_COLS, F.col("fingerprint").alias("snapshot_id"))
-            .distinct()
+        fingerprints = pair_stats.select(
+            *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
         )
         targets = store.barrier(_resume_targets(fingerprints), "targets")
 
     # drift baselines: in pruned mode the heavy scan only covered pending
-    # dates, so unchanged partitions' stat series + ks samples come back
+    # dates, so unchanged partitions' stat vectors + ks samples come back
     # from the checkpoint (anti-joined on the freshly scanned pairs — a
     # pending DATE also rescans that date's unchanged langs, and those
     # pairs must not appear twice in one series)
@@ -496,26 +490,26 @@ def _validate_body(
     if pruned:
         # its per-pair frame stays cached: one level above the checkpoint
         # barrier, its plan is already small
-        hist_stats, hist_samples, hist_cache = checkpoint_history(ckpt)
-        store.cached.append(hist_cache)
-        fresh_keys = stats.select(*PARTITION_COLS).distinct()
+        history = checkpoint_history(ckpt)
+        store.cached.append(history)
         # semi-join on the CURRENT table's pairs: a partition deleted since
         # its checkpoint row (retention trim, purge) must not haunt the
         # baselines — a full rescan would never see it, and the pruned path
         # must produce identical verdicts
-        live_keys = fingerprints.select(*PARTITION_COLS)
-
-        def _hist(df):
-            return df.join(
-                F.broadcast(live_keys), PARTITION_COLS, "left_semi"
-            ).join(F.broadcast(fresh_keys), PARTITION_COLS, "left_anti")
-
-        drift_stats_in = stats.unionByName(_hist(hist_stats))
-        drift_samples_in = samples.unionByName(_hist(hist_samples))
+        history = history.join(
+            F.broadcast(fingerprints.select(*PARTITION_COLS)),
+            PARTITION_COLS, "left_semi",
+        ).join(
+            F.broadcast(pair_stats.select(*PARTITION_COLS)),
+            PARTITION_COLS, "left_anti",
+        )
+        drift_stats_in, drift_samples_in = long_form(
+            pair_stats.drop("stat_digests").unionByName(history)
+        )
 
     # ---- stage 3: partition row-count gate (TooShort, FIXTURES F4) -------
-    row_counts = stats.where(F.col("stat") == "row_count").select(
-        *PARTITION_COLS, F.col("value").alias("row_count")
+    row_counts = pair_stats.select(
+        *PARTITION_COLS, F.col("stat_values")["row_count"].alias("row_count")
     )
     gated = targets.join(row_counts, PARTITION_COLS, "left").withColumn(
         "too_short", F.coalesce(F.col("row_count"), F.lit(0)) < cfg.min_partition_rows
@@ -682,37 +676,26 @@ def _validate_body(
     # of spark.sql.session.timeZone — a naive datetime literal would be
     # read in the session zone, shifting lineage by its UTC offset
     validated_at = F.timestamp_seconds(F.lit(float(run_ts)))
-    # the digest re-bins the len_hist barrier: slim is not re-touched
-    stat_digests = stat_digest_blobs(stats, len_hist)
     version_map = F.map_from_arrays(
         F.array(*[F.lit(k) for k in DETECTOR_VERSIONS]),
         F.array(*[F.lit(v) for v in DETECTOR_VERSIONS.values()]),
     )
-    # the partition's full stat vector + capped sample ride along so a later
-    # PRUNED resume can rebuild drift baselines without rescanning this
+    # the stats barrier row IS the checkpoint payload: the digest blob, and
+    # the partition's full stat vector + capped sample, which let a later
+    # PRUNED resume rebuild drift baselines without rescanning this
     # partition (checkpoint_history) — bounded: ~13 doubles + <=sample_cap
-    # doubles per row
-    stat_values_df = stats.groupBy(*PARTITION_COLS).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("stat"), F.col("value")))
-        ).alias("stat_values")
-    )
-    sample_df = samples.where(F.col("stat") == SAMPLE_STAT).select(
-        *PARTITION_COLS, "sample"
-    )
+    # doubles per row. Two joins of one-row-per-pair leaves, no regroup
     checkpoint = (
         verdicts.join(fingerprints, PARTITION_COLS)
-        .join(row_counts, PARTITION_COLS, "left")
-        .join(stat_digests, PARTITION_COLS, "left")
-        .join(stat_values_df, PARTITION_COLS, "left")
-        .join(sample_df, PARTITION_COLS, "left")
+        .join(pair_stats.drop("fingerprint"), PARTITION_COLS, "left")
         .select(
             *PARTITION_COLS,
             F.col("snapshot_id"),
             F.lit(vhash).alias("detector_version_hash"),
             version_map.alias("detector_versions"),
             F.col("stat_digests"),
-            F.coalesce(F.col("row_count"), F.lit(0)).cast("long").alias("row_count"),
+            F.coalesce(F.col("stat_values")["row_count"], F.lit(0))
+            .cast("long").alias("row_count"),
             F.lit(run_id).alias("run_id"),
             validated_at.alias("validated_at"),
             F.map_from_arrays(

@@ -734,9 +734,10 @@ def _plan_files(df) -> set[str]:
     return files
 
 
-def _resumed_result(spark, tmp_path, pruned):
+def _resumed_result(spark, tmp_path, pruned, new_day=False):
     """A validate() resumed from a one-run checkpoint, and the checkpoint
-    location's resolved path."""
+    location's resolved path. ``new_day`` appends a seventh day before the
+    resume, so the resumed run has pairs to validate."""
     from pathlib import Path
 
     from skyline_spark.config import ValidationConfig
@@ -752,6 +753,11 @@ def _resumed_result(spark, tmp_path, pruned):
     append_checkpoint(first.checkpoint, ckpt)
     first.release()
     assert any(Path(ckpt).rglob("*.parquet"))
+    if new_day:
+        synth_pages(
+            spark, 500, 1, base_date="2026-08-07", defects=False
+        ).write.mode("append").parquet(pages_path)
+        pages = spark.read.parquet(pages_path)
     res = validate(
         pages, ValidationConfig(pruned_resume=pruned), checkpoint_path=ckpt,
         run_id="r2", run_ts=1_786_060_900.0,
@@ -821,6 +827,23 @@ def test_checkpoint_assembly_has_no_python_stage(spark, tmp_path, pruned):
     res, _ = _resumed_result(spark, tmp_path, pruned)
     p = plan_of(res.checkpoint, "simple")
     assert "EvalPython" not in p and "InPandas" not in p
+    res.release()
+
+
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_checkpoint_assembly_is_joins_of_pair_rows(spark, tmp_path, pruned):
+    # the stats barrier holds one row per (partition, lang) in the
+    # checkpoint's own shape, so the checkpoint is verdicts joined to
+    # fingerprints and to that barrier: no regroup of long stat rows, and
+    # no shuffle — in the plan AQE ran, not only the one it started from
+    import re
+
+    res, _ = _resumed_result(spark, tmp_path, pruned, new_day=True)
+    assert res.checkpoint.collect()
+    p = plan_of(res.checkpoint, "simple").split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in p
+    assert "Aggregate" not in p
+    assert not re.findall(r"(?<!Broadcast)Exchange |ShuffleQueryStage", p)
     res.release()
 
 

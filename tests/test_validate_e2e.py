@@ -256,6 +256,30 @@ def test_checkpoint_lineage_columns(result, spark, tmp_path):
     assert row["metrics"]["checks_run"] > 0
 
 
+def test_checkpoint_rows_explode_to_the_run_stats(result, spark, tmp_path):
+    """The stats barrier and the checkpoint row share one shape and one
+    explode: a full run's checkpoint, read back through checkpoint_history
+    and long_form, gives the run's own stats and samples."""
+    from skyline_spark.plans.checkpoint import checkpoint_history
+    from skyline_spark.plans.stats import long_form
+
+    ckpt = str(tmp_path / "ckpt_round_trip")
+    append_checkpoint(result.checkpoint, ckpt)
+    history = checkpoint_history(load_checkpoint(spark, ckpt))
+    stats, samples = long_form(history)
+
+    def rows(df):
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.collect()}
+
+    assert stats.columns == result.stats.columns
+    assert samples.columns == result.samples.columns
+    assert rows(stats) == rows(result.stats)
+    assert rows(samples) == rows(result.samples)
+    assert rows(samples)
+    history.unpersist()
+
+
 def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     """scratch_dir materializes the barriers as parquet scratch tables (the
     fault-tolerant cluster shape) — verdicts and violations must be
@@ -277,11 +301,11 @@ def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     assert got == want
     assert res.violations.count() == result.violations.count()
 
-    # the eight barriers landed as parquet under one per-run directory
+    # the seven barriers landed as parquet under one per-run directory
     run_dirs = os.listdir(scratch)
     assert len(run_dirs) == 1
     assert sorted(os.listdir(os.path.join(scratch, run_dirs[0]))) == [
-        "drift", "len_hist", "samples", "slim", "stats", "targets", "verdicts",
+        "drift", "len_hist", "slim", "stats", "targets", "verdicts",
         "violations",
     ]
     res.release()
@@ -706,7 +730,7 @@ def test_run_metrics_match_written_verdicts_in_submit_order(
         (run_dir,) = os.listdir(scratch_dir)
         assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
     else:
-        assert len(barrier_rdds) == (10 if pruned else 9)
+        assert len(barrier_rdds) == (9 if pruned else 8)
         assert barrier_rdds <= live_rdds()
     res.release()
     assert not barrier_rdds & live_rdds()

@@ -12,11 +12,10 @@ time ratio ≈ the data ratio (10×) or better and a throughput ratio near
 (or above) 1; a super-linear cliff shows a collapsing throughput ratio.
 
 validate_pages is probed through its own generator (2M → 20M pages,
-30 days, hive layout — the bench.py shape scaled 10×).
+30 days, hive layout — the round-5 bench shape scaled 10×).
 
-Writes SCALE_PROBE_r{N}.json; bench.py attaches the committed file to its
-output under ``sf1_probe`` (clearly labeled as measured by this tool, not
-re-measured per bench run).
+Writes SCALE_PROBE_r{N}.json (measured by this tool, not re-measured by
+any benchmark run).
 
 Usage: python tools/scale_probe.py [out.json]
 """
