@@ -51,6 +51,12 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("row_count", T.LongType()),
         T.StructField("run_id", T.StringType()),
         T.StructField("validated_at", T.TimestampType()),
+        # checks_run / checks_failed; a pruned run whose layout audit was
+        # clean also records the date's ``file_set`` (52-bit hash of its
+        # file listing, plans.stats ``partition_file_sets``) and
+        # ``date_pairs`` (the (date, lang) pairs the date held under that
+        # file set), which let a later pruned run skip the date's narrow
+        # scan. Absent = not recorded: the date is scanned.
         T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType())),
         # the partition's full stat vector + capped ks_test sample, carried
         # so a PRUNED resume (ValidationConfig.pruned_resume) can rebuild
@@ -167,16 +173,20 @@ def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
     stat_values/sample describe the data the recorded snapshot_id hashes.
 
     Returns one row per pair, ``(partition_date, lang, fingerprint,
-    stat_values, sample)``: the stats barrier's own shape, ready to union
-    with the freshly computed pairs and explode once
-    (plans.stats ``long_form``). The frame is cached — the caller owns
-    releasing it (``.unpersist()``) once the run's actions are done. Raises
-    if any surviving row predates the stat_values/sample columns: silently
-    shortening drift baselines would change verdicts with no signal —
-    re-run once without pruning to rewrite the checkpoint instead.
+    stat_values, sample, file_set, date_pairs)``: the stats barrier's own
+    shape, ready to union with the freshly computed pairs and explode once
+    (plans.stats ``long_form``), plus the row's file-set record (NULL when
+    not recorded; see ``CHECKPOINT_SCHEMA.metrics``), which decides whether
+    the pruned path narrow-scans the date. The frame is cached — the caller
+    owns releasing it (``.unpersist()``) once the run's actions are done.
+    Raises if any surviving row predates the stat_values/sample columns:
+    silently shortening drift baselines would change verdicts with no
+    signal — re-run once without pruning to rewrite the checkpoint instead.
     """
     payload = F.struct(
-        F.col("snapshot_id"), F.col("stat_values"), F.col("sample")
+        F.col("snapshot_id"), F.col("stat_values"), F.col("sample"),
+        F.col("metrics")["file_set"].alias("file_set"),
+        F.col("metrics")["date_pairs"].alias("date_pairs"),
     )
     order = F.struct(F.col("validated_at"), F.col("run_id"))
     latest = (
@@ -187,10 +197,13 @@ def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
             F.col("p.snapshot_id").alias("fingerprint"),
             F.col("p.stat_values").alias("stat_values"),
             F.col("p.sample").alias("sample"),
+            F.col("p.file_set").alias("file_set"),
+            F.col("p.date_pairs").alias("date_pairs"),
         )
     )
     # checkpoint-sized (one row per partition x lang), read by the legacy-row
-    # guard and the run's drift inputs — cache for the run
+    # guard, the pruned path's skip decision and reused fingerprints, and
+    # the run's drift inputs — cache for the run
     latest = latest.cache()
     n_legacy = (
         latest.where(F.col("stat_values").isNull()).limit(1).count()

@@ -34,11 +34,15 @@ vector persisted in the checkpoint table.
 
 from __future__ import annotations
 
+import datetime
+import hashlib
+
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
     "stat_digest_blobs",
     "partition_stats",
+    "partition_file_sets",
     "narrow_partition_keys",
     "stat_samples",
     "slim_pages",
@@ -64,6 +68,9 @@ DRIFT_STATS = [
 
 # the stat whose raw per-row values are sampled for ks_test
 SAMPLE_STAT = "text_len"
+
+# DateType's internal value is days since this date
+_EPOCH = datetime.date(1970, 1, 1)
 
 
 def with_partition(df: DataFrame) -> DataFrame:
@@ -102,15 +109,74 @@ def _fingerprint_expr() -> F.Column:
     ).cast("long")
 
 
+def partition_file_sets(pages: DataFrame) -> dict | None:
+    """``{partition_date: file-set hash}`` of a hive ``partition_date=``
+    layout, read off the scan's own file index on the driver — no Spark
+    job, no row read.
+
+    The hash is a 52-bit integer (exact as a double, so it rides in the
+    checkpoint's ``metrics`` map) over the sorted (path, length, mtime) of
+    the date's files: adding, deleting, moving or rewriting a file changes
+    it. Directories with a NULL partition value are left out (the caller
+    always scans them).
+
+    ``None`` unless ``pages`` is a bare file scan — a ``LogicalRelation``
+    over a ``HadoopFsRelation`` whose partition schema has a DATE
+    ``partition_date``. A filter or projection on top, an in-memory frame,
+    a flat layout or a catalog table all return ``None``: the listing would
+    not describe the rows the frame holds."""
+    plan = pages._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    schema = rel.partitionSchema()
+    if "partition_date" not in list(schema.fieldNames()):
+        return None
+    idx = schema.fieldIndex("partition_date")
+    if schema.apply(idx).dataType().typeName() != "date":
+        return None
+    jvm = pages.sparkSession.sparkContext._jvm
+    no_filters = jvm.org.apache.spark.api.python.PythonUtils.toSeq(
+        jvm.java.util.ArrayList()
+    )
+    files: dict = {}
+    dirs = rel.location().listFiles(no_filters, no_filters).iterator()
+    while dirs.hasNext():
+        d = dirs.next()
+        if d.values().isNullAt(idx):
+            continue
+        day = _EPOCH + datetime.timedelta(days=d.values().getInt(idx))
+        it = d.files().iterator()
+        while it.hasNext():
+            st = it.next().fileStatus()
+            files.setdefault(day, []).append(
+                f"{st.getPath().toString()}\t{st.getLen()}\t{st.getModificationTime()}"
+            )
+    out = {}
+    for day, fs in files.items():
+        digest = hashlib.blake2b("\n".join(sorted(fs)).encode(), digest_size=7)
+        out[day] = int.from_bytes(digest.digest(), "big") >> 4  # 56 → 52 bits
+    return out
+
+
 def narrow_partition_keys(pages: DataFrame, native_col: str | None = None) -> DataFrame:
     """Change detection WITHOUT touching the heavy columns: per
     (partition_date, lang), the content fingerprint from a scan of
     (url, warc_ts, lang) only — parquet column pruning skips html/text
     entirely, so on a 10^12-row table this pass reads a few percent of the
-    bytes the full stats pass would. On Iceberg the same information comes
-    from snapshot metadata with NO scan; this is the parquet-faithful
-    analog (SURVEY §1.2). Used by the pruned-resume path
+    bytes the full stats pass would. Used by the pruned-resume path
     (plans/validate.py) to decide which partitions need the heavy scan.
+
+    On Iceberg, unchanged partitions are known from snapshot metadata with
+    NO scan (SURVEY §1.2). The parquet analog is the file listing
+    (:func:`partition_file_sets`): the pruned path feeds this function only
+    the dates whose file set changed since the checkpoint recorded it, and
+    takes every other date's fingerprints from the checkpoint. Outside that
+    contract: an in-place rewrite that keeps every file's path and length
+    AND restores its old mtime looks unchanged (on Iceberg any rewrite is a
+    new snapshot).
 
     ``native_col``: name of a physical partition column to AUDIT against
     the derived days(warc_ts) key in the same pass — adds a

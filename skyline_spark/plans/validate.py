@@ -60,6 +60,7 @@ from .stats import (
     length_histogram,
     long_form,
     narrow_partition_keys,
+    partition_file_sets,
     partition_stats,
     slim_pages,
     stat_digest_blobs,
@@ -247,6 +248,14 @@ def validate(
     # then coerced (try_cast / null-fill) so every downstream check still
     # runs instead of crashing mid-plan
     schema_viol = schema_violations(pages, PAGE_SCHEMA)
+    # the pruned path's file listing, from the caller's frame before the
+    # conform projection below hides its file index (None: not a bare
+    # hive-partitioned file scan, so every date is narrow-scanned)
+    file_sets = (
+        partition_file_sets(pages)
+        if cfg.pruned_resume and checkpoint_path is not None
+        else None
+    )
     # a hive-partitioned layout materializes the days(warc_ts) partition
     # spec as a physical `partition_date` column (Iceberg keeps it hidden in
     # metadata) — carry it under an internal name so the pruned-resume
@@ -290,7 +299,7 @@ def validate(
         return _validate_body(
             pages, cfg, checkpoint_path, run_id, run_ts, static_rules,
             lang_allowlist, drift_stats, sample_backed, algorithms,
-            spark, schema_viol, store,
+            spark, schema_viol, file_sets, store,
         )
     except BaseException:
         # a failed run must not strand multi-GB scratch tables or barrier
@@ -305,7 +314,7 @@ def validate(
 
 
 def _prune_predicate(
-    pages: DataFrame, dates: list, keep_null_ts: bool, use_native: bool = False
+    dates: list, keep_null_ts: bool, use_native: bool = False
 ) -> F.Column:
     """Scan filter keeping only the pending partition dates.
 
@@ -344,12 +353,54 @@ def _prune_predicate(
     return keep
 
 
+def _date_map(values: dict) -> F.Column:
+    """A literal ``map<date, double>`` of ``values``; look a row's date up
+    with ``_date_map(...)[F.col("partition_date")]`` (NULL when absent)."""
+    return F.create_map(
+        *(c for d, v in values.items() for c in (F.lit(d), F.lit(float(v))))
+    )
+
+
+def _recorded_under(history: DataFrame, file_sets: dict) -> DataFrame:
+    """The latest checkpoint rows recorded under their date's file set in
+    ``file_sets``. Checkpoint-sized, so one task reads it: a per-date count
+    over it needs no shuffle."""
+    return history.where(
+        F.col("file_set") == _date_map(file_sets)[F.col("partition_date")]
+    ).coalesce(1)
+
+
+def _unchanged_dates(history: DataFrame, file_sets: dict) -> set:
+    """The dates whose narrow scan can be skipped: the listed file set
+    hashes to h, and exactly the recorded ``date_pairs`` of the date's
+    latest checkpoint rows carry ``file_set`` h. Counting the rows, not
+    just finding one, keeps a checkpoint that holds only some of a date's
+    pairs (a lang-filtered append, a row older than a file change) from
+    passing. One small collect, bounded by the calendar."""
+    rows = (
+        _recorded_under(history, file_sets)
+        .groupBy("partition_date")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("date_pairs").alias("lo"),
+            F.max("date_pairs").alias("hi"),
+        )
+        .where((F.col("n") == F.col("lo")) & (F.col("lo") == F.col("hi")))
+        .collect()
+    )
+    return {r["partition_date"] for r in rows}
+
+
 def _validate_body(
     pages, cfg, checkpoint_path, run_id, run_ts, static_rules,
     lang_allowlist, drift_stats, sample_backed, algorithms,
-    spark, schema_viol, store,
+    spark, schema_viol, file_sets, store,
 ) -> ValidationResult:
     vhash = detector_version_hash()
+    # the run date of the staleness gates (stage 2's re-add, stage 3b)
+    run_date = F.lit(
+        _dt.datetime.fromtimestamp(run_ts, _dt.timezone.utc).date()
+    )
     # the checkpoint is read ONCE, behind the same barrier as slim/stats/
     # samples: no frame this run caches or returns keeps the checkpoint
     # relation in its plan, so the caller's own append_checkpoint (parquet
@@ -380,12 +431,11 @@ def _validate_body(
         # stale — the reference surfaces Stale metrics on every sweep, not
         # only on change (`analyzer/algorithms.py:588-589`).
         if cfg.stale_after_partitions is not None:
-            _run_date = F.lit(_dt.datetime.utcfromtimestamp(run_ts).date())
             stale_newest = (
                 fps.groupBy("lang")
                 .agg(F.max("partition_date").alias("partition_date"))
                 .where(
-                    F.datediff(_run_date, F.col("partition_date"))
+                    F.datediff(run_date, F.col("partition_date"))
                     > cfg.stale_after_partitions
                 )
                 .join(fps, PARTITION_COLS, "inner")  # restore snapshot_id
@@ -398,22 +448,72 @@ def _validate_body(
     # fingerprint + row count per pair from a scan of (url, warc_ts, lang)
     # ONLY — column pruning skips the multi-KB html — then restrict the
     # heavy scan below to the pending partition DATES. The collected date
-    # list is bounded by the calendar, not the data (the one deliberate
-    # driver-side collect in this pipeline).
+    # lists are bounded by the calendar, not the data.
+    #
+    # The narrow scan itself reads only the dates whose file set changed
+    # since the checkpoint recorded it (plans.stats partition_file_sets) or
+    # that have no record; every other date's fingerprints come from the
+    # checkpoint's latest rows — the parquet analog of knowing unchanged
+    # Iceberg partitions from snapshot metadata. Its date filter on the
+    # physical column becomes PartitionFilters.
     pruned = cfg.pruned_resume and ckpt is not None
+    recorded: dict = {}
     if pruned:
         native = (
             "_native_partition_date"
             if "_native_partition_date" in pages.columns
             else None
         )
-        # barrier "narrow": the aggregated frame is checkpoint-sized, and it
-        # feeds the targets collect, the stale-newest broadcast (stage 3b),
-        # the layout audit, and the stage-7 checkpoint join — without it
-        # each would re-run the O(table) narrow scan
-        narrow = store.barrier(
-            narrow_partition_keys(pages, native_col=native), "narrow"
-        )
+        # ONE latest-row frame per pair, cached (one level above the
+        # checkpoint barrier, its plan is already small): the skip decision,
+        # the reused fingerprints and the drift baselines all read it
+        history = checkpoint_history(ckpt)
+        store.cached.append(history)
+        skip = _unchanged_dates(history, file_sets) if file_sets else set()
+
+        def _narrow(frame, reused, name):
+            # barrier: every current pair's fingerprint — the narrow scan's
+            # rows plus the reused ones — checkpoint-sized, and it feeds the
+            # layout audit, the targets, the stale-newest broadcast (stage
+            # 3b) and the stage-7 checkpoint join; without it each would
+            # re-run the narrow scan. The audit collects one row per date:
+            # its pair count and its mismatching rows
+            fps = narrow_partition_keys(frame, native_col=native)
+            if reused is not None:
+                fps = fps.unionByName(reused)
+            out = store.barrier(fps, name)
+            if native is None:
+                return out, {}
+            per_date = out.coalesce(1).groupBy("partition_date").agg(
+                F.count(F.lit(1)).alias("pairs"),
+                F.sum("native_mismatch").alias("bad"),
+            ).collect()
+            return out, {r["partition_date"]: r for r in per_date}
+
+        if skip:
+            # the skipped dates' pairs: exactly the rows recorded under the
+            # current file set (an older row of a lang the date no longer
+            # holds carries another file_set), audited clean when recorded
+            reused = _recorded_under(
+                history, {d: file_sets[d] for d in skip}
+            ).select(
+                *PARTITION_COLS, "fingerprint",
+                F.lit(0).cast("long").alias("native_mismatch"),
+            )
+            nat = F.col(native)
+            changed = sorted(set(file_sets) - skip)
+            narrow, audit = _narrow(
+                pages.where(nat.isin(changed) | nat.isNull()), reused, "narrow"
+            )
+        else:
+            narrow, audit = _narrow(pages, None, "narrow")
+        bad = sum(r["bad"] or 0 for r in audit.values())
+        if bad and skip:
+            # a row in a changed directory can belong to a skipped date:
+            # audit (and fingerprint) the whole table instead
+            skip = set()
+            narrow, audit = _narrow(pages, None, "narrow_all")
+            bad = sum(r["bad"] or 0 for r in audit.values())
         fingerprints = narrow.select(
             *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
         )
@@ -424,7 +524,6 @@ def _validate_body(
         # warc_ts-only filter instead (correct, no file-level pruning)
         use_native = False
         if native is not None:
-            bad = narrow.agg(F.sum("native_mismatch")).collect()[0][0] or 0
             if bad:
                 import warnings
 
@@ -437,12 +536,23 @@ def _validate_body(
                 )
             else:
                 use_native = True
+                # a clean audit covers every date: the scanned ones just now,
+                # the skipped ones when their record was written. Record
+                # each listed date's file set and pair count for the
+                # checkpoint rows. A mismatch anywhere records nothing: a
+                # misplaced row is counted under its warc_ts date, not under
+                # the directory that holds it, so no date can be vouched for
+                recorded = {
+                    d: (h, audit[d]["pairs"])
+                    for d, h in (file_sets or {}).items()
+                    if d in audit
+                }
         targets = store.barrier(_resume_targets(fingerprints), "targets")
         pend = [r[0] for r in targets.select("partition_date").distinct().collect()]
         dates = sorted(d for d in pend if d is not None)
         pages = pages.where(
             _prune_predicate(
-                pages, dates,
+                dates,
                 keep_null_ts=len(dates) != len(pend),
                 use_native=use_native,
             )
@@ -472,9 +582,9 @@ def _validate_body(
     )
     stats, samples = long_form(pair_stats)
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------
-    # In pruned mode both were computed from the narrow scan before the
-    # barrier; otherwise derive them from the stats barrier (one row per
-    # pair, so the "targets" barrier is cheap to fill from it).
+    # In pruned mode both came from the narrow barrier (scanned plus reused
+    # fingerprints) above; otherwise derive them from the stats barrier
+    # (one row per pair, so the "targets" barrier is cheap to fill from it).
     if not pruned:
         fingerprints = pair_stats.select(
             *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
@@ -488,15 +598,11 @@ def _validate_body(
     # pairs must not appear twice in one series)
     drift_stats_in, drift_samples_in = stats, samples
     if pruned:
-        # its per-pair frame stays cached: one level above the checkpoint
-        # barrier, its plan is already small
-        history = checkpoint_history(ckpt)
-        store.cached.append(history)
         # semi-join on the CURRENT table's pairs: a partition deleted since
         # its checkpoint row (retention trim, purge) must not haunt the
         # baselines — a full rescan would never see it, and the pruned path
         # must produce identical verdicts
-        history = history.join(
+        history = history.drop("file_set", "date_pairs").join(
             F.broadcast(fingerprints.select(*PARTITION_COLS)),
             PARTITION_COLS, "left_semi",
         ).join(
@@ -523,7 +629,6 @@ def _validate_body(
     # partition's verdict surfaces as STALE (per-lang newest is a tiny
     # broadcast aggregate of the fingerprint table)
     if cfg.stale_after_partitions is not None:
-        run_date = F.lit(_dt.datetime.utcfromtimestamp(run_ts).date())
         newest = fingerprints.groupBy("lang").agg(
             F.max("partition_date").alias("_newest_partition")
         )
@@ -680,6 +785,25 @@ def _validate_body(
         F.array(*[F.lit(k) for k in DETECTOR_VERSIONS]),
         F.array(*[F.lit(v) for v in DETECTOR_VERSIONS.values()]),
     )
+    metrics = F.map_from_arrays(
+        F.array(F.lit("checks_run"), F.lit("checks_failed")),
+        F.array(F.col("checks_run").cast("double"), F.col("checks_failed").cast("double")),
+    )
+    if recorded:
+        # the date's file-set record (CHECKPOINT_SCHEMA.metrics); a pair of
+        # an unrecorded date (NULL date, no listing) carries none
+        file_set = _date_map({d: h for d, (h, _) in recorded.items()})[
+            F.col("partition_date")
+        ]
+        date_pairs = _date_map({d: n for d, (_, n) in recorded.items()})[
+            F.col("partition_date")
+        ]
+        metrics = F.when(file_set.isNull(), metrics).otherwise(F.map_concat(
+            metrics,
+            F.create_map(
+                F.lit("file_set"), file_set, F.lit("date_pairs"), date_pairs
+            ),
+        ))
     # the stats barrier row IS the checkpoint payload: the digest blob, and
     # the partition's full stat vector + capped sample, which let a later
     # PRUNED resume rebuild drift baselines without rescanning this
@@ -698,10 +822,7 @@ def _validate_body(
             .cast("long").alias("row_count"),
             F.lit(run_id).alias("run_id"),
             validated_at.alias("validated_at"),
-            F.map_from_arrays(
-                F.array(F.lit("checks_run"), F.lit("checks_failed")),
-                F.array(F.col("checks_run").cast("double"), F.col("checks_failed").cast("double")),
-            ).alias("metrics"),
+            metrics.alias("metrics"),
             F.col("stat_values"),
             F.col("sample"),
         )

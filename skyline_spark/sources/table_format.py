@@ -237,9 +237,9 @@ class IcebergFormat(TableFormat):
         self._check_ident(location)
         cat = self._catalog_of(location)
         tbl = location.split(".", 1)[1]
-        when = _dt.datetime.utcfromtimestamp(older_than_ts).strftime(
-            "%Y-%m-%d %H:%M:%S"
-        )
+        when = _dt.datetime.fromtimestamp(
+            older_than_ts, _dt.timezone.utc
+        ).strftime("%Y-%m-%d %H:%M:%S")
         # explicit +00:00 zone: a zone-less literal would be read in the
         # Spark session timezone, shifting the expiry boundary by the
         # session's UTC offset — up to hours of snapshots deleted (or

@@ -886,3 +886,40 @@ def test_drift_is_one_shuffle_into_map_in_arrow(spark, tmp_path, mode):
     assert len(re.findall(r"(?<!Broadcast)Exchange hashpartitioning\(lang#\d+, stat#\d+", p)) == 1
     assert len(re.findall(r"(?<!Broadcast)Exchange ", p)) == 1
     assert p.count("BroadcastExchange") == (2 if mode == "targets" else 1)
+
+
+def test_pruned_resume_plans_no_sort_merge_join_or_bloom_filter(spark, tmp_path):
+    # the barriers validate() joins over carry product-sized estimates
+    # (their plans join frames no side of which is unique on the key), and
+    # a join over such a leaf may START as a sort-merge shuffle: AQE must
+    # re-plan every one into a broadcast once the leaf's real size is
+    # known, and no plan may arm a runtime bloom-filter subquery. Read off
+    # every SQL execution of a pruned resume and the caller's writes, in
+    # the plan each finally ran
+    from skyline_spark.plans.checkpoint import append_checkpoint
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = {e.executionId() for e in executions()}
+    res, ckpt = _resumed_result(spark, tmp_path, True, new_day=True)
+    assert res.verdicts.collect()
+    res.violations.write.parquet(str(tmp_path / "violations"))
+    append_checkpoint(res.checkpoint, ckpt)
+    res.run_metrics.write.parquet(str(tmp_path / "runs"))
+    res.release()
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in before
+    ]
+    assert len(plans) > 10
+    assert any("== Final Plan ==" in p for p in plans)
+    for p in plans:
+        assert "SortMergeJoin" not in p.split("== Initial Plan ==")[0], p
+        assert "bloom_filter_agg" not in p and "might_contain" not in p, p

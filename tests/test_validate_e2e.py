@@ -500,7 +500,7 @@ def test_prune_predicate_reaches_the_scan(spark, tmp_path):
         return buf.getvalue()
 
     df_flat = spark.read.parquet(flat)
-    p_flat = plan_of(df_flat.where(_prune_predicate(df_flat, dates, False)))
+    p_flat = plan_of(df_flat.where(_prune_predicate(dates, False)))
     assert "PushedFilters" in p_flat
     assert "warc_ts" in p_flat.split("PushedFilters", 1)[1].split("\n", 1)[0]
 
@@ -508,7 +508,7 @@ def test_prune_predicate_reaches_the_scan(spark, tmp_path):
         "partition_date", "_native_partition_date"
     )
     p_part = plan_of(
-        df_part.where(_prune_predicate(df_part, dates, False, use_native=True))
+        df_part.where(_prune_predicate(dates, False, use_native=True))
     )
     pf = [
         line for line in p_part.splitlines() if "PartitionFilters" in line
@@ -602,6 +602,374 @@ def test_pruned_resume_audits_native_layout(spark, tmp_path):
     assert verd_p == _canon_rows(res_full.verdicts)
     res_full.release()
     res_pruned.release()
+
+
+# ---------------------------------------------------------------------------
+# file-set change detection: on a hive partition_date= layout a pruned
+# resume narrow-scans only the dates whose file listing changed since the
+# checkpoint recorded it, or that have no record. Every risk below also
+# compares the pruned run's verdicts, violations and drift baselines with a
+# full rescan's.
+#
+# Outside the contract (plans.stats narrow_partition_keys): an in-place
+# rewrite that keeps a file's path and length AND restores its old mtime
+# looks unchanged. The Iceberg analog of any rewrite is a new snapshot.
+# ---------------------------------------------------------------------------
+
+HIVE_DAYS = 8  # 2026-08-01 .. 2026-08-08
+HIVE_DATES = {str(BASE + datetime.timedelta(days=i)) for i in range(HIVE_DAYS)}
+NEW_DAY = BASE + datetime.timedelta(days=HIVE_DAYS)
+CFG_FULL = ValidationConfig(min_history=4, stale_after_partitions=None)
+CFG_PRUNED = ValidationConfig(
+    min_history=4, stale_after_partitions=None, pruned_resume=True
+)
+
+
+def _write_hive(spark, path, n_rows, n_days, base_date="2026-08-01",
+                defects=True, mode="overwrite", shift_days=0):
+    """``synth_pages`` written under ``partition_date=`` directories, one
+    file per directory; ``shift_days`` moves the directory off the
+    days(warc_ts) key."""
+    from skyline_spark.plans.stats import with_partition
+
+    pages = with_partition(
+        synth_pages(spark, n_rows, n_days, base_date=base_date, defects=defects)
+    ).withColumn("partition_date", F.date_add("partition_date", shift_days))
+    pages.repartition("partition_date").write.mode(mode).partitionBy(
+        "partition_date"
+    ).parquet(path)
+
+
+def _day_files(pages, day):
+    import os
+
+    d = os.path.join(pages, f"partition_date={day}")
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _seed_hive(spark, tmp_path, cfg=CFG_PRUNED, extra=None):
+    """A HIVE_DAYS-day hive table plus the checkpoint of one run over it
+    (a pruned run records every date's file set). ``extra(pages)`` edits
+    the table before the run."""
+    pages = str(tmp_path / "pages")
+    ckpt = str(tmp_path / "ckpt")
+    _write_hive(spark, pages, 4_000, HIVE_DAYS)
+    if extra is not None:
+        extra(pages)
+    seed = validate(
+        spark.read.parquet(pages), cfg, checkpoint_path=ckpt, run_id="seed",
+        run_ts=RUN_TS_AUG11,
+    )
+    append_checkpoint(seed.checkpoint, ckpt)
+    seed.release()
+    return pages, ckpt
+
+
+def _append_new_day(spark, pages):
+    _write_hive(spark, pages, 500, 1, base_date=str(NEW_DAY), defects=False,
+                mode="append")
+
+
+def _validate_module():
+    # the package re-exports validate() under the module's own name
+    import importlib
+
+    return importlib.import_module("skyline_spark.plans.validate")
+
+
+def _resume_both(spark, monkeypatch, frame, ckpt):
+    """A full rescan and a pruned resume of ``frame`` from ``ckpt``, whose
+    verdicts, violations and drift baselines (the (date, lang) pairs fed to
+    drift_verdicts) must agree. Returns the pruned result, the baseline
+    pairs and, per narrow_partition_keys call of the pruned run, the date
+    directories its input frame reads plus that frame's row count. The
+    directories come from ``input_file_name()`` — the files the scan opens
+    after partition pruning; ``inputFiles()`` lists the relation's whole
+    file index whatever the filter."""
+    plan = _validate_module()
+    baselines = []
+    real_drift = plan.drift_verdicts
+
+    def drift_spy(stats, *args, **kwargs):
+        baselines.append({
+            (r["partition_date"], r["lang"])
+            for r in stats.select("partition_date", "lang").distinct().collect()
+        })
+        return real_drift(stats, *args, **kwargs)
+
+    monkeypatch.setattr(plan, "drift_verdicts", drift_spy)
+    full = validate(frame, CFG_FULL, checkpoint_path=ckpt, run_id="rf",
+                    run_ts=RUN_TS_AUG11 + 86400)
+    scans = []
+    real = plan.narrow_partition_keys
+
+    def spy(pages, *args, **kwargs):
+        dirs = pages.select(
+            F.regexp_extract(
+                F.input_file_name(), r"partition_date=([^/]+)", 1
+            ).alias("d")
+        ).distinct().collect()
+        scans.append(({r["d"] for r in dirs} - {""}, pages.count()))
+        return real(pages, *args, **kwargs)
+
+    monkeypatch.setattr(plan, "narrow_partition_keys", spy)
+    pruned = validate(frame, CFG_PRUNED, checkpoint_path=ckpt, run_id="rp",
+                      run_ts=RUN_TS_AUG11 + 86400)
+    monkeypatch.undo()
+    assert _canon_rows(pruned.verdicts) == _canon_rows(full.verdicts)
+    assert _canon_rows(pruned.violations) == _canon_rows(full.violations)
+    assert baselines[0] == baselines[1]
+    full.release()
+    return pruned, scans, baselines[1]
+
+
+def _recorded(res):
+    """``{date: (file_set, date_pairs)}`` over a run's checkpoint rows."""
+    return {
+        r["partition_date"]: (r["metrics"].get("file_set"),
+                              r["metrics"].get("date_pairs"))
+        for r in res.checkpoint.collect()
+    }
+
+
+def test_file_sets_narrow_scan_only_the_new_day(spark, tmp_path, monkeypatch):
+    """(a) After one appended day, the narrow scan reads only the new
+    day's directory, and the run records that day's file set in turn."""
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    _append_new_day(spark, pages)
+    pruned, scans, _ = _resume_both(spark, monkeypatch, spark.read.parquet(pages), ckpt)
+    assert [dirs for dirs, _ in scans] == [{str(NEW_DAY)}]
+    assert {r["partition_date"] for r in pruned.verdicts.collect()} == {NEW_DAY}
+    rec = _recorded(pruned)
+    assert set(rec) == {NEW_DAY}
+    file_set, date_pairs = rec[NEW_DAY]
+    assert file_set is not None and date_pairs == pruned.verdicts.count()
+    pruned.release()
+
+
+def test_file_sets_rewritten_file_rescans_its_date(spark, tmp_path, monkeypatch):
+    """(b) A file rewritten with the same length and a later mtime gets
+    its date re-scanned."""
+    import os
+
+    day = BASE + datetime.timedelta(days=2)
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    (f,) = _day_files(pages, day)
+    with open(f, "rb") as fh:
+        data = fh.read()
+    with open(f, "wb") as fh:
+        fh.write(data)
+    st = os.stat(f)
+    os.utime(f, (st.st_atime, st.st_mtime + 60))
+    _append_new_day(spark, pages)
+    pruned, scans, _ = _resume_both(spark, monkeypatch, spark.read.parquet(pages), ckpt)
+    assert [dirs for dirs, _ in scans] == [{str(day), str(NEW_DAY)}]
+    pruned.release()
+
+
+def test_file_sets_moved_file_rescans_both_dates(spark, tmp_path, monkeypatch):
+    """(c) A file moved between two date directories gets both dates
+    re-scanned. Its rows now disagree with their directory, so the audit
+    then falls back to a narrow scan of the whole table, and the run
+    records no file set: recording ``dst`` would let a later run skip it
+    while it holds ``src``'s rows, and fingerprint ``src`` without them."""
+    import os
+    import warnings as _w
+
+    src = BASE + datetime.timedelta(days=1)
+    dst = BASE + datetime.timedelta(days=4)
+    second = []
+
+    def second_file(pages):
+        # a second file under ``src``, so the directory outlives the move
+        before = set(_day_files(pages, src))
+        _write_hive(spark, pages, 300, 1, base_date=str(src), defects=False,
+                    mode="append")
+        second.extend(set(_day_files(pages, src)) - before)
+
+    pages, ckpt = _seed_hive(spark, tmp_path, extra=second_file)
+    (f,) = second
+    to = os.path.join(os.path.dirname(_day_files(pages, dst)[0]), os.path.basename(f))
+    os.rename(f, to)
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):
+        os.rename(crc, os.path.join(os.path.dirname(to), os.path.basename(crc)))
+    # new rows make ``dst``'s pairs targets, so the run writes their rows
+    _write_hive(spark, pages, 300, 1, base_date=str(dst), defects=False,
+                mode="append")
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always")
+        pruned, scans, _ = _resume_both(
+            spark, monkeypatch, spark.read.parquet(pages), ckpt
+        )
+    assert [dirs for dirs, _ in scans] == [{str(src), str(dst)}, HIVE_DATES]
+    assert any("days(warc_ts)" in str(w.message) for w in caught)
+    rec = _recorded(pruned)
+    assert dst in rec and set(rec.values()) == {(None, None)}
+    pruned.release()
+
+
+def test_file_sets_deleted_date_leaves_verdicts_and_baselines(
+    spark, tmp_path, monkeypatch
+):
+    """(d) A deleted date directory appears neither in the verdicts nor in
+    the drift baselines."""
+    import shutil
+
+    gone = BASE
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    shutil.rmtree(f"{pages}/partition_date={gone}")
+    _append_new_day(spark, pages)
+    pruned, scans, baselines = _resume_both(
+        spark, monkeypatch, spark.read.parquet(pages), ckpt
+    )
+    assert [dirs for dirs, _ in scans] == [{str(NEW_DAY)}]
+    dates = {d for d, _ in baselines}
+    assert gone not in dates and NEW_DAY in dates
+    assert gone not in {r["partition_date"] for r in pruned.verdicts.collect()}
+    pruned.release()
+
+
+def test_file_sets_reuse_only_rows_of_the_current_file_set(
+    spark, tmp_path, monkeypatch
+):
+    """A skipped date's fingerprints are exactly its rows recorded under
+    the current file set: a lang the date no longer holds keeps an older
+    latest row, which must not come back as a pair or a baseline."""
+    import os
+
+    day = BASE + datetime.timedelta(days=1)  # no defect, so no "xx" lang
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    # rewrite ``day`` without zho, with new rows for each other lang, so the
+    # next run re-validates, and re-records, every pair the date still holds
+    rewrite = str(tmp_path / "rewrite")
+    spark.read.parquet(pages).where(F.col("partition_date") == day).drop(
+        "partition_date"
+    ).unionByName(
+        synth_pages(spark, 400, 1, base_date=str(day), defects=False)
+    ).where(F.col("lang") != "zho").coalesce(1).write.parquet(rewrite)
+    (old,) = _day_files(pages, day)
+    os.remove(old)
+    for f in os.listdir(rewrite):
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(rewrite, f),
+                      os.path.join(os.path.dirname(old), f))
+    second = validate(
+        spark.read.parquet(pages), CFG_PRUNED, checkpoint_path=ckpt,
+        run_id="r2", run_ts=RUN_TS_AUG11 + 3600,
+    )
+    append_checkpoint(second.checkpoint, ckpt)
+    second.release()
+    assert load_checkpoint(spark, ckpt).where(
+        (F.col("partition_date") == day) & (F.col("lang") == "zho")
+    ).count()
+    _append_new_day(spark, pages)
+    pruned, scans, baselines = _resume_both(
+        spark, monkeypatch, spark.read.parquet(pages), ckpt
+    )
+    assert [dirs for dirs, _ in scans] == [{str(NEW_DAY)}]
+    assert (day, "eng") in baselines and (day, "zho") not in baselines
+    pruned.release()
+
+
+@pytest.mark.parametrize("origin", ["full_run", "pre_change"])
+def test_file_sets_unrecorded_checkpoint_scans_everything(
+    spark, tmp_path, monkeypatch, origin
+):
+    """(e) A checkpoint without file-set records — written by a full-mode
+    run, or before the records existed — leads to a full narrow scan."""
+    if origin == "full_run":
+        pages, ckpt = _seed_hive(spark, tmp_path, cfg=CFG_FULL)
+    else:
+        pages, recorded = _seed_hive(spark, tmp_path)
+        ckpt = str(tmp_path / "ckpt_pre_change")
+        load_checkpoint(spark, recorded).withColumn(
+            "metrics",
+            F.map_filter(
+                "metrics", lambda k, v: ~k.isin("file_set", "date_pairs")
+            ),
+        ).write.parquet(ckpt)
+    assert all(
+        set(r["metrics"]) == {"checks_run", "checks_failed"}
+        for r in load_checkpoint(spark, ckpt).collect()
+    )
+    _append_new_day(spark, pages)
+    pruned, scans, _ = _resume_both(spark, monkeypatch, spark.read.parquet(pages), ckpt)
+    assert [dirs for dirs, _ in scans] == [HIVE_DATES | {str(NEW_DAY)}]
+    # the pruned run records the new day's file set (the only target date)
+    assert set(_recorded(pruned)) == {NEW_DAY}
+    pruned.release()
+
+
+def test_file_sets_lang_filtered_append_rescans_the_date(
+    spark, tmp_path, monkeypatch
+):
+    """(f) A checkpoint appended with one lang filtered out gets that date
+    re-scanned: the date's latest rows under its file set fall short of
+    the pairs it holds."""
+    day = BASE + datetime.timedelta(days=3)
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    # new rows under ``day`` change the fingerprint of each of its langs,
+    # so the next run re-validates (and re-records) every pair of the date
+    _write_hive(spark, pages, 600, 1, base_date=str(day), defects=False,
+                mode="append")
+    second = validate(
+        spark.read.parquet(pages), CFG_PRUNED, checkpoint_path=ckpt,
+        run_id="r2", run_ts=RUN_TS_AUG11 + 3600,
+    )
+    langs = {r["lang"] for r in second.verdicts.collect() if r["partition_date"] == day}
+    assert len(langs) > 1
+    append_checkpoint(second.checkpoint.where(F.col("lang") != "eng"), ckpt)
+    second.release()
+    pruned, scans, _ = _resume_both(spark, monkeypatch, spark.read.parquet(pages), ckpt)
+    assert [dirs for dirs, _ in scans] == [{str(day)}]
+    pruned.release()
+
+
+@pytest.mark.parametrize("shape", ["where", "in_memory"])
+def test_file_sets_need_a_bare_file_scan(spark, tmp_path, monkeypatch, shape):
+    """(g) A frame that is not a bare file scan — a filter on top, or an
+    in-memory frame — leads to a full narrow scan: its file listing need
+    not describe its rows."""
+    from skyline_spark.plans.stats import partition_file_sets
+
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    _append_new_day(spark, pages)
+    bare = spark.read.parquet(pages)
+    assert set(map(str, partition_file_sets(bare))) == HIVE_DATES | {str(NEW_DAY)}
+    frame = (
+        bare.where(F.col("url").isNotNull()) if shape == "where"
+        else bare.localCheckpoint()
+    )
+    assert partition_file_sets(frame) is None
+    pruned, scans, _ = _resume_both(spark, monkeypatch, frame, ckpt)
+    assert [n for _, n in scans] == [frame.count()]
+    assert set(_recorded(pruned).values()) == {(None, None)}
+    pruned.release()
+
+
+def test_file_sets_mismatched_changed_dir_scans_everything(
+    spark, tmp_path, monkeypatch
+):
+    """(h) A changed directory whose rows disagree with days(warc_ts)
+    leads to a narrow scan of the whole table plus the layout warning, and
+    the run records no file set."""
+    import warnings as _w
+
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    # the new day's rows land one directory late
+    _write_hive(spark, pages, 500, 1, base_date=str(NEW_DAY), defects=False,
+                mode="append", shift_days=1)
+    late = str(NEW_DAY + datetime.timedelta(days=1))
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always")
+        pruned, scans, _ = _resume_both(
+            spark, monkeypatch, spark.read.parquet(pages), ckpt
+        )
+    assert [dirs for dirs, _ in scans] == [{late}, HIVE_DATES | {late}]
+    assert any("days(warc_ts)" in str(w.message) for w in caught)
+    assert set(_recorded(pruned).values()) == {(None, None)}
+    pruned.release()
 
 
 def test_run_metrics_persist_and_readback(spark, tmp_path):
