@@ -179,9 +179,16 @@ def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
     not recorded; see ``CHECKPOINT_SCHEMA.metrics``), which decides whether
     the pruned path narrow-scans the date. The frame is cached — the caller
     owns releasing it (``.unpersist()``) once the run's actions are done.
+    The session lets AQE coalesce a cached plan's output (session.py), so
+    the checkpoint-sized frame is read by one task, not one per shuffle
+    partition.
+
     Raises if any surviving row predates the stat_values/sample columns:
     silently shortening drift baselines would change verdicts with no
     signal — re-run once without pruning to rewrite the checkpoint instead.
+    The check is a plain count, never a ``limit``: Spark names a limit's
+    counter from a JVM-wide sequence, so a limit's generated code differs
+    on every run and a resident session would compile it afresh each time.
     """
     payload = F.struct(
         F.col("snapshot_id"), F.col("stat_values"), F.col("sample"),
@@ -205,9 +212,7 @@ def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
     # guard, the pruned path's skip decision and reused fingerprints, and
     # the run's drift inputs — cache for the run
     latest = latest.cache()
-    n_legacy = (
-        latest.where(F.col("stat_values").isNull()).limit(1).count()
-    )
+    n_legacy = latest.where(F.col("stat_values").isNull()).count()
     if n_legacy:
         latest.unpersist()
         raise RuntimeError(

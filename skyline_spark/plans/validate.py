@@ -363,11 +363,10 @@ def _date_map(values: dict) -> F.Column:
 
 def _recorded_under(history: DataFrame, file_sets: dict) -> DataFrame:
     """The latest checkpoint rows recorded under their date's file set in
-    ``file_sets``. Checkpoint-sized, so one task reads it: a per-date count
-    over it needs no shuffle."""
+    ``file_sets``."""
     return history.where(
         F.col("file_set") == _date_map(file_sets)[F.col("partition_date")]
-    ).coalesce(1)
+    )
 
 
 def _unchanged_dates(history: DataFrame, file_sets: dict) -> set:

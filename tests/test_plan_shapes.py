@@ -888,16 +888,13 @@ def test_drift_is_one_shuffle_into_map_in_arrow(spark, tmp_path, mode):
     assert p.count("BroadcastExchange") == (2 if mode == "targets" else 1)
 
 
-def test_pruned_resume_plans_no_sort_merge_join_or_bloom_filter(spark, tmp_path):
-    # the barriers validate() joins over carry product-sized estimates
-    # (their plans join frames no side of which is unique on the key), and
-    # a join over such a leaf may START as a sort-merge shuffle: AQE must
-    # re-plan every one into a broadcast once the leaf's real size is
-    # known, and no plan may arm a runtime bloom-filter subquery. Read off
-    # every SQL execution of a pruned resume and the caller's writes, in
-    # the plan each finally ran
+@pytest.fixture(scope="module")
+def pruned_resume_plans(spark, tmp_path_factory):
+    """The plan each SQL execution of a pruned resume and the caller's
+    writes finally ran, read off the session's status store."""
     from skyline_spark.plans.checkpoint import append_checkpoint
 
+    tmp_path = tmp_path_factory.mktemp("pruned_resume_plans")
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -919,7 +916,29 @@ def test_pruned_resume_plans_no_sort_merge_join_or_bloom_filter(spark, tmp_path)
         if e.executionId() not in before
     ]
     assert len(plans) > 10
+    return plans
+
+
+def test_pruned_resume_plans_no_sort_merge_join_or_bloom_filter(pruned_resume_plans):
+    # the barriers validate() joins over carry product-sized estimates
+    # (their plans join frames no side of which is unique on the key), and
+    # a join over such a leaf may START as a sort-merge shuffle: AQE must
+    # re-plan every one into a broadcast once the leaf's real size is
+    # known, and no plan may arm a runtime bloom-filter subquery. Read off
+    # every SQL execution of a pruned resume and the caller's writes, in
+    # the plan each finally ran
+    plans = pruned_resume_plans
     assert any("== Final Plan ==" in p for p in plans)
     for p in plans:
         assert "SortMergeJoin" not in p.split("== Initial Plan ==")[0], p
         assert "bloom_filter_agg" not in p and "might_contain" not in p, p
+
+
+def test_pruned_resume_plans_have_no_limit(pruned_resume_plans):
+    # Spark names a limit's counter in the generated code from a JVM-wide
+    # sequence (_limit_counter_N), so a limit's classes differ on every
+    # run and never hit the codegen cache: a plan validate() makes on
+    # every run must not carry one
+    for p in pruned_resume_plans:
+        for node in ("LocalLimit", "GlobalLimit", "CollectLimit"):
+            assert node not in p, p

@@ -972,6 +972,46 @@ def test_file_sets_mismatched_changed_dir_scans_everything(
     pruned.release()
 
 
+#: classes the third identical pruned resume and its writes may compile.
+#: Over 12 runs, each in a fresh session, the third run compiled 0-10
+#: (median 1; the larger counts are a plan AQE picked in that run only),
+#: against ~250 in every run with Spark's default 100-entry codegen cache
+MAX_STEADY_COMPILES = 16
+
+
+def test_repeated_pruned_resume_reuses_generated_classes(spark, tmp_path):
+    """A resident session re-plans the same stages on every daily sweep:
+    with the codegen cache sized to the run's working set (session.py) and
+    no per-run limit counter in any plan, a third identical run from a
+    fresh copy of the same checkpoint, with the writes submit_validate.py
+    makes, finds almost every generated class already compiled."""
+    import shutil
+
+    from skyline_spark.plans.checkpoint import append_run_metrics
+    from skyline_spark.sources.table_format import DEFAULT_FORMAT
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    pages, seeded = _seed_hive(spark, tmp_path)
+    _append_new_day(spark, pages)
+    compiled = []
+    for i in range(3):
+        out = tmp_path / f"op{i}"
+        ckpt = str(out / "ckpt")
+        shutil.copytree(seeded, ckpt)
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        res = validate(
+            spark.read.parquet(pages), CFG_PRUNED, checkpoint_path=ckpt,
+            run_id="resume", run_ts=RUN_TS_AUG11 + 86400,
+        )
+        DEFAULT_FORMAT.overwrite(res.verdicts, str(out / "verdicts"))
+        DEFAULT_FORMAT.overwrite(res.violations, str(out / "violations"))
+        append_checkpoint(res.checkpoint, ckpt)
+        append_run_metrics(res.run_metrics, str(out / "runs"))
+        res.release()
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[2] <= MAX_STEADY_COMPILES, compiled
+
+
 def test_run_metrics_persist_and_readback(spark, tmp_path):
     """Per-run lineage metrics (VERDICT r4 item 3 — analyzer.py:2343-2413
     analog): one RUN_METRICS_SCHEMA row per run, append-only next to the
