@@ -59,6 +59,59 @@ def test_dup_day_fails_uniqueness(result, verdict_map):
     assert row["observed"].startswith("count=")
 
 
+def _digest(rows) -> str:
+    import hashlib
+
+    return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()[:16]
+
+
+def test_constraint_output_pinned(result, spark):
+    """The non-drift violation rows and every verdict's (status, checks_run,
+    checks_failed) on the e2e fixture, pinned by digest: example caps,
+    example order and observed/expected text included. The row-level
+    examples are also checked against a direct computation: per failing
+    pair, the duplicated urls by count descending then url, and the
+    off-allowlist rows by url, each cut at the cap."""
+    cap = result.config.max_violation_examples
+    rows = [
+        (str(r["partition_date"]), r["lang"], r["check"], r["column"],
+         r["url"], r["observed"], r["expected"])
+        for r in result.violations.where("check != 'drift'").collect()
+    ]
+    per_check: dict = {}
+    for r in rows:
+        per_check.setdefault(r[:4], []).append(r)
+    assert per_check and all(len(v) <= cap for v in per_check.values())
+    # the fixture exercises the cap on both row-level checks
+    assert {k[2] for k, v in per_check.items() if len(v) == cap} == {
+        "uniqueness", "referential"
+    }
+    pages = synth_pages(spark, N_ROWS, N_DAYS).withColumn(
+        "partition_date", F.to_date("warc_ts")
+    )
+    dups = (
+        pages.groupBy("partition_date", "lang", "url").count()
+        .where("count > 1").collect()
+    )
+    want: dict = {}
+    for r in sorted(dups, key=lambda r: (-r["count"], r["url"])):
+        key = (str(r["partition_date"]), r["lang"], "uniqueness", "url")
+        want.setdefault(key, []).append(r["url"])
+    for r in sorted(pages.where("lang = 'xx'").collect(), key=lambda r: r["url"]):
+        key = (str(r["partition_date"]), r["lang"], "referential", "lang")
+        want.setdefault(key, []).append(r["url"])
+    assert {k: sorted(v[:cap]) for k, v in want.items()} == {
+        k: sorted(r[4] for r in per_check.get(k, [])) for k in want
+    }
+    assert (len(rows), _digest(rows)) == (87, "fed60517fd9c4a8d")
+    verdicts = [
+        (str(r["partition_date"]), r["lang"], r["status"], r["checks_run"],
+         r["checks_failed"])
+        for r in result.verdicts.collect()
+    ]
+    assert (len(verdicts), _digest(verdicts)) == (81, "dd4eabe1c498eb2e")
+
+
 def test_bad_lang_day_fails_referential(result, verdict_map):
     assert verdict_map[(DD["lang"], "xx")]["status"] == "FAIL"
     v = result.violations.where(
