@@ -138,7 +138,8 @@ def pending_partitions(
     run_ts: float | None = None,
     max_age_days: float | None = None,
 ) -> DataFrame:
-    """(partition_date, lang) pairs needing validation.
+    """(partition_date, lang) pairs needing validation: the rows of
+    ``current``, with all of its columns.
 
     ``current``: one row per (partition_date, lang) with ``snapshot_id``
     (the content fingerprint from plans.stats). Anti-join against checkpoint
@@ -157,9 +158,7 @@ def pending_partitions(
         cutoff = F.to_timestamp(F.lit(run_ts - max_age_days * 86400.0))
         done = done.where(F.col("validated_at") >= cutoff)
     done = done.select(*PARTITION_COLS, "snapshot_id")
-    return current.select(*PARTITION_COLS, "snapshot_id").join(
-        done, [*PARTITION_COLS, "snapshot_id"], "left_anti"
-    )
+    return current.join(done, [*PARTITION_COLS, "snapshot_id"], "left_anti")
 
 
 def checkpoint_history(checkpoint: DataFrame) -> DataFrame:

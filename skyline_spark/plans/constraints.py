@@ -4,9 +4,10 @@ The Boundary restatement (SURVEY §2.6): per-metric static-threshold tuples
 become declarative specs evaluated as Column predicates; violations are rows
 in the sidecar table (FIXTURES F5 schema), never driver-side loops.
 
-Violation volume control (10^12-row posture): per-partition example rows are
-capped with a rank-window (counts stay exact in ``observed``); the cap is the
-only window in the plan and runs on already-filtered violation candidates.
+ONE rule judges every per-pair check on its stats row (:func:`failed_checks`),
+as Deequ judges constraints over metrics of the scans already made
+(Schelter et al., PVLDB 11(12), 2018). Example rows are fetched only for
+failing pairs, capped per pair with a rank-window (counts stay exact).
 """
 
 from __future__ import annotations
@@ -17,17 +18,17 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from .stats import PARTITION_COLS, with_partition
+from .stats import PARTITION_COLS, pair_join
 
 __all__ = [
     "VIOLATION_SCHEMA",
     "StaticRule",
     "DEFAULT_LANG_ALLOWLIST",
+    "failed_checks",
     "schema_violations",
     "uniqueness_violations",
     "referential_violations",
     "static_rule_violations",
-    "empty_violations",
 ]
 
 VIOLATION_SCHEMA = T.StructType(
@@ -64,23 +65,6 @@ class StaticRule:
     trigger: float
 
 
-def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
-
-
-def _finish(df: DataFrame, check: str, column: str, expected: str) -> DataFrame:
-    return df.select(
-        "partition_date",
-        "lang",
-        F.lit(check).alias("check"),
-        F.lit(column).alias("column"),
-        df["url"].cast("string").alias("url") if "url" in df.columns else F.lit(None).cast("string").alias("url"),
-        F.col("observed").cast("string"),
-        F.lit(expected).alias("expected"),
-        F.lit(None).cast(T.ArrayType(T.StringType())).alias("triggered_algorithms"),
-    )
-
-
 def schema_violations(pages: DataFrame, expected: T.StructType) -> DataFrame:
     """Expected StructType vs actual — table-level, evaluated on the driver
     (schema is metadata, not data; no job is launched)."""
@@ -108,112 +92,116 @@ def schema_violations(pages: DataFrame, expected: T.StructType) -> DataFrame:
             and not (name == "partition_date" and actual[name] == "date")
         ):
             rows.append((name, actual[name], "<unexpected column>"))
-    spark = pages.sparkSession
-    out = spark.createDataFrame(
+    return pages.sparkSession.createDataFrame(
         [(None, None, "schema", c, None, o, e, None) for c, o, e in rows],
         VIOLATION_SCHEMA,
     )
-    return out
 
 
-def uniqueness_violations(pages: DataFrame, key: str = "url", max_examples: int = 20) -> DataFrame:
-    """Duplicate-key rows per partition (url uniqueness, north_star).
+def failed_checks(
+    pairs: DataFrame,
+    static_rules: Sequence[StaticRule],
+    lang_allowlist: Sequence[str] = tuple(DEFAULT_LANG_ALLOWLIST),
+) -> DataFrame:
+    """The ONE rule: every check is a count over a row of ``pairs`` (pair
+    key, ``stat_values``, ``dup_url_rows``, ``too_short``), failed when it
+    is > 0; one ``(pair, check, column, expected, observed)`` row per
+    failure. Uniqueness counts phase-1 candidates
+    (plans.stats ``duplicate_url_rows``). Referential checks are
+    predicates on the pair key — ``lang`` is a key column, ``partition_date``
+    = days(warc_ts) and the window bounds are midnights — so a pair fails
+    for all of its rows or for none. A static rule fires on ``stat_values``,
+    its stat ``observed``. A too-short pair skips the row-level checks, as
+    it skips drift."""
+    row_level = ~F.col("too_short")
+    rows = F.col("stat_values")["row_count"]
+    lang, day = F.col("lang"), F.col("partition_date")
+    ts_min, ts_max = "2000-01-01", "2100-01-01"
+    bad_lang = lang.isNull() | ~lang.isin(list(lang_allowlist))
+    bad_ts = day.isNull() | (day < F.lit(ts_min).cast("date")) | (
+        day >= F.lit(ts_max).cast("date")
+    )
+    checks = [
+        ("uniqueness", "url", "count=1",
+         F.when(row_level, F.col("dup_url_rows")), None),
+        ("referential", "lang", f"one of {len(lang_allowlist)} ISO-639-3 codes",
+         F.when(row_level & bad_lang, rows), None),
+        ("referential", "warc_ts", f"[{ts_min}, {ts_max})",
+         F.when(row_level & bad_ts, rows), None),
+    ]
+    for rule in static_rules:
+        value = F.col("stat_values")[rule.stat]
+        fires = {"less_than": value < rule.trigger,
+                 "greater_than": value > rule.trigger}.get(rule.op)
+        if fires is None:
+            raise ValueError(f"unknown op {rule.op!r}")
+        checks.append(("static", rule.stat, f"not {rule.op} {rule.trigger}",
+                       F.when(fires, 1), value))
+    entries = F.array(*(
+        F.struct(
+            F.lit(check).alias("check"),
+            F.lit(column).alias("column"),
+            F.lit(expected).alias("expected"),
+            F.lit(observed).cast("string").alias("observed"),
+            count.cast("double").alias("n"),
+        )
+        for check, column, expected, count, observed in checks
+    ))
+    return (
+        pairs.select(*PARTITION_COLS, F.inline(entries))
+        .where(F.col("n") > 0)
+        .drop("n")
+    )
 
-    Two-phase hash prefilter: phase 1 shuffles only ``(partition,
-    xxhash64(key))`` — 8 bytes instead of a full url string, the whole-table
-    shuffle that dominates this check — and keeps hash groups seen more
-    than once. Phase 2 re-groups ONLY rows whose hash is a candidate by the
-    actual key, which both restores exactness (64-bit collisions drop out
-    here) and fetches the example urls. When duplicates are rare (the
-    steady-state for a crawl table) phase 2 touches a negligible row set;
-    the candidate side is broadcast, and a duplicate-heavy table at scale
-    would flip that join to shuffled-hash via AQE by removing the hint.
-    """
-    pages = with_partition(pages)
-    kh = F.xxhash64(F.col(key).cast("string"))
-    cand_hashes = (
-        pages.select(*PARTITION_COLS, kh.alias("_kh"))
-        .groupBy(*PARTITION_COLS, "_kh")
+
+def uniqueness_violations(
+    pages: DataFrame, failing: DataFrame, max_examples: int = 20
+) -> DataFrame:
+    """Duplicated-url examples of the pairs whose phase-1 count is non-zero
+    (``failing``: :func:`failed_checks` rows, few and broadcast). Phase 2
+    re-groups only those pairs' rows by the url itself: exact, so a 64-bit
+    collision fails no pair. The most duplicated url first, then by url."""
+    cand = failing.where(F.col("check") == "uniqueness").select(*PARTITION_COLS)
+    dups = (
+        pair_join(pages, cand, "left_semi")
+        .groupBy(*PARTITION_COLS, "url")
         .count()
         .where(F.col("count") > 1)
-        .select(*PARTITION_COLS, "_kh")
     )
-    dup_counts = (
-        pages.withColumn("_kh", kh)
-        .join(F.broadcast(cand_hashes), [*PARTITION_COLS, "_kh"], "left_semi")
-        .groupBy(*PARTITION_COLS, key)
-        .count()
-        .where(F.col("count") > 1)
-    )
-    w = Window.partitionBy(*PARTITION_COLS).orderBy(F.col("count").desc(), F.col(key))
-    capped = (
-        dup_counts.withColumn("_rank", F.row_number().over(w))
+    w = Window.partitionBy(*PARTITION_COLS).orderBy(F.col("count").desc(), "url")
+    return (
+        dups.withColumn("_rank", F.row_number().over(w))
         .where(F.col("_rank") <= max_examples)
-        .withColumn("observed", F.concat(F.lit("count="), F.col("count")))
-        .withColumn("url", F.col(key))
+        .select(
+            *PARTITION_COLS, "url",
+            F.lit("uniqueness").alias("check"),
+            F.lit("url").alias("column"),
+            F.lit("count=1").alias("expected"),
+            F.concat(F.lit("count="), F.col("count")).alias("observed"),
+        )
     )
-    return _finish(capped, "uniqueness", key, "count=1")
 
 
 def referential_violations(
-    pages: DataFrame,
-    lang_allowlist: Sequence[str] = tuple(DEFAULT_LANG_ALLOWLIST),
-    ts_min: str = "2000-01-01",
-    ts_max: str = "2100-01-01",
-    max_examples: int = 20,
+    pages: DataFrame, failing: DataFrame, max_examples: int = 20
 ) -> DataFrame:
-    """lang ∈ allowlist and warc_ts within the crawl window (north_star).
-
-    The allowlist is a literal isin → Catalyst folds it into the scan filter
-    (at larger domains this becomes a broadcast join against a rules table).
-    """
-    pages = with_partition(pages)
-    # cast to string first: a wrong-typed lang column is a *schema* finding,
-    # not a reason to crash the referential scan (ANSI isin would throw)
-    lang_str = F.col("lang").cast("string")
-    bad_lang = pages.where(
-        lang_str.isNull() | ~lang_str.isin(list(lang_allowlist))
-    ).select(*PARTITION_COLS, "url", lang_str.alias("observed"))
-    w = Window.partitionBy(*PARTITION_COLS).orderBy("url")
-    bad_lang = bad_lang.withColumn("_r", F.row_number().over(w)).where(F.col("_r") <= max_examples)
-    lang_v = _finish(bad_lang, "referential", "lang", f"one of {len(lang_allowlist)} ISO-639-3 codes")
-
-    bad_ts = pages.where(
-        F.col("warc_ts").isNull()
-        | (F.col("warc_ts") < F.lit(ts_min).cast("timestamp"))
-        | (F.col("warc_ts") >= F.lit(ts_max).cast("timestamp"))
-    ).select(*PARTITION_COLS, "url", F.col("warc_ts").cast("string").alias("observed"))
-    bad_ts = bad_ts.withColumn("_r", F.row_number().over(w)).where(F.col("_r") <= max_examples)
-    ts_v = _finish(bad_ts, "referential", "warc_ts", f"[{ts_min}, {ts_max})")
-
-    return lang_v.unionAll(ts_v)
+    """Example rows of the pairs failing a referential check (``failing``:
+    :func:`failed_checks` rows). Every row of such a pair fails, so ONE
+    url-ordered window yields the examples of both checks, ``observed``
+    being the row's lang or warc_ts."""
+    ref = failing.where(F.col("check") == "referential").drop("observed")
+    w = Window.partitionBy(*PARTITION_COLS, "column").orderBy("url")
+    return (
+        pair_join(pages.select(*PARTITION_COLS, "url", "warc_ts"), ref, "inner")
+        .withColumn("_rank", F.row_number().over(w))
+        .where(F.col("_rank") <= max_examples)
+        .withColumn("observed", F.when(F.col("column") == "lang", F.col("lang"))
+                    .otherwise(F.col("warc_ts").cast("string")))
+        .drop("_rank", "warc_ts")
+    )
 
 
-def static_rule_violations(stats_long: DataFrame, rules: Sequence[StaticRule]) -> DataFrame:
-    """Boundary static thresholds evaluated on the (tiny) stats table."""
-    out = None
-    for rule in rules:
-        if rule.op == "less_than":
-            pred = F.col("value") < F.lit(rule.trigger)
-        elif rule.op == "greater_than":
-            pred = F.col("value") > F.lit(rule.trigger)
-        else:
-            raise ValueError(f"unknown op {rule.op!r}")
-        hits = (
-            stats_long.where(F.col("stat") == rule.stat)
-            .where(pred)
-            .select(
-                "partition_date",
-                "lang",
-                F.lit("static").alias("check"),
-                F.col("stat").alias("column"),
-                F.lit(None).cast("string").alias("url"),
-                F.col("value").cast("string").alias("observed"),
-                F.lit(f"not {rule.op} {rule.trigger}").alias("expected"),
-                F.lit(None).cast(T.ArrayType(T.StringType())).alias("triggered_algorithms"),
-            )
-        )
-        out = hits if out is None else out.unionAll(hits)
-    if out is None:
-        return empty_violations(stats_long.sparkSession)
-    return out
+def static_rule_violations(failing: DataFrame) -> DataFrame:
+    """Boundary static thresholds: the static rows of :func:`failed_checks`,
+    judged on the (tiny) stats rows."""
+    return failing.where(F.col("check") == "static")

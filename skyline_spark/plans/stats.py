@@ -49,6 +49,8 @@ __all__ = [
     "length_histogram",
     "length_digest",
     "long_form",
+    "duplicate_url_rows",
+    "pair_join",
     "DRIFT_STATS",
     "PARTITION_COLS",
     "DIGEST_BINS_PER_OCTAVE",
@@ -76,6 +78,17 @@ _EPOCH = datetime.date(1970, 1, 1)
 def with_partition(df: DataFrame) -> DataFrame:
     """Derive the partition key — days(warc_ts), the Iceberg partition spec."""
     return df.withColumn("partition_date", F.to_date("warc_ts"))
+
+
+def pair_join(rows: DataFrame, pairs: DataFrame, how: str) -> DataFrame:
+    """``rows`` joined to the tiny, broadcast ``pairs`` on the pair key,
+    NULL-safe, so a NULL date or lang matches itself. Catalyst sizes a
+    null-safe join as a product: use it only where a side can hold a
+    NULL-keyed pair."""
+    right = pairs.withColumnsRenamed({c: f"_pair_{c}" for c in PARTITION_COLS})
+    on = [F.col(c).eqNullSafe(F.col(f"_pair_{c}")) for c in PARTITION_COLS]
+    out = rows.join(F.broadcast(right), on, how)
+    return out.drop(*(f"_pair_{c}" for c in PARTITION_COLS))
 
 
 def slim_pages(pages: DataFrame) -> DataFrame:
@@ -240,6 +253,21 @@ def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
         *(c for s in stat_cols for c in (F.lit(s), F.col(s).cast("double")))
     )
     return wide.select(*PARTITION_COLS, "fingerprint", stat_values.alias("stat_values"))
+
+
+def duplicate_url_rows(pages: DataFrame) -> DataFrame:
+    """Phase 1 of the uniqueness check: per pair, the rows whose
+    ``xxhash64(url)`` another row of the pair shares, as ``dup_url_rows``.
+    It shuffles 8-byte hashes, not url strings. A 64-bit collision can only
+    over-count, so phase 2 (plans.constraints ``uniqueness_violations``)
+    decides."""
+    per_hash = pages.groupBy(
+        *PARTITION_COLS, F.xxhash64(F.col("url").cast("string")).alias("_kh")
+    ).count()
+    return per_hash.groupBy(*PARTITION_COLS).agg(
+        F.sum(F.when(F.col("count") > 1, F.col("count")).otherwise(0))
+        .alias("dup_url_rows")
+    )
 
 
 def long_form(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:

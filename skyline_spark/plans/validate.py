@@ -5,8 +5,8 @@ Spark restatement of the Analyzer sweep (SURVEY §3.2):
     read table → per-partition stats (one agg pass over the big table)
                → drift ensemble over the tiny stats table (one packed row
                  per series → mapInArrow, detectors batched across series)
-               → constraint checks (uniqueness / referential / schema /
-                 static), scans pruned to target partitions
+               → constraint checks: one rule judges each pair's stats row,
+                 example rows fetched only for the pairs that fail
                → pass/fail verdicts + violation sidecar + checkpoint rows
 
 Resume: with a ``checkpoint_path``, already-validated (partition, lang,
@@ -19,7 +19,6 @@ see only checkpoint-sized inputs.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import time as _time
 from dataclasses import dataclass, field
 from typing import Sequence
@@ -48,7 +47,7 @@ from .checkpoint import (
 from .constraints import (
     DEFAULT_LANG_ALLOWLIST,
     StaticRule,
-    VIOLATION_SCHEMA,
+    failed_checks,
     referential_violations,
     schema_violations,
     static_rule_violations,
@@ -57,9 +56,11 @@ from .constraints import (
 from .drift import drift_verdicts
 from .stats import (
     PARTITION_COLS,
+    duplicate_url_rows,
     length_histogram,
     long_form,
     narrow_partition_keys,
+    pair_join,
     partition_file_sets,
     partition_stats,
     slim_pages,
@@ -217,7 +218,7 @@ def validate(
     selection). Defaults run the full registry over DRIFT_STATS.
 
     ``scratch_dir``: materialize the pipeline barriers (the checkpoint
-    read, narrow, slim, len_hist, stats, targets, drift, violations,
+    read, narrow, slim, len_hist, stats, targets, gated, drift, violations,
     verdicts) as parquet scratch tables under ``scratch_dir/<run token>/``
     instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
     wants: localCheckpoint truncates lineage into executor-LOCAL blocks, so
@@ -414,34 +415,38 @@ def _validate_body(
 
     def _resume_targets(fps: DataFrame) -> DataFrame:
         """Stage 2: which (partition, lang) pairs need work — checkpoint
-        anti-join plus the stale-newest re-add (see the STALE comment
-        below). ``fps``: one row per pair with ``snapshot_id``."""
+        anti-join plus the stale-newest re-add — each flagged ``is_stale``
+        (stage 3b). ``fps``: one row per pair with ``snapshot_id``."""
+        # ---- stage 3b: STALE gate on the partition axis -------------------
+        # the reference marks a metric Stale when its newest datapoint is
+        # older than STALE_PERIOD (`analyzer/algorithms.py:588-589`,
+        # `settings.py:393`); here a lang whose NEWEST partition trails the
+        # run date by more than ``stale_after_partitions`` days has stopped
+        # emitting — that newest partition's verdict surfaces as STALE
+        # (per-lang newest is a tiny broadcast aggregate of the fingerprints)
+        if cfg.stale_after_partitions is None:
+            fps = fps.withColumn("is_stale", F.lit(False))
+        else:
+            newest = fps.groupBy("lang").agg(F.max("partition_date").alias("_newest"))
+            fps = fps.join(F.broadcast(newest), "lang", "left").withColumn(
+                "is_stale",
+                (F.col("partition_date") == F.col("_newest"))
+                & (F.datediff(run_date, F.col("_newest")) > cfg.stale_after_partitions),
+            ).drop("_newest")
         if ckpt is None:
             return fps
-        t = pending_partitions(
-            fps, ckpt, vhash, run_ts=run_ts,
-            max_age_days=cfg.revalidate_after_days,
-        )
         # STALE must surface even when nothing else changed: a lang that
         # STOPPED emitting has unchanged fingerprints and detector hash, so
-        # the checkpoint anti-join would remove its newest partition from
-        # targets and the stage-3b staleness verdict could never attach to
-        # any row. Re-add each lang's newest partition whenever it has gone
-        # stale — the reference surfaces Stale metrics on every sweep, not
-        # only on change (`analyzer/algorithms.py:588-589`).
-        if cfg.stale_after_partitions is not None:
-            stale_newest = (
-                fps.groupBy("lang")
-                .agg(F.max("partition_date").alias("partition_date"))
-                .where(
-                    F.datediff(run_date, F.col("partition_date"))
-                    > cfg.stale_after_partitions
-                )
-                .join(fps, PARTITION_COLS, "inner")  # restore snapshot_id
-                .select(*t.columns)
-            )
-            t = t.unionByName(stale_newest).distinct()
-        return t
+        # the checkpoint anti-join alone would drop its newest partition. A
+        # stale newest partition is a target whatever the checkpoint holds
+        # — the reference surfaces Stale metrics on every sweep
+        # (`analyzer/algorithms.py:588-589`). The sets are disjoint (no
+        # distinct), and one partition keeps reads of the union to one task
+        stale = F.coalesce(F.col("is_stale"), F.lit(False))
+        return fps.where(stale).unionByName(pending_partitions(
+            fps.where(~stale), ckpt, vhash, run_ts=run_ts,
+            max_age_days=cfg.revalidate_after_days,
+        )).coalesce(1)
 
     # ---- stage 1.5 (pruned resume only): narrow change detection ---------
     # fingerprint + row count per pair from a scan of (url, warc_ts, lang)
@@ -565,7 +570,8 @@ def _validate_body(
     # re-aggregating slim
     len_hist = store.barrier(length_histogram(slim), "len_hist")
     # barrier "stats": ONE row per (partition, lang) in the checkpoint's own
-    # shape — fingerprint, stat_values, stat_digests, sample. Every consumer
+    # shape — fingerprint, stat_values, stat_digests, sample — plus the
+    # uniqueness check's phase-1 count, dup_url_rows. Every consumer
     # below reads columns of it; the long stats/samples frames come from
     # long_form's one explode. AQE submits the independent agg, sample and
     # digest stages of this one plan together. Its joins stay plain equi-
@@ -574,9 +580,9 @@ def _validate_body(
     # and a product turns later joins over it into shuffles and plants
     # runtime bloom filters (stat_samples has no null-keyed pair anyway)
     pair_stats = store.barrier(
-        stat_digest_blobs(partition_stats(slim, len_hist), len_hist).join(
-            stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left"
-        ),
+        stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
+        .join(stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left")
+        .join(duplicate_url_rows(slim), PARTITION_COLS, "left"),
         "stats",
     )
     stats, samples = long_form(pair_stats)
@@ -609,42 +615,26 @@ def _validate_body(
             PARTITION_COLS, "left_anti",
         )
         drift_stats_in, drift_samples_in = long_form(
-            pair_stats.drop("stat_digests").unionByName(history)
+            pair_stats.drop("stat_digests", "dup_url_rows").unionByName(history)
         )
 
     # ---- stage 3: partition row-count gate (TooShort, FIXTURES F4) -------
-    row_counts = pair_stats.select(
-        *PARTITION_COLS, F.col("stat_values")["row_count"].alias("row_count")
-    )
-    gated = targets.join(row_counts, PARTITION_COLS, "left").withColumn(
-        "too_short", F.coalesce(F.col("row_count"), F.lit(0)) < cfg.min_partition_rows
+    # each target (flagged is_stale in stage 2) with its stats row. A pair
+    # whose date or lang is NULL is a target on every run (no checkpoint
+    # row can match it), and it is judged on its real row count like any
+    # other: the join is null-safe
+    gated = pair_join(
+        targets, pair_stats.select(*PARTITION_COLS, "stat_values", "dup_url_rows"),
+        "left",
+    ).withColumn(
+        "too_short",
+        F.coalesce(F.col("stat_values")["row_count"], F.lit(0))
+        < cfg.min_partition_rows,
     )
 
-    # ---- stage 3b: STALE gate on the partition axis -----------------------
-    # the reference marks a metric Stale when its newest datapoint is older
-    # than STALE_PERIOD (`analyzer/algorithms.py:588-589`, `settings.py:393`);
-    # here a lang whose NEWEST partition trails the run date by more than
-    # ``stale_after_partitions`` days has stopped emitting — that newest
-    # partition's verdict surfaces as STALE (per-lang newest is a tiny
-    # broadcast aggregate of the fingerprint table)
-    if cfg.stale_after_partitions is not None:
-        newest = fingerprints.groupBy("lang").agg(
-            F.max("partition_date").alias("_newest_partition")
-        )
-        gated = (
-            gated.join(F.broadcast(newest), "lang", "left")
-            .withColumn(
-                "is_stale",
-                (F.col("partition_date") == F.col("_newest_partition"))
-                & (
-                    F.datediff(run_date, F.col("_newest_partition"))
-                    > cfg.stale_after_partitions
-                ),
-            )
-            .drop("_newest_partition")
-        )
-    else:
-        gated = gated.withColumn("is_stale", F.lit(False))
+    # barrier "gated": one row per target, read by the drift targets, the
+    # constraint rule and the verdicts — without it each re-runs its joins
+    gated = store.barrier(gated, "gated")
 
     drift_targets = gated.where(~F.col("too_short")).select(*PARTITION_COLS)
 
@@ -666,30 +656,25 @@ def _validate_body(
         algorithms=algorithms,
     ), "drift")
 
-    # ---- stage 5: constraints, scans pruned to target partitions ----------
-    target_pages = slim.join(
-        F.broadcast(drift_targets), PARTITION_COLS, "left_semi"
-    )
-    violations = (
-        schema_viol
-        .unionAll(uniqueness_violations(target_pages, "url", cfg.max_violation_examples))
-        .unionAll(
-            referential_violations(
-                target_pages, lang_allowlist, max_examples=cfg.max_violation_examples
-            )
-        )
-        .unionAll(static_rule_violations(stats.join(
-            F.broadcast(targets.select(*PARTITION_COLS)), PARTITION_COLS, "left_semi"
-        ), static_rules))
-    )
-    drift_viol = (
+    # ---- stage 5: constraints — one rule on the pair rows ------------------
+    # the driver collects the tiny set of failing (pair, check) rows once and
+    # plans an example query only for a check that failed, restricted by a
+    # join against the failing rows — never by per-run literals, which
+    # compile new generated classes on every run. A clean day runs none
+    failing = failed_checks(gated, static_rules, lang_allowlist)
+    failed = {r["check"] for r in failing.select("check").collect()}
+    parts = [static_rule_violations(failing)]
+    if "uniqueness" in failed:
+        parts.append(uniqueness_violations(slim, failing, cfg.max_violation_examples))
+    if "referential" in failed:
+        parts.append(referential_violations(slim, failing, cfg.max_violation_examples))
+    parts.append(
         drift.where(F.col("anomalous"))
         .select(
             "partition_date",
             "lang",
             F.lit("drift").alias("check"),
             F.col("stat").alias("column"),
-            F.lit(None).cast("string").alias("url"),
             F.col("datapoint").cast("string").alias("observed"),
             # n derives from the kernel set that actually voted:
             # register_detector() grows the ensemble, and an algorithm-subset
@@ -702,17 +687,17 @@ def _validate_body(
             F.col("triggered").alias("triggered_algorithms"),
         )
     )
+    violations = schema_viol
+    for part in parts:  # a column a part lacks (url, algorithms) is NULL
+        violations = violations.unionByName(part, allowMissingColumns=True)
     # barrier "violations": the sidecar is example-capped (tiny) but
-    # PRODUCING it scans slim twice (uniqueness shuffle + referential), and
-    # it has two consumers — the returned sidecar and the per-pair
-    # constraint counts folded into verdicts below. Without the barrier
-    # each action pays the constraint scans again. The union keeps every
-    # branch's partitions (10 on a daily resume, most of them empty), and
+    # PRODUCING it may scan slim (the example queries), and it has two
+    # consumers — the returned sidecar and the per-pair constraint counts
+    # folded into verdicts below. Without the barrier each action pays the
+    # example scans again. The union keeps every branch's partitions, and
     # a barrier keeps its input's partitioning, so rebalance first: AQE
     # coalesces the tiny sidecar, and each read of it is one task or two.
-    violations = store.barrier(
-        violations.unionAll(drift_viol).hint("rebalance"), "violations"
-    )
+    violations = store.barrier(violations.hint("rebalance"), "violations")
 
     # ---- stage 6: per-(partition, lang) verdict assembly -------------------
     drift_agg = drift.groupBy(*PARTITION_COLS).agg(
@@ -727,32 +712,28 @@ def _validate_body(
         F.max((F.col("status") == STATUS_BORING).cast("int")).alias("any_boring"),
         F.max((F.col("status") != STATUS_TOO_SHORT).cast("int")).alias("any_history"),
     )
-    # constraint failures per pair (partition-level schema rows excluded)
+    # constraint failures per pair: distinct (check, column, expected), so
+    # two static rules on one stat are two checks; uniqueness counts once
+    # phase 2 confirmed it. A set, as count_distinct plans a second shuffle
     pair_viol = (
-        violations.where(F.col("partition_date").isNotNull())
-        .where(F.col("check") != "drift")
+        violations.where(~F.col("check").isin("drift", "schema"))
         .groupBy(*PARTITION_COLS)
-        .agg(F.count_distinct("check", "column").cast("int").alias("constraint_failed"))
+        .agg(
+            F.size(F.collect_set(F.struct("check", "column", "expected")))
+            .cast("int").alias("constraint_failed")
+        )
     )
     n_constraint_checks = 3 + len(static_rules)  # uniqueness + lang + warc_ts + statics
 
     # barrier "verdicts": one row per partition×lang, consumed by the caller
     # AND the checkpoint and run-metrics rows below
     verdicts = store.barrier((
-        gated.join(drift_agg, PARTITION_COLS, "left")
-        .join(pair_viol, PARTITION_COLS, "left")
-        .select(
-            *PARTITION_COLS,
-            F.col("too_short"),
-            F.col("is_stale"),
-            F.coalesce(F.col("drift_checks"), F.lit(0)).alias("drift_checks"),
-            F.coalesce(F.col("drift_failed"), F.lit(0)).alias("drift_failed"),
-            F.coalesce(F.col("constraint_failed"), F.lit(0)).alias("constraint_failed"),
-            F.col("ensemble"),
-            F.col("consensus"),
-            F.coalesce(F.col("any_boring"), F.lit(0)).alias("any_boring"),
-            F.coalesce(F.col("any_history"), F.lit(0)).alias("any_history"),
+        pair_join(
+            gated.join(F.broadcast(drift_agg), PARTITION_COLS, "left"),
+            pair_viol, "left",
         )
+        .fillna(0, ["drift_checks", "drift_failed", "constraint_failed",
+                    "any_boring", "any_history"])
         .select(
             *PARTITION_COLS,
             F.when(F.col("too_short"), F.lit(STATUS_TOO_SHORT))

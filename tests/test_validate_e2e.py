@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from skyline_spark.config import ValidationConfig
 from skyline_spark.plans.checkpoint import append_checkpoint, load_checkpoint
 from skyline_spark.plans.validate import validate, VERDICT_SCHEMA
-from skyline_spark.plans.constraints import VIOLATION_SCHEMA
+from skyline_spark.plans.constraints import VIOLATION_SCHEMA, StaticRule
 from skyline_spark.sources.synth import defect_days, synth_pages
 
 N_ROWS = 40_000
@@ -296,6 +296,119 @@ def test_null_partition_keys_report_not_crash(spark):
     assert sum(r["lang"] is not None and r["partition_date"] is not None for r in verdicts) > 0
 
 
+def _one_pair(spark, tag, n, ts, lang, text=lambda i: "some text"):
+    from skyline_spark.sources.synth import PAGE_SCHEMA
+
+    return spark.createDataFrame(
+        [(f"https://{tag}.example.org/{i:03d}", ts, None, text(i), lang)
+         for i in range(n)],
+        PAGE_SCHEMA,
+    )
+
+
+def test_null_keyed_pairs_fail_referential(spark):
+    """A pair with a NULL lang or a NULL warc_ts is judged on its real row
+    count: FAIL on the referential check, with url examples — never
+    TOO_SHORT for want of a row count."""
+    day = datetime.datetime(2026, 8, 3, 12, 0, 0)
+    pages = _one_pair(spark, "nulllang", 30, day, None).unionByName(
+        _one_pair(spark, "nullts", 30, None, "eng")
+    ).unionByName(_one_pair(spark, "ok", 30, day, "eng"))
+    cfg = ValidationConfig(min_partition_rows=20)
+    res = validate(pages, cfg, run_ts=RUN_TS_AUG11)
+    verdicts = {(r["partition_date"], r["lang"]): r for r in res.verdicts.collect()}
+    for key, column in (((day.date(), None), "lang"), ((None, "eng"), "warc_ts")):
+        assert verdicts[key]["status"] == "FAIL", key
+        assert verdicts[key]["checks_failed"] == 1, key
+        v = res.violations.where(
+            F.col("partition_date").eqNullSafe(F.lit(key[0]))
+            & F.col("lang").eqNullSafe(F.lit(key[1]))
+        ).collect()
+        assert {(r["check"], r["column"]) for r in v} == {("referential", column)}
+        assert len(v) == cfg.max_violation_examples
+        assert all(r["url"] and r["observed"] is None for r in v)
+    assert verdicts[(day.date(), "eng")]["checks_failed"] == 0
+
+
+def test_two_static_rules_on_one_stat_both_count(spark):
+    """Each failing static rule is its own failed check, also when two
+    rules watch the same stat."""
+    day = datetime.datetime(2026, 8, 3, 12, 0, 0)
+    pages = _one_pair(
+        spark, "halfnull", 30, day, "eng",
+        text=lambda i: None if i % 2 else "some text",
+    )
+    rules = (
+        StaticRule("null_rate_text", "greater_than", 0.3),
+        StaticRule("null_rate_text", "greater_than", 0.4),
+    )
+    res = validate(pages, static_rules=rules, run_ts=RUN_TS_AUG11)
+    (verdict,) = res.verdicts.collect()
+    static = res.violations.where("check = 'static'").collect()
+    assert sorted(r["expected"] for r in static) == [
+        "not greater_than 0.3", "not greater_than 0.4"
+    ]
+    assert verdict["status"] == "FAIL"
+    assert verdict["checks_failed"] == 2
+
+
+def _violations_plans(monkeypatch):
+    """The optimized plan of each frame validate() materializes as its
+    "violations" barrier, collected as the runs happen."""
+    storage = _validate_module()._RunStorage
+    real, plans = storage.barrier, []
+
+    def spy(self, df, name):
+        if name == "violations":
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, df, name)
+
+    monkeypatch.setattr(storage, "barrier", spy)
+    return plans
+
+
+def _windows(plan: str) -> int:
+    import re
+
+    return len(re.findall(r"\bWindow \[", plan))
+
+
+def test_clean_day_plans_no_example_query(spark, monkeypatch):
+    """With no failing check, the violations barrier is the schema, static
+    and drift rows only: no example query, so no Window and no scan of
+    the page rows."""
+    plans = _violations_plans(monkeypatch)
+    plan, called = _validate_module(), []
+    for name in ("uniqueness_violations", "referential_violations"):
+        monkeypatch.setattr(plan, name, lambda *a, _n=name, **k: called.append(_n))
+    res = validate(synth_pages(spark, 8_000, 10, defects=False), run_ts=RUN_TS_AUG11)
+    assert res.violations.where("check != 'drift'").count() == 0
+    assert called == []
+    assert len(plans) == 1 and _windows(plans[0]) == 0, plans
+
+
+def test_both_referential_checks_share_one_window(spark, monkeypatch):
+    """A pair failing both referential checks (off-allowlist lang and NULL
+    warc_ts) gets both sets of example rows, the same first urls, from
+    one window."""
+    plans = _violations_plans(monkeypatch)
+    pages = _one_pair(spark, "both", 30, None, "xx").unionByName(
+        _one_pair(spark, "ok", 30, datetime.datetime(2026, 8, 3, 12), "eng")
+    )
+    cfg = ValidationConfig(min_partition_rows=20)
+    res = validate(pages, cfg, run_ts=RUN_TS_AUG11)
+    v = res.violations.where("check = 'referential'").collect()
+    first = [f"https://both.example.org/{i:03d}" for i in range(cfg.max_violation_examples)]
+    for column, observed in (("lang", {"xx"}), ("warc_ts", {None})):
+        rows = [r for r in v if r["column"] == column]
+        assert sorted(r["url"] for r in rows) == first, column
+        assert {r["observed"] for r in rows} == observed, column
+    assert {(r["partition_date"], r["lang"]) for r in v} == {(None, "xx")}
+    verdicts = {(r["partition_date"], r["lang"]): r for r in res.verdicts.collect()}
+    assert verdicts[(None, "xx")]["checks_failed"] == 2
+    assert len(plans) == 1 and _windows(plans[0]) == 1, plans
+
+
 def test_checkpoint_lineage_columns(result, spark, tmp_path):
     ckpt = str(tmp_path / "ckpt2")
     append_checkpoint(result.checkpoint, ckpt)
@@ -354,11 +467,11 @@ def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     assert got == want
     assert res.violations.count() == result.violations.count()
 
-    # the seven barriers landed as parquet under one per-run directory
+    # the eight barriers landed as parquet under one per-run directory
     run_dirs = os.listdir(scratch)
     assert len(run_dirs) == 1
     assert sorted(os.listdir(os.path.join(scratch, run_dirs[0]))) == [
-        "drift", "len_hist", "slim", "stats", "targets", "verdicts",
+        "drift", "gated", "len_hist", "slim", "stats", "targets", "verdicts",
         "violations",
     ]
     res.release()
@@ -1191,7 +1304,7 @@ def test_run_metrics_match_written_verdicts_in_submit_order(
         (run_dir,) = os.listdir(scratch_dir)
         assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
     else:
-        assert len(barrier_rdds) == (9 if pruned else 8)
+        assert len(barrier_rdds) == (10 if pruned else 9)
         assert barrier_rdds <= live_rdds()
     res.release()
     assert not barrier_rdds & live_rdds()
