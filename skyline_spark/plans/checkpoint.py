@@ -5,10 +5,15 @@ one row per validated (partition_date, lang) carrying the partition content
 fingerprint (snapshot id), the detector versions that produced the verdict,
 a digest of the stats, and run metrics (FIXTURES F5 ``checkpoint`` schema).
 
-Resume = an anti-join: a partition needs (re)validation iff its current
-``(partition_date, lang, snapshot_id, engine detector-version hash)`` tuple
-has no checkpoint row. Changed data changes the fingerprint; changed kernels
-change the version hash; both force revalidation — nothing else does.
+Resume reads only the LATEST row per (partition_date, lang)
+(:func:`checkpoint_history`). A pair needs (re)validation unless that row
+records its current content fingerprint (snapshot id) under the current
+detector-version hash, within ``revalidate_after_days``: changed data,
+changed kernels and age force it, and so does a rollback to an earlier
+recorded state, once. Each lang's STALE newest partition is a target on
+every run whatever the checkpoint holds (plans/validate.py). So a pair that
+is not a target has a latest row describing its current content, which a
+pruned resume reads as its drift baseline.
 
 Storage is plain parquet (append-only, partitioned by run) so it works
 anywhere; on an Iceberg deployment this table maps 1:1 to an Iceberg table
@@ -35,6 +40,9 @@ __all__ = [
     "append_checkpoint",
     "pending_partitions",
     "checkpoint_history",
+    "recorded_under",
+    "unchanged_dates",
+    "file_set_metrics",
     "run_metrics_rows",
     "append_run_metrics",
     "load_run_metrics",
@@ -42,6 +50,8 @@ __all__ = [
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
+        # one row per run that validated the pair; resume reads only the
+        # latest by (validated_at, run_id)
         T.StructField("partition_date", T.DateType()),
         T.StructField("lang", T.StringType()),
         T.StructField("snapshot_id", T.LongType()),
@@ -56,16 +66,17 @@ CHECKPOINT_SCHEMA = T.StructType(
         # file listing, plans.stats ``partition_file_sets``) and
         # ``date_pairs`` (the (date, lang) pairs the date held under that
         # file set), which let a later pruned run skip the date's narrow
-        # scan. Absent = not recorded: the date is scanned.
+        # scan (:func:`unchanged_dates`). Absent = not recorded: the date is
+        # scanned.
         T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType())),
         # the partition's full stat vector + capped ks_test sample, carried
         # so a PRUNED resume (ValidationConfig.pruned_resume) can rebuild
-        # drift baselines from the checkpoint instead of rescanning
+        # drift baselines from the latest rows instead of rescanning
         # already-validated partitions. Bounded: ~13 doubles + <=sample_cap
         # doubles per (partition, lang) row. Old checkpoints (written before
-        # these columns) read back as NULL — the pruned path refuses them
-        # loudly (checkpoint_history) rather than silently shortening
-        # baselines.
+        # these columns) read back as NULL: the pruned path refuses a latest
+        # row without them loudly (:func:`unchanged_dates`) rather than
+        # silently shortening baselines; the full path ignores them.
         T.StructField("stat_values", T.MapType(T.StringType(), T.DoubleType())),
         T.StructField("sample", T.ArrayType(T.DoubleType())),
     ]
@@ -133,94 +144,118 @@ def append_checkpoint(df: DataFrame, path: str) -> None:
 
 def pending_partitions(
     current: DataFrame,
-    checkpoint: DataFrame,
+    latest: DataFrame,
     version_hash: str | None = None,
     run_ts: float | None = None,
     max_age_days: float | None = None,
 ) -> DataFrame:
-    """(partition_date, lang) pairs needing validation: the rows of
-    ``current``, with all of its columns.
-
-    ``current``: one row per (partition_date, lang) with ``snapshot_id``
-    (the content fingerprint from plans.stats). Anti-join against checkpoint
-    rows with the same snapshot + detector versions — pure DataFrame logic,
-    no driver collect (SURVEY §4 "Resumability").
+    """``current`` (one row per (partition_date, lang) with its content
+    ``fingerprint``) plus a boolean ``pending``: the pair needs validation
+    unless its row in ``latest`` (:func:`checkpoint_history`) records that
+    fingerprint under ``version_hash``. No driver collect (SURVEY §4
+    "Resumability"); a NULL date or lang matches no row, so is pending. The
+    done rows are grouped on the join keys: Catalyst sizes a left join
+    against a side unique on its keys by the other side, but a join
+    against a bare leaf as the product of the two.
 
     ``max_age_days``: periodic re-validation (the batch restatement of the
-    reference's hourly Mirage periodic checks, `analyzer.py:305-449`) —
-    checkpoint rows whose ``validated_at`` is more than this many days
-    before ``run_ts`` stop suppressing re-validation, so every partition is
+    reference's hourly Mirage periodic checks, `analyzer.py:305-449`) — a
+    latest row whose ``validated_at`` is more than this many days before
+    ``run_ts`` stops suppressing re-validation, so every partition is
     re-checked at least that often even with unchanged data and kernels.
     """
     version_hash = version_hash or detector_version_hash()
-    done = checkpoint.where(F.col("detector_version_hash") == version_hash)
+    done = latest.where(F.col("detector_version_hash") == version_hash)
     if max_age_days is not None and run_ts is not None:
         cutoff = F.to_timestamp(F.lit(run_ts - max_age_days * 86400.0))
         done = done.where(F.col("validated_at") >= cutoff)
-    done = done.select(*PARTITION_COLS, "snapshot_id")
-    return current.join(done, [*PARTITION_COLS, "snapshot_id"], "left_anti")
+    keys = [*PARTITION_COLS, "fingerprint"]
+    done = done.select(*keys).distinct().withColumn("_done", F.lit(True))
+    return current.join(done, keys, "left").withColumn(
+        "pending", F.col("_done").isNull()
+    ).drop("_done")
 
 
 def checkpoint_history(checkpoint: DataFrame) -> DataFrame:
-    """The drift inputs (stat vectors + ks_test samples) of already-validated
-    partitions, FROM the checkpoint — the piece that makes a resumed run
-    skip the heavy scan of unchanged partitions entirely
-    (ValidationConfig.pruned_resume).
-
-    The checkpoint is append-only, so a re-validated partition has several
-    rows; the LATEST (validated_at, run_id) wins — exactly the row whose
-    stat_values/sample describe the data the recorded snapshot_id hashes.
-
-    Returns one row per pair, ``(partition_date, lang, fingerprint,
-    stat_values, sample, file_set, date_pairs)``: the stats barrier's own
-    shape, ready to union with the freshly computed pairs and explode once
-    (plans.stats ``long_form``), plus the row's file-set record (NULL when
-    not recorded; see ``CHECKPOINT_SCHEMA.metrics``), which decides whether
-    the pruned path narrow-scans the date. The frame is cached — the caller
-    owns releasing it (``.unpersist()``) once the run's actions are done.
-    The session lets AQE coalesce a cached plan's output (session.py), so
-    the checkpoint-sized frame is read by one task, not one per shuffle
-    partition.
-
-    Raises if any surviving row predates the stat_values/sample columns:
-    silently shortening drift baselines would change verdicts with no
-    signal — re-run once without pruning to rewrite the checkpoint instead.
-    The check is a plain count, never a ``limit``: Spark names a limit's
-    counter from a JVM-wide sequence, so a limit's generated code differs
-    on every run and a resident session would compile it afresh each time.
-    """
+    """The checkpoint as resume reads it: its LATEST row per (partition_date,
+    lang), by (validated_at, run_id), as ``(partition_date, lang,
+    fingerprint, detector_version_hash, validated_at, stat_values, sample,
+    file_set, date_pairs)`` — the stats barrier's shape plus the resume
+    fields, so ``long_form`` explodes it like freshly computed pairs.
+    ``file_set``/``date_pairs`` are NULL when not recorded
+    (``CHECKPOINT_SCHEMA.metrics``); rows older than ``stat_values`` and
+    ``sample`` read those as NULL. validate() reads the checkpoint only
+    through this frame, behind one barrier."""
     payload = F.struct(
-        F.col("snapshot_id"), F.col("stat_values"), F.col("sample"),
+        F.col("snapshot_id").alias("fingerprint"),
+        "detector_version_hash", "validated_at", "stat_values", "sample",
         F.col("metrics")["file_set"].alias("file_set"),
         F.col("metrics")["date_pairs"].alias("date_pairs"),
     )
     order = F.struct(F.col("validated_at"), F.col("run_id"))
-    latest = (
-        checkpoint.groupBy(*PARTITION_COLS)
-        .agg(F.max_by(payload, order).alias("p"))
-        .select(
-            *PARTITION_COLS,
-            F.col("p.snapshot_id").alias("fingerprint"),
-            F.col("p.stat_values").alias("stat_values"),
-            F.col("p.sample").alias("sample"),
-            F.col("p.file_set").alias("file_set"),
-            F.col("p.date_pairs").alias("date_pairs"),
-        )
+    return checkpoint.groupBy(*PARTITION_COLS).agg(
+        F.max_by(payload, order).alias("p")
+    ).select(*PARTITION_COLS, "p.*")
+
+
+def recorded_under(file_sets: dict) -> F.Column:
+    """Whether a latest row is recorded under its date's file set in
+    ``file_sets`` (``{date: hash}``, plans.stats ``partition_file_sets``)."""
+    listed = F.create_map(
+        *(c for d, h in file_sets.items() for c in (F.lit(d), F.lit(float(h))))
     )
-    # checkpoint-sized (one row per partition x lang), read by the legacy-row
-    # guard, the pruned path's skip decision and reused fingerprints, and
-    # the run's drift inputs — cache for the run
-    latest = latest.cache()
-    n_legacy = latest.where(F.col("stat_values").isNull()).count()
-    if n_legacy:
-        latest.unpersist()
+    return F.col("file_set") == listed[F.col("partition_date")]
+
+
+def unchanged_dates(latest: DataFrame, file_sets: dict | None) -> set:
+    """The pruned resume's one question to the checkpoint, one collect of a
+    row per date: the dates whose narrow scan can be skipped. A date's
+    listed file set hashes to h, and exactly the recorded ``date_pairs`` of
+    its latest rows carry ``file_set`` h — counting the rows keeps a
+    checkpoint holding only some of a date's pairs (a lang-filtered append,
+    a row older than a file change) from passing.
+
+    Raises if any latest row lacks ``stat_values``: silently shortening
+    drift baselines would change verdicts with no signal. The count is a
+    plain aggregate, never a ``limit``, whose JVM-wide counter name would
+    make a resident session compile its code afresh on every run."""
+    aggs = [F.count(F.when(F.col("stat_values").isNull(), 1)).alias("legacy")]
+    if file_sets:
+        under = recorded_under(file_sets)
+        aggs += [
+            F.count(F.when(under, 1)).alias("n"),
+            F.min(F.when(under, F.col("date_pairs"))).alias("lo"),
+            F.max(F.when(under, F.col("date_pairs"))).alias("hi"),
+        ]
+    rows = latest.groupBy("partition_date").agg(*aggs).collect()
+    if sum(r["legacy"] for r in rows):
         raise RuntimeError(
-            "pruned resume needs stat_values/sample in every checkpoint row, "
-            "but this checkpoint has rows written before those columns "
-            "existed; run validate() once without pruned_resume to refresh "
-            "it (silently shortening drift baselines is not an option)"
+            "pruned resume needs stat_values/sample in every pair's latest "
+            "checkpoint row, but some predate those columns. Refresh: run "
+            "validate() once without pruned_resume and with "
+            "ValidationConfig(revalidate_after_days=0), which re-validates "
+            "every pair in the table, and append its checkpoint (rows of "
+            "pairs no longer in the table stay until vacuum_checkpoint's "
+            "retention trims them)"
         )
-    return latest
+    if not file_sets:
+        return set()
+    return {
+        r["partition_date"] for r in rows
+        if r["n"] and r["n"] == r["lo"] == r["hi"]
+    }
+
+
+def file_set_metrics(metrics: F.Column, recorded: dict) -> F.Column:
+    """``metrics`` plus the row's date's ``file_set`` and ``date_pairs`` in
+    ``recorded`` (``{date: (hash, pairs)}``), if it has them."""
+    if not recorded:
+        return metrics
+    record = F.create_map(*(c for d, (h, n) in recorded.items() for c in (
+        F.lit(d), F.create_map(F.lit("file_set"), F.lit(float(h)),
+                               F.lit("date_pairs"), F.lit(float(n))),
+    )))[F.col("partition_date")]
+    return F.when(record.isNull(), metrics).otherwise(F.map_concat(metrics, record))
 
 
 def run_metrics_rows(

@@ -255,19 +255,32 @@ def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
     return wide.select(*PARTITION_COLS, "fingerprint", stat_values.alias("stat_values"))
 
 
-def duplicate_url_rows(pages: DataFrame) -> DataFrame:
-    """Phase 1 of the uniqueness check: per pair, the rows whose
-    ``xxhash64(url)`` another row of the pair shares, as ``dup_url_rows``.
-    It shuffles 8-byte hashes, not url strings. A 64-bit collision can only
-    over-count, so phase 2 (plans.constraints ``uniqueness_violations``)
-    decides."""
+def duplicate_url_rows(pairs: DataFrame, pages: DataFrame) -> DataFrame:
+    """``pairs`` (one row per pair) plus phase 1 of the uniqueness check:
+    the pair's rows of ``pages`` whose ``xxhash64(url)`` another row of the
+    pair shares, as ``dup_url_rows``. It shuffles 8-byte hashes, not url
+    strings. A 64-bit collision can only over-count, so phase 2
+    (plans.constraints ``uniqueness_violations``) decides.
+
+    Grouped and joined on each pair column's NULL flag plus its value with
+    NULL filled in, so a NULL date or lang matches itself and no real value
+    (a bare filler would merge a real ``''`` lang with NULL), in a plain
+    equi-join: Catalyst sizes a null-safe one as a product."""
+    key = {
+        "_date_null": F.col("partition_date").isNull(),
+        "_date": F.coalesce(F.col("partition_date"), F.lit(_EPOCH)),
+        "_lang_null": F.col("lang").isNull(),
+        "_lang": F.coalesce(F.col("lang"), F.lit("")),
+    }
     per_hash = pages.groupBy(
-        *PARTITION_COLS, F.xxhash64(F.col("url").cast("string")).alias("_kh")
+        *(c.alias(n) for n, c in key.items()),
+        F.xxhash64(F.col("url").cast("string")).alias("_kh"),
     ).count()
-    return per_hash.groupBy(*PARTITION_COLS).agg(
+    dups = per_hash.groupBy(*key).agg(
         F.sum(F.when(F.col("count") > 1, F.col("count")).otherwise(0))
         .alias("dup_url_rows")
     )
+    return pairs.withColumns(key).join(dups, list(key), "left").drop(*key)
 
 
 def long_form(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -320,8 +333,9 @@ DIGEST_BINS_PER_OCTAVE = 8
 
 def length_histogram(pages: DataFrame) -> DataFrame:
     """Per-(partition, lang, text_len) counts of the non-null lengths — the
-    ONE count of the page lengths. validate() materializes it once and
-    feeds it to the exact p50/p95 (:func:`partition_stats`), the sampling
+    ONE count of the page lengths. validate() plans it once, inside the
+    stats barrier's plan, where AQE reuses its exchange across the exact
+    p50/p95 (:func:`partition_stats`), the sampling
     keep-rates (:func:`stat_samples`: a pair's total is its non-null text
     count) and the checkpoint digest (:func:`stat_digest_blobs`). text_len
     is a bounded integer, so the group count is bounded by partitions x

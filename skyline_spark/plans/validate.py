@@ -9,9 +9,10 @@ Spark restatement of the Analyzer sweep (SURVEY §3.2):
                  example rows fetched only for the pairs that fail
                → pass/fail verdicts + violation sidecar + checkpoint rows
 
-Resume: with a ``checkpoint_path``, already-validated (partition, lang,
-snapshot, detector-version) tuples are anti-joined away; only new or changed
-partitions are (re)validated. Baseline history always flows through the
+Resume: with a ``checkpoint_path``, a (partition, lang) pair whose latest
+checkpoint row records its current snapshot under the current detector
+versions is anti-joined away; only new, changed or rolled-back partitions
+(and each lang's stale newest one) are (re)validated. Baseline history always flows through the
 stats table, never the raw data — the 10^12-row posture is that detectors
 see only checkpoint-sized inputs.
 """
@@ -23,7 +24,7 @@ import time as _time
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from ..config import (
@@ -40,9 +41,12 @@ from ..sources.synth import PAGE_SCHEMA
 from .checkpoint import (
     checkpoint_history,
     detector_version_hash,
+    file_set_metrics,
     load_checkpoint,
     pending_partitions,
+    recorded_under,
     run_metrics_rows,
+    unchanged_dates,
 )
 from .constraints import (
     DEFAULT_LANG_ALLOWLIST,
@@ -113,7 +117,7 @@ DEFAULT_STATIC_RULES = (
 class _RunStorage:
     """The storage one validate() run materializes: its barriers (RDD ids
     of the localCheckpoint blocks, or the scratch-table directory when the
-    run materializes to storage instead) and its cached frames.
+    run materializes to storage instead). validate() caches no frame.
 
     localCheckpoint blocks are NOT released by DataFrame.unpersist() — they
     live until the driver GCs the RDD handle, so a long-lived session
@@ -128,7 +132,6 @@ class _RunStorage:
 
     spark: SparkSession
     scratch_run_dir: str | None = None
-    cached: list = field(default_factory=list)
     rdd_ids: list = field(default_factory=list)
 
     def barrier(self, df: DataFrame, name: str) -> DataFrame:
@@ -142,12 +145,6 @@ class _RunStorage:
         return out
 
     def release(self) -> None:
-        for df in self.cached:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self.cached.clear()
         if self.rdd_ids:
             jsc = self.spark.sparkContext._jsc.sc()
             live = {info.id() for info in jsc.getRDDStorageInfo()}
@@ -171,8 +168,8 @@ class ValidationResult:
     ``checkpoint`` and ``run_metrics`` stay lazy, over barrier leaves.
 
     Every frame here is independent of later lineage writes: the input
-    checkpoint is read once behind a barrier, so no frame's plan reads the
-    checkpoint location. Appending ``checkpoint`` (or run metrics, or
+    checkpoint is read once, as its latest row per pair, behind a barrier,
+    so no frame's plan reads the checkpoint location. Appending ``checkpoint`` (or run metrics, or
     overwriting verdicts/violations) in any order leaves ``verdicts``,
     ``violations`` and ``run_metrics`` describing this run's targets, and
     re-runs none of the validation."""
@@ -217,9 +214,9 @@ def validate(
     the ensemble and which kernels vote (the reference's algorithm-set
     selection). Defaults run the full registry over DRIFT_STATS.
 
-    ``scratch_dir``: materialize the pipeline barriers (the checkpoint
-    read, narrow, slim, len_hist, stats, targets, gated, drift, violations,
-    verdicts) as parquet scratch tables under ``scratch_dir/<run token>/``
+    ``scratch_dir``: materialize the pipeline barriers (the checkpoint's
+    latest rows, narrow, slim, stats, gated, drift, violations, verdicts)
+    as parquet scratch tables under ``scratch_dir/<run token>/``
     instead of ``localCheckpoint``. This is the shape a 10^12-row cluster run
     wants: localCheckpoint truncates lineage into executor-LOCAL blocks, so
     losing any executor mid-run is unrecoverable (Spark cannot recompute a
@@ -354,104 +351,70 @@ def _prune_predicate(
     return keep
 
 
-def _date_map(values: dict) -> F.Column:
-    """A literal ``map<date, double>`` of ``values``; look a row's date up
-    with ``_date_map(...)[F.col("partition_date")]`` (NULL when absent)."""
-    return F.create_map(
-        *(c for d, v in values.items() for c in (F.lit(d), F.lit(float(v))))
-    )
-
-
-def _recorded_under(history: DataFrame, file_sets: dict) -> DataFrame:
-    """The latest checkpoint rows recorded under their date's file set in
-    ``file_sets``."""
-    return history.where(
-        F.col("file_set") == _date_map(file_sets)[F.col("partition_date")]
-    )
-
-
-def _unchanged_dates(history: DataFrame, file_sets: dict) -> set:
-    """The dates whose narrow scan can be skipped: the listed file set
-    hashes to h, and exactly the recorded ``date_pairs`` of the date's
-    latest checkpoint rows carry ``file_set`` h. Counting the rows, not
-    just finding one, keeps a checkpoint that holds only some of a date's
-    pairs (a lang-filtered append, a row older than a file change) from
-    passing. One small collect, bounded by the calendar."""
-    rows = (
-        _recorded_under(history, file_sets)
-        .groupBy("partition_date")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("date_pairs").alias("lo"),
-            F.max("date_pairs").alias("hi"),
-        )
-        .where((F.col("n") == F.col("lo")) & (F.col("lo") == F.col("hi")))
-        .collect()
-    )
-    return {r["partition_date"] for r in rows}
-
-
 def _validate_body(
     pages, cfg, checkpoint_path, run_id, run_ts, static_rules,
     lang_allowlist, drift_stats, sample_backed, algorithms,
     spark, schema_viol, file_sets, store,
 ) -> ValidationResult:
     vhash = detector_version_hash()
-    # the run date of the staleness gates (stage 2's re-add, stage 3b)
+    # the run date of the staleness gate (stage 3b)
     run_date = F.lit(
         _dt.datetime.fromtimestamp(run_ts, _dt.timezone.utc).date()
     )
-    # the checkpoint is read ONCE, behind the same barrier as slim/stats/
-    # samples: no frame this run caches or returns keeps the checkpoint
-    # relation in its plan, so the caller's own append_checkpoint (parquet
-    # append or Iceberg writeTo) can neither invalidate those caches — Spark
-    # re-caches every plan reading a written path — nor make a re-run of
-    # them see this run's rows and anti-join its own targets away
-    ckpt = (
-        store.barrier(load_checkpoint(spark, checkpoint_path), "checkpoint_in")
+    # the checkpoint is read ONCE, as its latest row per pair, behind the
+    # barrier every resume question reads: no frame this run returns keeps
+    # the checkpoint relation in its plan, so the caller's own
+    # append_checkpoint can never make a re-plan of them see this run's rows
+    # and anti-join its own targets away
+    latest = (
+        store.barrier(
+            checkpoint_history(load_checkpoint(spark, checkpoint_path)),
+            "checkpoint_in",
+        )
         if checkpoint_path is not None
         else None
     )
 
-    def _resume_targets(fps: DataFrame) -> DataFrame:
-        """Stage 2: which (partition, lang) pairs need work — checkpoint
-        anti-join plus the stale-newest re-add — each flagged ``is_stale``
-        (stage 3b). ``fps``: one row per pair with ``snapshot_id``."""
+    def _flag(fps: DataFrame) -> DataFrame:
+        """Stage 2: ``fps`` (one row per pair with its ``fingerprint``) with
+        ``is_stale`` (stage 3b) and ``target``: the pair needs work."""
         # ---- stage 3b: STALE gate on the partition axis -------------------
         # the reference marks a metric Stale when its newest datapoint is
         # older than STALE_PERIOD (`analyzer/algorithms.py:588-589`,
         # `settings.py:393`); here a lang whose NEWEST partition trails the
         # run date by more than ``stale_after_partitions`` days has stopped
-        # emitting — that newest partition's verdict surfaces as STALE
-        # (per-lang newest is a tiny broadcast aggregate of the fingerprints)
+        # emitting — that newest partition's verdict surfaces as STALE.
+        # Per-lang newest is a window, so the plan reads ``fps`` once (a
+        # second reader of the narrow scan would scan the files again); a
+        # NULL lang has no newest partition
         if cfg.stale_after_partitions is None:
             fps = fps.withColumn("is_stale", F.lit(False))
         else:
-            newest = fps.groupBy("lang").agg(F.max("partition_date").alias("_newest"))
-            fps = fps.join(F.broadcast(newest), "lang", "left").withColumn(
+            newest = F.when(
+                F.col("lang").isNotNull(),
+                F.max("partition_date").over(Window.partitionBy("lang")),
+            )
+            fps = fps.withColumn(
                 "is_stale",
-                (F.col("partition_date") == F.col("_newest"))
-                & (F.datediff(run_date, F.col("_newest")) > cfg.stale_after_partitions),
-            ).drop("_newest")
-        if ckpt is None:
-            return fps
-        # STALE must surface even when nothing else changed: a lang that
-        # STOPPED emitting has unchanged fingerprints and detector hash, so
-        # the checkpoint anti-join alone would drop its newest partition. A
-        # stale newest partition is a target whatever the checkpoint holds
-        # — the reference surfaces Stale metrics on every sweep
-        # (`analyzer/algorithms.py:588-589`). The sets are disjoint (no
-        # distinct), and one partition keeps reads of the union to one task
-        stale = F.coalesce(F.col("is_stale"), F.lit(False))
-        return fps.where(stale).unionByName(pending_partitions(
-            fps.where(~stale), ckpt, vhash, run_ts=run_ts,
+                (F.col("partition_date") == newest)
+                & (F.datediff(run_date, newest) > cfg.stale_after_partitions),
+            )
+        if latest is None:
+            return fps.withColumn("target", F.lit(True))
+        # a stale newest partition is a target whatever the checkpoint
+        # holds: its lang STOPPED emitting, so nothing else changed (the
+        # reference surfaces Stale metrics on every sweep)
+        return pending_partitions(
+            fps, latest, vhash, run_ts=run_ts,
             max_age_days=cfg.revalidate_after_days,
-        )).coalesce(1)
+        ).withColumn(
+            "target", F.coalesce(F.col("is_stale"), F.lit(False)) | F.col("pending")
+        ).drop("pending")
 
     # ---- stage 1.5 (pruned resume only): narrow change detection ---------
     # fingerprint + row count per pair from a scan of (url, warc_ts, lang)
     # ONLY — column pruning skips the multi-KB html — then restrict the
-    # heavy scan below to the pending partition DATES. The collected date
+    # heavy scan below to the target partition DATES. The collected date
     # lists are bounded by the calendar, not the data.
     #
     # The narrow scan itself reads only the dates whose file set changed
@@ -460,7 +423,7 @@ def _validate_body(
     # checkpoint's latest rows — the parquet analog of knowing unchanged
     # Iceberg partitions from snapshot metadata. Its date filter on the
     # physical column becomes PartitionFilters.
-    pruned = cfg.pruned_resume and ckpt is not None
+    pruned = cfg.pruned_resume and latest is not None
     recorded: dict = {}
     if pruned:
         native = (
@@ -468,29 +431,24 @@ def _validate_body(
             if "_native_partition_date" in pages.columns
             else None
         )
-        # ONE latest-row frame per pair, cached (one level above the
-        # checkpoint barrier, its plan is already small): the skip decision,
-        # the reused fingerprints and the drift baselines all read it
-        history = checkpoint_history(ckpt)
-        store.cached.append(history)
-        skip = _unchanged_dates(history, file_sets) if file_sets else set()
+        # one collect: the skippable dates, and the legacy-row guard
+        skip = unchanged_dates(latest, file_sets)
 
         def _narrow(frame, reused, name):
             # barrier: every current pair's fingerprint — the narrow scan's
-            # rows plus the reused ones — checkpoint-sized, and it feeds the
-            # layout audit, the targets, the stale-newest broadcast (stage
-            # 3b) and the stage-7 checkpoint join; without it each would
-            # re-run the narrow scan. The audit collects one row per date:
-            # its pair count and its mismatching rows
+            # rows plus the reused ones — flagged is_stale and target,
+            # checkpoint-sized. It feeds the gated barrier and the drift
+            # baselines. One collect reads it per date: the pair count and
+            # mismatching rows of the layout audit, and the targets that
+            # decide the heavy scan
             fps = narrow_partition_keys(frame, native_col=native)
             if reused is not None:
                 fps = fps.unionByName(reused)
-            out = store.barrier(fps, name)
-            if native is None:
-                return out, {}
+            out = store.barrier(_flag(fps), name)
             per_date = out.coalesce(1).groupBy("partition_date").agg(
                 F.count(F.lit(1)).alias("pairs"),
-                F.sum("native_mismatch").alias("bad"),
+                (F.sum("native_mismatch") if native else F.lit(0)).alias("bad"),
+                F.count(F.when(F.col("target"), 1)).alias("targets"),
             ).collect()
             return out, {r["partition_date"]: r for r in per_date}
 
@@ -498,8 +456,8 @@ def _validate_body(
             # the skipped dates' pairs: exactly the rows recorded under the
             # current file set (an older row of a lang the date no longer
             # holds carries another file_set), audited clean when recorded
-            reused = _recorded_under(
-                history, {d: file_sets[d] for d in skip}
+            reused = latest.where(
+                recorded_under({d: file_sets[d] for d in skip})
             ).select(
                 *PARTITION_COLS, "fingerprint",
                 F.lit(0).cast("long").alias("native_mismatch"),
@@ -518,9 +476,7 @@ def _validate_body(
             skip = set()
             narrow, audit = _narrow(pages, None, "narrow_all")
             bad = sum(r["bad"] or 0 for r in audit.values())
-        fingerprints = narrow.select(
-            *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
-        )
+        flags = narrow
         # only trust the physical layout for file-level pruning after
         # auditing that every row's partition column equals days(warc_ts) —
         # a disagreeing layout (e.g. partitioned by ingest date) would
@@ -551,8 +507,7 @@ def _validate_body(
                     for d, h in (file_sets or {}).items()
                     if d in audit
                 }
-        targets = store.barrier(_resume_targets(fingerprints), "targets")
-        pend = [r[0] for r in targets.select("partition_date").distinct().collect()]
+        pend = [d for d, r in audit.items() if r["targets"]]
         dates = sorted(d for d in pend if d is not None)
         pages = pages.where(
             _prune_predicate(
@@ -563,52 +518,48 @@ def _validate_body(
         )
 
     slim = store.barrier(slim_pages(pages), "slim")
-    # the ONE (partition, lang, text_len) count over slim: exact p50/p95,
-    # the sampling keep-rates and the log-histogram digest of the stats
-    # plan below all read it. Tiny — distinct lengths per partition x lang —
-    # and a barrier, so those three branches read blocks instead of each
-    # re-aggregating slim
-    len_hist = store.barrier(length_histogram(slim), "len_hist")
     # barrier "stats": ONE row per (partition, lang) in the checkpoint's own
     # shape — fingerprint, stat_values, stat_digests, sample — plus the
     # uniqueness check's phase-1 count, dup_url_rows. Every consumer
     # below reads columns of it; the long stats/samples frames come from
-    # long_form's one explode. AQE submits the independent agg, sample and
-    # digest stages of this one plan together. Its joins stay plain equi-
-    # joins on the pair key: Catalyst sizes those as the sum of their inputs
-    # but a null-safe join as the product, the barrier keeps that estimate,
-    # and a product turns later joins over it into shuffles and plants
-    # runtime bloom filters (stat_samples has no null-keyed pair anyway)
+    # long_form's one explode. The ONE (partition, lang, text_len) count
+    # feeds the p50/p95, the sampling rates and the digest: AQE reuses its
+    # exchange across those branches of this one plan. Its joins stay plain
+    # equi-joins on a side grouped by the keys: Catalyst sizes a null-safe
+    # join as the product, the barrier keeps that estimate, and a product
+    # turns later joins over it into shuffles and plants runtime bloom
+    # filters (stat_samples has no null-keyed pair anyway)
+    len_hist = length_histogram(slim)
     pair_stats = store.barrier(
-        stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
-        .join(stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left")
-        .join(duplicate_url_rows(slim), PARTITION_COLS, "left"),
+        duplicate_url_rows(
+            stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
+            .join(stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left"),
+            slim,
+        ),
         "stats",
     )
     stats, samples = long_form(pair_stats)
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------
-    # In pruned mode both came from the narrow barrier (scanned plus reused
-    # fingerprints) above; otherwise derive them from the stats barrier
-    # (one row per pair, so the "targets" barrier is cheap to fill from it).
+    # In pruned mode the narrow barrier carries the flags; otherwise derive
+    # them from the stats barrier, read once by the gated barrier below
     if not pruned:
-        fingerprints = pair_stats.select(
-            *PARTITION_COLS, F.col("fingerprint").alias("snapshot_id")
-        )
-        targets = store.barrier(_resume_targets(fingerprints), "targets")
+        flags = _flag(pair_stats.select(*PARTITION_COLS, "fingerprint"))
 
-    # drift baselines: in pruned mode the heavy scan only covered pending
-    # dates, so unchanged partitions' stat vectors + ks samples come back
-    # from the checkpoint (anti-joined on the freshly scanned pairs — a
-    # pending DATE also rescans that date's unchanged langs, and those
-    # pairs must not appear twice in one series)
+    # drift baselines: in pruned mode the heavy scan only covered target
+    # dates, so the other pairs' stat vectors + ks samples come from their
+    # latest checkpoint rows, which describe their current content (else
+    # they would be targets); anti-joined on the freshly scanned pairs, as
+    # a target DATE also rescans that date's other langs
     drift_stats_in, drift_samples_in = stats, samples
     if pruned:
         # semi-join on the CURRENT table's pairs: a partition deleted since
         # its checkpoint row (retention trim, purge) must not haunt the
         # baselines — a full rescan would never see it, and the pruned path
         # must produce identical verdicts
-        history = history.drop("file_set", "date_pairs").join(
-            F.broadcast(fingerprints.select(*PARTITION_COLS)),
+        history = latest.select(
+            *PARTITION_COLS, "fingerprint", "stat_values", "sample"
+        ).join(
+            F.broadcast(narrow.select(*PARTITION_COLS)),
             PARTITION_COLS, "left_semi",
         ).join(
             F.broadcast(pair_stats.select(*PARTITION_COLS)),
@@ -624,7 +575,8 @@ def _validate_body(
     # row can match it), and it is judged on its real row count like any
     # other: the join is null-safe
     gated = pair_join(
-        targets, pair_stats.select(*PARTITION_COLS, "stat_values", "dup_url_rows"),
+        flags.where(F.col("target")).select(*PARTITION_COLS, "is_stale"),
+        pair_stats.select(*PARTITION_COLS, "stat_values", "dup_url_rows"),
         "left",
     ).withColumn(
         "too_short",
@@ -769,32 +721,20 @@ def _validate_body(
         F.array(F.lit("checks_run"), F.lit("checks_failed")),
         F.array(F.col("checks_run").cast("double"), F.col("checks_failed").cast("double")),
     )
-    if recorded:
-        # the date's file-set record (CHECKPOINT_SCHEMA.metrics); a pair of
-        # an unrecorded date (NULL date, no listing) carries none
-        file_set = _date_map({d: h for d, (h, _) in recorded.items()})[
-            F.col("partition_date")
-        ]
-        date_pairs = _date_map({d: n for d, (_, n) in recorded.items()})[
-            F.col("partition_date")
-        ]
-        metrics = F.when(file_set.isNull(), metrics).otherwise(F.map_concat(
-            metrics,
-            F.create_map(
-                F.lit("file_set"), file_set, F.lit("date_pairs"), date_pairs
-            ),
-        ))
+    # plus the date's file-set record (CHECKPOINT_SCHEMA.metrics)
+    metrics = file_set_metrics(metrics, recorded)
     # the stats barrier row IS the checkpoint payload: the digest blob, and
     # the partition's full stat vector + capped sample, which let a later
     # PRUNED resume rebuild drift baselines without rescanning this
     # partition (checkpoint_history) — bounded: ~13 doubles + <=sample_cap
-    # doubles per row. Two joins of one-row-per-pair leaves, no regroup
+    # doubles per row. Every target's date was heavy-scanned, so its stats
+    # row holds its fingerprint: one join of one-row-per-pair leaves, no
+    # regroup
     checkpoint = (
-        verdicts.join(fingerprints, PARTITION_COLS)
-        .join(pair_stats.drop("fingerprint"), PARTITION_COLS, "left")
+        verdicts.join(pair_stats, PARTITION_COLS)
         .select(
             *PARTITION_COLS,
-            F.col("snapshot_id"),
+            F.col("fingerprint").alias("snapshot_id"),
             F.lit(vhash).alias("detector_version_hash"),
             version_map.alias("detector_versions"),
             F.col("stat_digests"),

@@ -49,9 +49,13 @@ def main() -> None:
         help="detect changed partitions with a narrow (url/warc_ts/lang) "
         "scan and restrict the heavy scan to pending partition dates; "
         "drift baselines for unchanged partitions come from the checkpoint "
-        "(stat_values/sample). Verdicts are identical to a full rescan; "
-        "requires a checkpoint written by this version (legacy rows are "
-        "refused loudly). The steady-state daily-sweep mode at 10^12 rows.",
+        "(stat_values/sample). Verdicts are identical to a full rescan. "
+        "Requires each pair's latest checkpoint row to carry "
+        "stat_values/sample: a checkpoint with older rows is refused; "
+        "refresh it with one validate() run with "
+        "ValidationConfig(revalidate_after_days=0) and no pruning, and "
+        "append its checkpoint. The steady-state daily-sweep mode at "
+        "10^12 rows.",
     )
     args = ap.parse_args()
 

@@ -822,7 +822,7 @@ def test_lineage_frames_plan_small(spark, tmp_path, pruned):
 @pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
 def test_checkpoint_assembly_has_no_python_stage(spark, tmp_path, pruned):
     # the checkpoint blob is the stats map plus the log-histogram re-binned
-    # from the len_hist barrier: its assembly is all codegen'd aggregates,
+    # from the one length histogram: its assembly is all codegen'd aggregates,
     # with no Python UDF folding a per-run sketch
     res, _ = _resumed_result(spark, tmp_path, pruned)
     p = plan_of(res.checkpoint, "simple")

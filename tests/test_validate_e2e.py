@@ -296,11 +296,12 @@ def test_null_partition_keys_report_not_crash(spark):
     assert sum(r["lang"] is not None and r["partition_date"] is not None for r in verdicts) > 0
 
 
-def _one_pair(spark, tag, n, ts, lang, text=lambda i: "some text"):
+def _one_pair(spark, tag, n, ts, lang, text=lambda i: "some text", copies=1):
+    """``n`` rows of one pair, each url held by ``copies`` consecutive rows."""
     from skyline_spark.sources.synth import PAGE_SCHEMA
 
     return spark.createDataFrame(
-        [(f"https://{tag}.example.org/{i:03d}", ts, None, text(i), lang)
+        [(f"https://{tag}.example.org/{i // copies:03d}", ts, None, text(i), lang)
          for i in range(n)],
         PAGE_SCHEMA,
     )
@@ -328,6 +329,22 @@ def test_null_keyed_pairs_fail_referential(spark):
         assert len(v) == cfg.max_violation_examples
         assert all(r["url"] and r["observed"] is None for r in v)
     assert verdicts[(day.date(), "eng")]["checks_failed"] == 0
+
+
+def test_null_keyed_pair_reports_duplicate_urls(spark):
+    """A pair with a NULL lang counts its duplicated urls like any other
+    pair: 10 urls held by 3 rows each give 10 uniqueness rows, next to the
+    referential failure."""
+    day = datetime.datetime(2026, 8, 3, 12, 0, 0)
+    pages = _one_pair(spark, "dupnull", 30, day, None, copies=3)
+    res = validate(pages, ValidationConfig(min_partition_rows=20), run_ts=RUN_TS_AUG11)
+    (verdict,) = res.verdicts.collect()
+    assert verdict["lang"] is None
+    uniq = res.violations.where("check = 'uniqueness'").collect()
+    assert len(uniq) == 10
+    assert {r["observed"] for r in uniq} == {"count=3"}
+    assert all(r["lang"] is None for r in uniq)
+    assert verdict["checks_failed"] == 2
 
 
 def test_two_static_rules_on_one_stat_both_count(spark):
@@ -467,12 +484,11 @@ def test_scratch_dir_mode_matches_localcheckpoint(result, spark, tmp_path):
     assert got == want
     assert res.violations.count() == result.violations.count()
 
-    # the eight barriers landed as parquet under one per-run directory
+    # the six barriers landed as parquet under one per-run directory
     run_dirs = os.listdir(scratch)
     assert len(run_dirs) == 1
     assert sorted(os.listdir(os.path.join(scratch, run_dirs[0]))) == [
-        "drift", "gated", "len_hist", "slim", "stats", "targets", "verdicts",
-        "violations",
+        "drift", "gated", "slim", "stats", "verdicts", "violations",
     ]
     res.release()
     assert not os.path.exists(os.path.join(scratch, run_dirs[0]))
@@ -501,8 +517,8 @@ def test_scratch_dir_cleaned_up_on_failure(spark, tmp_path):
 
 @pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
 def test_failed_run_releases_its_blocks(spark, tmp_path, pruned):
-    """A validate() that fails after its barriers and caches are filled
-    must free them on the way out: release() is unreachable on the
+    """A validate() that fails after its barriers are filled must free
+    them on the way out: release() is unreachable on the
     exception path, and a long-lived session would keep every failed run's
     localCheckpoint blocks."""
     from skyline_spark.plans.constraints import StaticRule
@@ -637,6 +653,34 @@ def test_pruned_resume_refuses_legacy_checkpoint(spark, tmp_path):
             pages, cfg, checkpoint_path=ckpt, run_id="r2",
             run_ts=RUN_TS_AUG11 + 60,
         )
+
+
+def test_legacy_checkpoint_remedy_enables_pruned_resume(spark, tmp_path):
+    """The refusal's remedy works: one unpruned run with
+    revalidate_after_days=0 re-validates every pair, and once its
+    checkpoint is appended a pruned resume runs and matches a full one."""
+    ckpt = str(tmp_path / "ckpt_legacy_remedy")
+    pages = synth_pages(spark, 4_000, 8, defects=False)
+    res1 = validate(pages, checkpoint_path=ckpt, run_id="r1", run_ts=RUN_TS_AUG11)
+    res1.checkpoint.drop("stat_values", "sample").write.mode("append").parquet(ckpt)
+    pruned = ValidationConfig(pruned_resume=True)
+    with pytest.raises(RuntimeError, match=r"revalidate_after_days=0"):
+        validate(pages, pruned, checkpoint_path=ckpt, run_id="r2",
+                 run_ts=RUN_TS_AUG11 + 60)
+    refresh = validate(
+        pages, ValidationConfig(revalidate_after_days=0), checkpoint_path=ckpt,
+        run_id="refresh", run_ts=RUN_TS_AUG11 + 60,
+    )
+    assert refresh.verdicts.count() == res1.verdicts.count()
+    append_checkpoint(refresh.checkpoint, ckpt)
+    refresh.release()
+    res_pruned = validate(pages, pruned, checkpoint_path=ckpt, run_id="r3",
+                          run_ts=RUN_TS_AUG11 + 120)
+    res_full = validate(pages, checkpoint_path=ckpt, run_id="r3",
+                        run_ts=RUN_TS_AUG11 + 120)
+    assert _canon_rows(res_pruned.verdicts) == _canon_rows(res_full.verdicts)
+    res_pruned.release()
+    res_full.release()
 
 
 def test_prune_predicate_reaches_the_scan(spark, tmp_path):
@@ -845,23 +889,23 @@ def _validate_module():
 
 def _resume_both(spark, monkeypatch, frame, ckpt):
     """A full rescan and a pruned resume of ``frame`` from ``ckpt``, whose
-    verdicts, violations and drift baselines (the (date, lang) pairs fed to
-    drift_verdicts) must agree. Returns the pruned result, the baseline
-    pairs and, per narrow_partition_keys call of the pruned run, the date
-    directories its input frame reads plus that frame's row count. The
-    directories come from ``input_file_name()`` — the files the scan opens
-    after partition pruning; ``inputFiles()`` lists the relation's whole
-    file index whatever the filter."""
+    verdicts, violations and drift baselines (the (date, lang, stat, value)
+    rows and the samples fed to drift_verdicts) must agree. Returns the
+    pruned result, the baseline pairs and, per narrow_partition_keys call
+    of the pruned run, the date directories its input frame reads plus that
+    frame's row count. The directories come from ``input_file_name()`` —
+    the files the scan opens after partition pruning; ``inputFiles()`` lists
+    the relation's whole file index whatever the filter."""
     plan = _validate_module()
     baselines = []
     real_drift = plan.drift_verdicts
 
-    def drift_spy(stats, *args, **kwargs):
-        baselines.append({
-            (r["partition_date"], r["lang"])
-            for r in stats.select("partition_date", "lang").distinct().collect()
-        })
-        return real_drift(stats, *args, **kwargs)
+    def drift_spy(stats, samples, *args, **kwargs):
+        baselines.append((
+            _canon_rows(stats.select("partition_date", "lang", "stat", "value")),
+            _canon_rows(samples.select("partition_date", "lang", "stat", "sample")),
+        ))
+        return real_drift(stats, samples, *args, **kwargs)
 
     monkeypatch.setattr(plan, "drift_verdicts", drift_spy)
     full = validate(frame, CFG_FULL, checkpoint_path=ckpt, run_id="rf",
@@ -884,9 +928,10 @@ def _resume_both(spark, monkeypatch, frame, ckpt):
     monkeypatch.undo()
     assert _canon_rows(pruned.verdicts) == _canon_rows(full.verdicts)
     assert _canon_rows(pruned.violations) == _canon_rows(full.violations)
-    assert baselines[0] == baselines[1]
+    assert baselines[0][0] == baselines[1][0]
+    assert baselines[0][1] == baselines[1][1]
     full.release()
-    return pruned, scans, baselines[1]
+    return pruned, scans, {(d, lang) for d, lang, _, _ in baselines[1][0]}
 
 
 def _recorded(res):
@@ -1035,6 +1080,50 @@ def test_file_sets_reuse_only_rows_of_the_current_file_set(
     )
     assert [dirs for dirs, _ in scans] == [{str(NEW_DAY)}]
     assert (day, "eng") in baselines and (day, "zho") not in baselines
+    pruned.release()
+
+
+def test_file_sets_reverted_date_is_revalidated(spark, tmp_path, monkeypatch):
+    """A date whose content goes A -> B -> A is revalidated on the revert:
+    its pairs' latest rows describe B, so a pruned resume must not read
+    them as the baselines of content A. Both paths feed drift A's values
+    and re-verdict the date."""
+    import os
+    import shutil
+
+    day = BASE + datetime.timedelta(days=2)
+    pages, ckpt = _seed_hive(spark, tmp_path)
+    a_pairs = {
+        (day, r["lang"]) for r in spark.read.parquet(pages)
+        .where(F.col("partition_date") == day).select("lang").distinct().collect()
+    }
+    (orig,) = _day_files(pages, day)
+    saved = str(tmp_path / "content_a.parquet")
+    shutil.copy2(orig, saved)
+    rewrite = str(tmp_path / "content_b")
+    spark.read.parquet(pages).where(F.col("partition_date") == day).drop(
+        "partition_date"
+    ).unionByName(
+        synth_pages(spark, 400, 1, base_date=str(day), defects=False)
+    ).coalesce(1).write.parquet(rewrite)
+    os.remove(orig)
+    (b_file,) = (f for f in os.listdir(rewrite) if f.endswith(".parquet"))
+    b_path = os.path.join(os.path.dirname(orig), b_file)
+    os.rename(os.path.join(rewrite, b_file), b_path)
+    second = validate(
+        spark.read.parquet(pages), CFG_PRUNED, checkpoint_path=ckpt,
+        run_id="r2", run_ts=RUN_TS_AUG11 + 3600,
+    )
+    assert {(r["partition_date"], r["lang"]) for r in second.verdicts.collect()} >= a_pairs
+    append_checkpoint(second.checkpoint, ckpt)
+    second.release()
+    os.remove(b_path)
+    shutil.copy2(saved, orig)
+    _append_new_day(spark, pages)
+    pruned, _, _ = _resume_both(spark, monkeypatch, spark.read.parquet(pages), ckpt)
+    judged = {(r["partition_date"], r["lang"]) for r in pruned.verdicts.collect()}
+    assert {k for k in judged if k[0] == day} == a_pairs
+    assert {d for d, _ in judged} == {day, NEW_DAY}
     pruned.release()
 
 
@@ -1304,7 +1393,7 @@ def test_run_metrics_match_written_verdicts_in_submit_order(
         (run_dir,) = os.listdir(scratch_dir)
         assert "checkpoint_in" in os.listdir(os.path.join(scratch_dir, run_dir))
     else:
-        assert len(barrier_rdds) == (10 if pruned else 9)
+        assert len(barrier_rdds) == (8 if pruned else 7)
         assert barrier_rdds <= live_rdds()
     res.release()
     assert not barrier_rdds & live_rdds()

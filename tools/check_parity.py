@@ -65,7 +65,9 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    con = duckdb.connect()
+    # one thread, as tests/test_catalog.py: a parallel double sum adds in
+    # no fixed order, so a value on a rounding boundary can flip
+    con = duckdb.connect(config={"threads": 1})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
