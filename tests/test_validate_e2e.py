@@ -112,6 +112,42 @@ def test_constraint_output_pinned(result, spark):
     assert (len(verdicts), _digest(verdicts)) == (81, "dd4eabe1c498eb2e")
 
 
+def test_stats_barrier_pinned(spark, monkeypatch):
+    """Every row of the "stats" barrier on the e2e fixture plus a NULL-lang
+    and a NULL-warc_ts pair (each with duplicated urls and spread lengths),
+    pinned by digest: the pair, fingerprint, stat_values, the stat_digests
+    bytes, the ks sample and dup_url_rows."""
+    storage, rows = _validate_module()._RunStorage, []
+    real = storage.barrier
+
+    def spy(self, df, name):
+        out = real(self, df, name)
+        if name == "stats":
+            rows.extend(out.collect())
+        return out
+
+    monkeypatch.setattr(storage, "barrier", spy)
+    day = datetime.datetime(2026, 8, 3, 12, 0, 0)
+    spread = lambda i: "t" * (i % 13) if i % 5 else None  # noqa: E731
+    pages = synth_pages(spark, N_ROWS, N_DAYS).unionByName(
+        _one_pair(spark, "nulllang", 40, day, None, text=spread, copies=3)
+    ).unionByName(
+        _one_pair(spark, "nullts", 40, None, "eng", text=spread, copies=2)
+    )
+    res = validate(pages, run_ts=RUN_TS)
+    res.release()
+    pinned = [
+        (str(r["partition_date"]), str(r["lang"]), r["fingerprint"],
+         sorted(r["stat_values"].items()), bytes(r["stat_digests"]),
+         r["sample"], r["dup_url_rows"])
+        for r in rows
+    ]
+    keys = {(d, lang) for d, lang, *_ in pinned}
+    assert len(keys) == len(pinned)
+    assert {(str(day.date()), "None"), ("None", "eng")} <= keys
+    assert (len(pinned), _digest(pinned)) == (83, "601d625108f44b8d")
+
+
 def test_bad_lang_day_fails_referential(result, verdict_map):
     assert verdict_map[(DD["lang"], "xx")]["status"] == "FAIL"
     v = result.violations.where(
