@@ -793,20 +793,22 @@ def checkpoint_digest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_stats,
         slim_pages,
         stat_digest_blobs,
+        stat_samples,
+        url_groups,
     )
 
     slim = slim_pages(_derived_pages(spark, sf_dir))
-    len_hist = length_histogram(slim)
-    blobs = stat_digest_blobs(partition_stats(slim, len_hist), len_hist).select(
+    groups = url_groups(slim)
+    len_hist = length_histogram(groups)
+    hists = stat_samples(groups, len_hist)
+    blobs = stat_digest_blobs(partition_stats(slim, hists)).select(
         "lang", "stat_digests"
     )
     # corpus-exact histogram per lang, carried into the merge kernel as two
     # bounded arrays (distinct text lengths ≤ a few hundred by construction)
     corpus = (
         len_hist.groupBy(F.col("lang"))
-        .agg(
-            F.sort_array(F.collect_list(F.struct("len", "cnt"))).alias("_h")
-        )
+        .agg(F.sort_array(F.flatten(F.collect_list("len_hist"))).alias("_h"))
         .select(
             "lang",
             F.transform("_h", lambda s: s["len"].cast("double")).alias("_lens"),

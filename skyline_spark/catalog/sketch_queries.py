@@ -189,9 +189,10 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within the envelope pinned by tests/test_tdigest.py:
 # |true_rank(est) − ceil(q·n)| ≤ td_rank_tol(n) = 2·ceil(2n/δ)+1.
 #
-# Scale shape: length_histogram is ONE whole-stage-codegen'd scan+agg whose
-# group count is bounded (partitions × langs × distinct lengths) at any table
-# size; the digest build is a grouped-map over those bounded groups (never
+# Scale shape: length_histogram (the one validate() reads) sums the
+# url_groups scan+agg into one len-sorted (len, cnt) array per
+# partition×lang, bounded by the distinct lengths at any table size; the
+# digest build is a grouped-map over those bounded groups (never
 # the raw pages); the corpus-exact arrays join back broadcast. The digests
 # themselves are what a 10^12-row run would persist in checkpoint lineage —
 # O(δ) floats per partition — and merging them replaces ever re-scanning
@@ -285,21 +286,18 @@ def _register_tdigest() -> None:
             "oracle pins the exact quantiles and asserts the verdicts",
     )
     def tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..plans.stats import length_histogram
+        from ..plans.stats import length_histogram, url_groups
         from .flagship_queries import _derived_pages
 
-        len_hist = length_histogram(_derived_pages(spark, sf_dir))
+        len_hist = length_histogram(url_groups(_derived_pages(spark, sf_dir)))
         part_digests = (
-            len_hist.groupBy("partition_date", "lang")
+            len_hist.select("partition_date", "lang", F.inline("len_hist"))
+            .groupBy("partition_date", "lang")
             .applyInPandas(_td_build_fn, _TD_PART_SCHEMA)
         )
         corpus = (
             len_hist.groupBy("lang")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("len"), F.col("cnt")))
-                ).alias("_h")
-            )
+            .agg(F.sort_array(F.flatten(F.collect_list("len_hist"))).alias("_h"))
             .select(
                 "lang",
                 F.transform("_h", lambda s: s["len"].cast("double")).alias("_lens"),

@@ -227,7 +227,9 @@ def unchanged_dates(latest: DataFrame, file_sets: dict | None) -> set:
             F.min(F.when(under, F.col("date_pairs"))).alias("lo"),
             F.max(F.when(under, F.col("date_pairs"))).alias("hi"),
         ]
-    rows = latest.groupBy("partition_date").agg(*aggs).collect()
+    # one partition of the checkpoint-sized frame: the group needs no
+    # shuffle, so the collect is one job
+    rows = latest.coalesce(1).groupBy("partition_date").agg(*aggs).collect()
     if sum(r["legacy"] for r in rows):
         raise RuntimeError(
             "pruned resume needs stat_values/sample in every pair's latest "

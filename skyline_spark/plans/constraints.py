@@ -18,6 +18,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from ..sources.table_format import literal_frame
 from .stats import PARTITION_COLS, pair_join
 
 __all__ = [
@@ -92,7 +93,8 @@ def schema_violations(pages: DataFrame, expected: T.StructType) -> DataFrame:
             and not (name == "partition_date" and actual[name] == "date")
         ):
             rows.append((name, actual[name], "<unexpected column>"))
-    return pages.sparkSession.createDataFrame(
+    return literal_frame(
+        pages.sparkSession,
         [(None, None, "schema", c, None, o, e, None) for c, o, e in rows],
         VIOLATION_SCHEMA,
     )

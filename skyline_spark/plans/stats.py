@@ -1,6 +1,7 @@
 """Per-partition column statistics — the relational heart of the engine.
 
-One columnar scan of the subject table produces, per (partition_date, lang):
+Two aggregates over the slim projection of the subject table produce, per
+(partition_date, lang):
 
 - one row in the checkpoint's own per-pair shape: the partition content
   ``fingerprint``, a ``stat_values`` map (row_count, null rates, text-length
@@ -14,9 +15,24 @@ One columnar scan of the subject table produces, per (partition_date, lang):
   (:func:`long_form`), whether they were just computed or read back from
   the checkpoint.
 
+The two passes: :func:`partition_stats`' wide per-pair aggregate (its url
+HLL hashes the url strings), and :func:`url_groups`, one row per (pair,
+url hash, sampling bucket, order hash, length) with its row count. The
+length histogram, the duplicate-url count and the ks sample are all
+mergeable summaries of those groups (:func:`length_histogram`,
+:func:`duplicate_url_rows`, :func:`stat_samples`), so no third read of the
+rows is needed.
+
 Scale notes (10^12 rows):
-- everything is a single ``groupBy(partition_cols).agg`` — map-side partial
+- the wide pass is one ``groupBy(partition_cols).agg`` — map-side partial
   aggregation, one shuffle of pre-aggregated data, no collect;
+- the url-group pass shuffles each row's pair, three url hashes and length
+  once; everything derived from it is bounded per pair (distinct lengths,
+  ≤ 2·sample_cap sampled groups) except the per-url-hash duplicate count,
+  which runs in the same stage;
+- the histogram is one len-sorted ``(len, cnt)`` array per pair, which
+  the p50/p95, the log-bin digest and the sampling keep-rate fold with
+  higher-order functions — no window, no re-bin shuffle;
 - the sample is hash-selected (``xxhash64(url) % K < r``), NOT rand(), so
   retries/speculative tasks produce identical rows; the rate is derived
   from the length histogram's per-partition totals so each partition lands
@@ -50,6 +66,7 @@ __all__ = [
     "length_digest",
     "long_form",
     "duplicate_url_rows",
+    "url_groups",
     "pair_join",
     "DRIFT_STATS",
     "PARTITION_COLS",
@@ -209,17 +226,151 @@ def narrow_partition_keys(pages: DataFrame, native_col: str | None = None) -> Da
     return narrow.groupBy(*PARTITION_COLS).agg(*aggs)
 
 
-def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
+def _pair_key(null_matches: bool = True) -> dict:
+    """The pair key as four columns: each pair column's value with NULL
+    filled in, and its NULL flag (a bare filler would merge a real ``''``
+    lang with NULL). Without ``null_matches`` the flag of a NULL value is
+    NULL itself, so a NULL-keyed pair equals no pair, as in a plain
+    equi-join on the pair columns."""
+    key = {}
+    for name, col, filler in (("date", "partition_date", _EPOCH), ("lang", "lang", "")):
+        c = F.col(col)
+        key[f"_{name}_null"] = (
+            c.isNull() if null_matches else F.when(c.isNotNull(), F.lit(False))
+        )
+        key[f"_{name}"] = F.coalesce(c, F.lit(filler))
+    return key
+
+
+def _by_pair(df: DataFrame):
+    """``df`` grouped by its pair's :func:`_pair_key` columns."""
+    key = _pair_key()
+    return df.withColumns(key).groupBy(*key)
+
+
+def _with_pair_rows(
+    rows: DataFrame, per_pair: DataFrame, null_pairs_match: bool = False
+) -> DataFrame:
+    """``rows`` plus the other columns of ``per_pair`` (built from
+    :func:`url_groups`, aggregated :func:`_by_pair`), left-joined on the
+    :func:`_pair_key` columns with ``per_pair`` broadcast; a NULL-keyed
+    pair of ``rows`` finds its row only if ``null_pairs_match``.
+
+    ``per_pair`` is grouped by the join keys, so Catalyst knows it unique on
+    them and sizes the join by ``rows``, not as a product (which a barrier
+    would keep). No key column is a bare pair column, so the optimizer
+    carries nothing it knows of ``rows``' pair columns (the pruned scan's
+    date list, which a barrier keeps) across the join, and infers no IS
+    NOT NULL on ``per_pair``'s side: either would become a filter below the
+    url-group aggregate, and that branch would scan ``pages`` again instead
+    of reusing the aggregate's exchange."""
+    key = list(_pair_key())
+    return (
+        rows.withColumns(_pair_key(null_pairs_match))
+        .join(F.broadcast(per_pair), key, "left")
+        .drop(*key)
+    )
+
+
+#: hash-space denominator of the sampling keep-rate
+SAMPLE_DENOM = 1_000_000
+
+
+def url_groups(pages: DataFrame) -> DataFrame:
+    """Pass 2 of the stats barrier: the rows of ``pages`` counted per
+    (partition, lang, ``url_hash``, ``sample_bucket``, ``order_key``,
+    ``text_len``) as ``cnt``. The three url hashes are the uniqueness
+    check's ``xxhash64(url)``, the sampling bucket and the sample's sort
+    key. Rows that share a group agree on everything the length histogram,
+    the duplicate count and the ks sample read, so all three come from
+    this one aggregate exactly (:func:`length_histogram`,
+    :func:`duplicate_url_rows`, :func:`stat_samples`).
+
+    The rows are shuffled by (partition, lang, url_hash) before they are
+    counted, so the per-url-hash count of :func:`duplicate_url_rows` runs
+    in the same stage, with no second shuffle of a url-sized frame. That
+    forgoes a map-side combine, which would only merge rows sharing a url
+    within one task."""
+    pages = slim_pages(pages)
+    rows = pages.select(
+        *PARTITION_COLS,
+        F.xxhash64(F.col("url").cast("string")).alias("url_hash"),
+        F.pmod(F.xxhash64("url", F.lit("sample")), F.lit(SAMPLE_DENOM))
+        .alias("sample_bucket"),
+        F.xxhash64("url", F.lit("order")).alias("order_key"),
+        "text_len",
+    )
+    return (
+        rows.repartition(*PARTITION_COLS, "url_hash")
+        .groupBy(*rows.columns)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def length_histogram(groups: DataFrame) -> DataFrame:
+    """``(partition_date, lang, len_hist)``: per pair with a non-null
+    text, its length histogram as ONE len-sorted array of ``(len, cnt)``,
+    summed from :func:`url_groups`, aggregated :func:`_by_pair` (whose key
+    columns it keeps). Its readers fold the array with
+    higher-order functions, per pair: the exact p50/p95
+    (:func:`partition_stats`), the checkpoint digest
+    (:func:`stat_digest_blobs`) and the sampling keep-rate's non-null total
+    (:func:`stat_samples`). text_len is a bounded integer, so an array
+    holds at most the pair's distinct lengths at any table size."""
+    # NULL lengths drop out of the collect and the pairs left empty after
+    # it, not in a filter on text_len: the optimizer pushes a filter on a
+    # group key below the url-group aggregate, and a filtered copy of it
+    # would scan ``pages`` again instead of reusing its exchange
+    length = F.col("len")
+    per_len = groups.groupBy(*PARTITION_COLS, F.col("text_len").alias("len")).agg(
+        F.sum("cnt").alias("cnt")
+    )
+    hists = _by_pair(per_len).agg(
+        F.sort_array(
+            F.collect_list(F.when(length.isNotNull(), F.struct(length, "cnt")))
+        ).alias("len_hist")
+    )
+    return hists.where(F.size("len_hist") > 0).withColumns({
+        "partition_date": F.when(~F.col("_date_null"), F.col("_date")),
+        "lang": F.when(~F.col("_lang_null"), F.col("_lang")),
+    })
+
+
+def _hist_total(hist: F.Column) -> F.Column:
+    """The number of lengths a ``len_hist`` array counts."""
+    return F.aggregate(hist, F.lit(0).cast("long"), lambda acc, e: acc + e["cnt"])
+
+
+def _hist_quantile(hist: F.Column, total: F.Column, q: float) -> F.Column:
+    """Exact type-1 (inverted-CDF) quantile of a ``len_hist`` array: the
+    smallest length whose cumulative count reaches ceil(q * total)."""
+    target = F.ceil(total * q)
+
+    def step(acc, e):
+        cum = acc["cum"] + e["cnt"]
+        return F.when(acc["len"].isNotNull(), acc).otherwise(
+            F.struct(cum.alias("cum"), F.when(cum >= target, e["len"]).alias("len"))
+        )
+
+    start = F.struct(
+        F.lit(0).cast("long").alias("cum"), F.lit(None).cast("int").alias("len")
+    )
+    return F.aggregate(hist, start, step, lambda acc: acc["len"].cast("double"))
+
+
+def partition_stats(pages: DataFrame, hists: DataFrame) -> DataFrame:
     """One row per (partition, lang): the content ``fingerprint`` and the
-    ``stat_values`` map of the pair's stats, from one codegen'd agg pass
-    plus the exact length percentiles read off ``len_hist``.
+    ``stat_values`` map of the pair's stats — pass 1 of the stats barrier,
+    one codegen'd agg over ``pages`` — plus the ``len_hist`` and ``sample``
+    of ``hists`` (:func:`stat_samples`), joined broadcast. A NULL-keyed
+    pair gets neither, nor exact percentiles.
 
     The pass: all algebraic/sketch aggregates (count, null rates, avg, HLLs,
     fingerprint) — one whole-stage-codegen HashAggregate, map-side partials,
-    one shuffle of pre-aggregated rows.
+    one shuffle of pre-aggregated rows. ``approx_count_distinct(url)``
+    hashes the url strings, so this pass cannot read :func:`url_groups`.
 
-    EXACT text-length percentiles come from ``len_hist``
-    (:func:`length_histogram` of the same pages) + a window cumsum.
+    EXACT text-length percentiles are folded from the joined ``len_hist``.
     ``percentile_approx`` is an ObjectHashAggregate (row-at-a-time, no
     codegen) and measured ~30x slower than the histogram at 2M rows.
     Exact percentiles also make the stat series noise-free for drift.
@@ -245,42 +396,39 @@ def partition_stats(pages: DataFrame, len_hist: DataFrame) -> DataFrame:
         F.col("url_approx_distinct") / F.greatest(F.col("row_count"), F.lit(1)),
     )
 
-    pct = _exact_length_percentiles(len_hist)
-    wide = wide.join(pct, PARTITION_COLS, "left")
+    hist = F.col("len_hist")
+    wide = _with_pair_rows(wide, hists).withColumn("_total", _hist_total(hist))
+    wide = wide.withColumns({
+        "text_len_p50": _hist_quantile(hist, F.col("_total"), 0.5),
+        "text_len_p95": _hist_quantile(hist, F.col("_total"), 0.95),
+    })
 
     stat_cols = DRIFT_STATS + ["null_rate_html", "text_len_distinct"]
     stat_values = F.create_map(
         *(c for s in stat_cols for c in (F.lit(s), F.col(s).cast("double")))
     )
-    return wide.select(*PARTITION_COLS, "fingerprint", stat_values.alias("stat_values"))
+    return wide.select(
+        *PARTITION_COLS, "fingerprint", stat_values.alias("stat_values"),
+        "len_hist", "sample",
+    )
 
 
-def duplicate_url_rows(pairs: DataFrame, pages: DataFrame) -> DataFrame:
+def duplicate_url_rows(pairs: DataFrame, groups: DataFrame) -> DataFrame:
     """``pairs`` (one row per pair) plus phase 1 of the uniqueness check:
-    the pair's rows of ``pages`` whose ``xxhash64(url)`` another row of the
-    pair shares, as ``dup_url_rows``. It shuffles 8-byte hashes, not url
-    strings. A 64-bit collision can only over-count, so phase 2
-    (plans.constraints ``uniqueness_violations``) decides.
-
-    Grouped and joined on each pair column's NULL flag plus its value with
-    NULL filled in, so a NULL date or lang matches itself and no real value
-    (a bare filler would merge a real ``''`` lang with NULL), in a plain
-    equi-join: Catalyst sizes a null-safe one as a product."""
-    key = {
-        "_date_null": F.col("partition_date").isNull(),
-        "_date": F.coalesce(F.col("partition_date"), F.lit(_EPOCH)),
-        "_lang_null": F.col("lang").isNull(),
-        "_lang": F.coalesce(F.col("lang"), F.lit("")),
-    }
-    per_hash = pages.groupBy(
-        *(c.alias(n) for n, c in key.items()),
-        F.xxhash64(F.col("url").cast("string")).alias("_kh"),
-    ).count()
-    dups = per_hash.groupBy(*key).agg(
+    the pair's rows whose ``xxhash64(url)`` another row of the pair shares,
+    as ``dup_url_rows``, summed from :func:`url_groups` per (pair, url
+    hash) in the stage that counts the groups. A 64-bit collision can only
+    over-count, so phase 2 (plans.constraints ``uniqueness_violations``)
+    decides. A NULL date or lang matches itself and no real value, so a
+    NULL-keyed pair gets its count too."""
+    per_hash = groups.groupBy(*PARTITION_COLS, "url_hash").agg(
+        F.sum("cnt").alias("count")
+    )
+    dups = _by_pair(per_hash).agg(
         F.sum(F.when(F.col("count") > 1, F.col("count")).otherwise(0))
         .alias("dup_url_rows")
     )
-    return pairs.withColumns(key).join(dups, list(key), "left").drop(*key)
+    return _with_pair_rows(pairs, dups, null_pairs_match=True)
 
 
 def long_form(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -301,29 +449,6 @@ def long_form(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return stats_long, samples
 
 
-def _exact_length_percentiles(hist: DataFrame) -> DataFrame:
-    """Exact p50/p95 of text_len from its (partition, lang, len) histogram.
-
-    Inverted-CDF (type-1) quantile: smallest value whose cumulative count
-    reaches ceil(q * total). One tiny window over the histogram rows.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*PARTITION_COLS).orderBy("len")
-    wp = Window.partitionBy(*PARTITION_COLS)
-    cum = hist.withColumn("cum", F.sum("cnt").over(w)).withColumn(
-        "total", F.sum("cnt").over(wp)
-    )
-    return cum.groupBy(*PARTITION_COLS).agg(
-        F.min(
-            F.when(F.col("cum") >= F.ceil(F.col("total") * 0.5), F.col("len"))
-        ).cast("double").alias("text_len_p50"),
-        F.min(
-            F.when(F.col("cum") >= F.ceil(F.col("total") * 0.95), F.col("len"))
-        ).cast("double").alias("text_len_p95"),
-    )
-
-
 # log-spaced bins per octave for the mergeable quantile digest: boundaries
 # are GLOBAL constants (bin b covers [2^(b/K)−1, 2^((b+1)/K)−1)), so merging
 # digests across partitions/snapshots is exact count addition; quantile
@@ -331,51 +456,53 @@ def _exact_length_percentiles(hist: DataFrame) -> DataFrame:
 DIGEST_BINS_PER_OCTAVE = 8
 
 
-def length_histogram(pages: DataFrame) -> DataFrame:
-    """Per-(partition, lang, text_len) counts of the non-null lengths — the
-    ONE count of the page lengths. validate() plans it once, inside the
-    stats barrier's plan, where AQE reuses its exchange across the exact
-    p50/p95 (:func:`partition_stats`), the sampling
-    keep-rates (:func:`stat_samples`: a pair's total is its non-null text
-    count) and the checkpoint digest (:func:`stat_digest_blobs`). text_len
-    is a bounded integer, so the group count is bounded by partitions x
-    langs x distinct lengths at any table size and the agg stays
-    whole-stage-codegen'd."""
-    pages = slim_pages(pages)
-    return (
-        pages.where(F.col("text_len").isNotNull())
-        .groupBy(*PARTITION_COLS, F.col("text_len").alias("len"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+def _digest_expr(hist: F.Column) -> F.Column:
+    """A ``len_hist`` array re-binned into the log bins, by one fold: the
+    array is sorted by length, so a bin's lengths are adjacent and the fold
+    only ever adds to its last bin."""
+
+    def bin_of(e):
+        return (
+            F.floor(F.log2(e["len"] + F.lit(1.0)) * DIGEST_BINS_PER_OCTAVE)
+            .cast("int")
+        )
+
+    def closed(acc):
+        # the finished bins plus the open one
+        return F.concat(acc["done"], F.array(F.struct(acc["bin"], acc["cnt"])))
+
+    def step(acc, e):
+        same = F.struct(acc["done"], acc["bin"], (acc["cnt"] + e["cnt"]).alias("cnt"))
+        nxt = F.struct(
+            F.when(acc["bin"].isNull(), acc["done"]).otherwise(closed(acc)).alias("done"),
+            bin_of(e).alias("bin"),
+            e["cnt"].alias("cnt"),
+        )
+        return F.when(acc["bin"] == bin_of(e), same).otherwise(nxt)
+
+    start = F.struct(
+        F.array().cast("array<struct<bin:int,cnt:bigint>>").alias("done"),
+        F.lit(None).cast("int").alias("bin"),
+        F.lit(0).cast("long").alias("cnt"),
     )
+    return F.aggregate(hist, start, step, lambda acc: F.map_from_entries(closed(acc)))
 
 
-def length_digest(hist: DataFrame) -> DataFrame:
-    """Mergeable per-(partition, lang) quantile digest of text_len, re-binned
-    from :func:`length_histogram`'s tiny pre-aggregated counts.
+def length_digest(len_hist: DataFrame) -> DataFrame:
+    """Mergeable per-(partition, lang) quantile digest of text_len,
+    ``len_digest``, re-binned from the :func:`length_histogram` arrays with
+    no shuffle.
 
     north_star: the checkpoint carries "stat digests (mergeable sketches)".
     A fixed-boundary log histogram is the simplest digest with the t-digest/
     KLL merge property (merge = add counts — no interpolation, no ordering
-    concerns), is fully codegen'd (no UDF), and its size is bounded by
+    concerns), needs no UDF, and its size is bounded by
     K·log2(max_len) entries regardless of row count. Quantiles of any UNION
     of partitions come from the merged counts (operators/digest.py).
     """
-    b = (
-        F.floor(F.log2(F.col("len") + F.lit(1.0)) * DIGEST_BINS_PER_OCTAVE)
-        .cast("int")
+    return len_hist.select(
+        *PARTITION_COLS, _digest_expr(F.col("len_hist")).alias("len_digest")
     )
-    binned = hist.groupBy(*PARTITION_COLS, b.alias("bin")).agg(
-        F.sum("cnt").alias("cnt")
-    )
-    return binned.groupBy(*PARTITION_COLS).agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("bin", "cnt")))
-        ).alias("len_digest")
-    )
-
-
-#: hash-space denominator of the sampling keep-rate
-SAMPLE_DENOM = 1_000_000
 
 
 def _keep_rate_expr(count_col, sample_cap: int):
@@ -398,65 +525,82 @@ def _keep_rate_expr(count_col, sample_cap: int):
 
 
 def stat_samples(
-    pages: DataFrame, len_hist: DataFrame, sample_cap: int = 512
+    groups: DataFrame, len_hist: DataFrame, sample_cap: int = 512
 ) -> DataFrame:
-    """Deterministic ≤ sample_cap text-length sample per (partition, lang):
-    ``(partition_date, lang, sample)``, one row per pair with non-null text.
+    """One row per pair with a non-null text, aggregated :func:`_by_pair`:
+    its ``len_hist`` and ``sample``, a deterministic ≤ sample_cap
+    text-length sample of the pair, NULL if nothing was sampled.
 
-    The per-partition keep-rate comes from ``len_hist``'s totals (the
-    non-null text count of each pair, :func:`length_histogram`); then one
-    hash-filtered scan + bounded collect. The joined rate table is tiny
-    (one row per partition) → broadcast join, no extra shuffle of page data.
+    The per-pair keep-rate comes from ``len_hist``'s totals (the non-null
+    text count of each pair), joined broadcast; the :func:`url_groups` rows
+    whose sampling bucket falls under it are collected, each group's length
+    repeated ``cnt`` times (at most sample_cap), sorted by (order hash,
+    length) and cut at sample_cap — the multiset a hash-filtered scan of
+    the rows would collect. The histogram rows ride the same aggregate, so
+    the pair's histogram and sample reach :func:`partition_stats` in one
+    join.
     """
-    pages = slim_pages(pages).where(~F.col("text_null"))
-    denom = SAMPLE_DENOM
-    rates = len_hist.groupBy(*PARTITION_COLS).agg(
-        _keep_rate_expr(F.sum("cnt"), sample_cap).alias("keep_below")
+    key = list(_pair_key())
+    rates = len_hist.select(
+        *key,
+        _keep_rate_expr(_hist_total(F.col("len_hist")), sample_cap).alias("keep_below"),
     )
-    return (
-        pages.join(F.broadcast(rates), PARTITION_COLS)
-        .where(F.pmod(F.xxhash64("url", F.lit("sample")), F.lit(denom)) < F.col("keep_below"))
-        .groupBy(*PARTITION_COLS)
-        .agg(
-            # collect_list order is nondeterministic across shuffles; sorting
-            # by a per-row hash fixes BOTH determinism and a pseudo-random
-            # arrival order for the ADF stationarity gate inside ks_test
-            F.transform(
-                F.slice(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.xxhash64("url", F.lit("order")).alias("k"),
-                                F.col("text_len").cast("double").alias("v"),
-                            )
-                        )
-                    ),
-                    1,
-                    sample_cap,
-                ),
-                lambda s: s["v"],
-            ).alias("sample")
+    # a NULL length fails the keep test above the join, not a filter on
+    # text_len, which would be pushed below the url-group aggregate
+    kept = F.when(F.col("text_len").isNotNull(), F.col("sample_bucket"))
+    sampled = (
+        groups.withColumns(_pair_key())
+        .join(F.broadcast(rates), key)
+        .where(kept < F.col("keep_below"))
+        .select(
+            *PARTITION_COLS,
+            F.struct(
+                F.col("order_key").alias("k"),
+                F.col("text_len").cast("double").alias("v"),
+                F.least("cnt", F.lit(sample_cap)).cast("int").alias("n"),
+            ).alias("_s"),
         )
     )
+    # collect_list order is nondeterministic across shuffles; sorting by a
+    # per-url hash fixes BOTH determinism and a pseudo-random arrival order
+    # for the ADF stationarity gate inside ks_test
+    sample = F.slice(
+        F.flatten(
+            F.transform(
+                F.sort_array(F.collect_list("_s")),
+                lambda s: F.array_repeat(s["v"], s["n"]),
+            )
+        ),
+        1,
+        sample_cap,
+    )
+    return _by_pair(len_hist.unionByName(sampled, allowMissingColumns=True)).agg(
+        F.max("len_hist").alias("len_hist"),
+        F.when(F.count("_s") > 0, sample).alias("sample"),
+    )
 
 
-def stat_digest_blobs(stat_rows: DataFrame, len_hist: DataFrame) -> DataFrame:
-    """``stat_rows`` (one row per pair with ``stat_values``, as
-    :func:`partition_stats` returns) plus the checkpoint blob column
-    ``stat_digests``: ``{"stats": stat_values, "len_digest": log-histogram}``
-    as one JSON binary.
+def stat_digest_blobs(stat_rows: DataFrame) -> DataFrame:
+    """``stat_rows`` (one row per pair with ``stat_values`` and
+    ``len_hist``, as :func:`partition_stats` returns) with its
+    ``len_hist`` replaced by the checkpoint blob column ``stat_digests``:
+    ``{"stats": stat_values, "len_digest": log-histogram}`` as one JSON
+    binary.
 
     The north-star "stat digests (mergeable sketches)" column, one digest
-    per pair: the log-histogram re-binned from ``len_hist``. Its bin
+    per pair, re-binned from the histogram (:func:`length_digest`). Its bin
     boundaries are global constants, so digests from any set of checkpoint
     rows merge by count addition with a bounded relative VALUE error
     (operators/digest.py). Factored out of validate() so the round-trip
     query (catalog/flagship_queries.py ``checkpoint_digest_quantiles``)
     exercises the production assembly.
     """
-    return stat_rows.join(length_digest(len_hist), PARTITION_COLS, "left").select(
-        *stat_rows.columns,
-        F.to_json(
-            F.struct(F.col("stat_values").alias("stats"), F.col("len_digest"))
-        ).cast("binary").alias("stat_digests"),
+    blob = F.to_json(
+        F.struct(
+            F.col("stat_values").alias("stats"),
+            _digest_expr(F.col("len_hist")).alias("len_digest"),
+        )
+    ).cast("binary")
+    return stat_rows.select(
+        *(blob.alias("stat_digests") if c == "len_hist" else c for c in stat_rows.columns)
     )

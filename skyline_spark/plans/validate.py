@@ -70,6 +70,7 @@ from .stats import (
     slim_pages,
     stat_digest_blobs,
     stat_samples,
+    url_groups,
 )
 
 __all__ = ["ValidationResult", "validate", "VERDICT_SCHEMA", "DEFAULT_STATIC_RULES"]
@@ -522,22 +523,22 @@ def _validate_body(
     # shape — fingerprint, stat_values, stat_digests, sample — plus the
     # uniqueness check's phase-1 count, dup_url_rows. Every consumer
     # below reads columns of it; the long stats/samples frames come from
-    # long_form's one explode. The ONE (partition, lang, text_len) count
-    # feeds the p50/p95, the sampling rates and the digest: AQE reuses its
-    # exchange across those branches of this one plan. Its joins stay plain
-    # equi-joins on a side grouped by the keys: Catalyst sizes a null-safe
-    # join as the product, the barrier keeps that estimate, and a product
-    # turns later joins over it into shuffles and plants runtime bloom
-    # filters (stat_samples has no null-keyed pair anyway)
-    len_hist = length_histogram(slim)
-    pair_stats = store.barrier(
-        duplicate_url_rows(
-            stat_digest_blobs(partition_stats(slim, len_hist), len_hist)
-            .join(stat_samples(slim, len_hist, cfg.sample_cap), PARTITION_COLS, "left"),
-            slim,
-        ),
-        "stats",
-    )
+    # long_form's one explode. Its plan reads slim TWICE: the wide per-pair
+    # aggregate, and the url-group aggregate (one row per pair, url hash,
+    # sampling bucket, order hash and length), whose exchange AQE reuses
+    # for the length histogram, the sample and the duplicate count. The
+    # histogram is one len-sorted array per pair; the p50/p95, the digest
+    # and the keep-rates fold it. Per-pair frames join on non-nullable key
+    # columns (plans.stats _with_pair_rows): a bare pair-column join would
+    # push its inferred filters into one branch's copy of the url-group
+    # aggregate, which would then scan slim again, and a null-safe one is
+    # sized as a product, which the barrier keeps, turning later joins over
+    # it into shuffles and planting runtime bloom filters
+    groups = url_groups(slim)
+    len_hist = length_histogram(groups)
+    hists = stat_samples(groups, len_hist, cfg.sample_cap)
+    pairs = stat_digest_blobs(partition_stats(slim, hists))
+    pair_stats = store.barrier(duplicate_url_rows(pairs, groups), "stats")
     stats, samples = long_form(pair_stats)
     # ---- stage 2: resume — which (partition, lang) pairs need work? ------
     # In pruned mode the narrow barrier carries the flags; otherwise derive

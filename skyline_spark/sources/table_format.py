@@ -41,7 +41,27 @@ __all__ = [
     "IcebergFormat",
     "DEFAULT_FORMAT",
     "conform_to_schema",
+    "literal_frame",
 ]
+
+
+def literal_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order, possibly none) as a
+    frame whose schema is exactly ``schema``, nullability included, planned
+    in the JVM: one row of ``range`` exploded into the literal rows.
+    ``createDataFrame`` on local rows makes a Python RDD instead, and every
+    read of it starts Python worker tasks."""
+    structs = [
+        F.struct(*(
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(row, schema.fields)
+        ))
+        for row in rows
+    ]
+    rows_col = F.array(*structs).cast(T.ArrayType(schema, containsNull=False))
+    return spark.range(0, 1, 1, 1).select(F.inline(rows_col))
 
 
 def conform_to_schema(
@@ -133,7 +153,7 @@ class ParquetFormat(TableFormat):
             return spark.read.schema(schema).parquet(location)
         except AnalysisException as e:
             if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return spark.createDataFrame([], schema)
+                return literal_frame(spark, [], schema)
             raise
 
     def append(self, df: DataFrame, location: str) -> None:
@@ -211,7 +231,7 @@ class IcebergFormat(TableFormat):
                 "TABLE_OR_VIEW_NOT_FOUND" in msg
                 or "Table or view not found" in msg
             ):
-                return spark.createDataFrame([], schema)
+                return literal_frame(spark, [], schema)
             raise
         # conform to the contract schema like the parquet impl does
         # (spark.read.schema() is not honored for catalog tables)

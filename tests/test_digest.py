@@ -12,7 +12,7 @@ from skyline_spark.operators.digest import (
     merge_digests,
     parse_checkpoint_digest,
 )
-from skyline_spark.plans.stats import length_digest, length_histogram
+from skyline_spark.plans.stats import length_digest, length_histogram, url_groups
 from skyline_spark.plans.validate import validate
 from skyline_spark.sources.synth import synth_pages
 
@@ -22,7 +22,7 @@ REL_ERR = 2 ** (1 / 8) - 1  # bound from DIGEST_BINS_PER_OCTAVE = 8
 def _digest_map(pages):
     return {
         (r["partition_date"], r["lang"]): dict(r["len_digest"])
-        for r in length_digest(length_histogram(pages)).collect()
+        for r in length_digest(length_histogram(url_groups(pages))).collect()
     }
 
 

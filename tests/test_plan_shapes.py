@@ -942,3 +942,43 @@ def test_pruned_resume_plans_have_no_limit(pruned_resume_plans):
     for p in pruned_resume_plans:
         for node in ("LocalLimit", "GlobalLimit", "CollectLimit"):
             assert node not in p, p
+
+
+def test_pruned_resume_stats_barrier_scans_slim_twice(pruned_resume_plans):
+    # the stats barrier's plan (the one with the url HLL; its only leaf is
+    # the slim barrier) reads slim once for the wide per-pair aggregate and
+    # once for the url-group aggregate, whose exchange the length
+    # histogram, the sample and the duplicate count reuse
+    import re
+
+    stats = [
+        p.split("== Initial Plan ==")[0]
+        for p in pruned_resume_plans
+        if "approx_count_distinct" in p
+    ]
+    assert stats
+    for p in stats:
+        assert 1 <= len(re.findall(r"Scan ExistingRDD \(\d+\)", p)) <= 2, p
+
+
+def test_schema_frames_have_no_python_rdd(spark, tmp_path):
+    # the schema-violation rows and a missing table's empty frame are built
+    # in the JVM: a local-rows frame is a Python RDD, whose every read
+    # starts Python worker tasks
+    from skyline_spark.plans.checkpoint import CHECKPOINT_SCHEMA
+    from skyline_spark.plans.constraints import VIOLATION_SCHEMA, schema_violations
+    from skyline_spark.sources.synth import PAGE_SCHEMA
+    from skyline_spark.sources.table_format import DEFAULT_FORMAT
+
+    pages = spark.range(3).selectExpr("'u' AS url", "id AS extra")
+    frames = [
+        (schema_violations(pages, PAGE_SCHEMA), VIOLATION_SCHEMA, 5),
+        (DEFAULT_FORMAT.read_or_empty(spark, str(tmp_path / "none"), CHECKPOINT_SCHEMA),
+         CHECKPOINT_SCHEMA, 0),
+    ]
+    for df, schema, n in frames:
+        assert df.schema == schema
+        assert df.count() == n
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+        assert "LogicalRDD" not in kinds, kinds
